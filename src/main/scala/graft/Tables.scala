@@ -143,16 +143,21 @@ private[graft] object TsEncoding {
 
   /** Exact (min, max) epoch-nanos bounds of `ts` from EVERY file's
     * footer statistics under `path`. Scale handling mirrors
-    * [[Tables.load]]: TIMESTAMP(MICROS/NANOS) annotations fix the unit
-    * from the schema; a plain int64 infers it from the min sample via
-    * [[nanosScale]] (the same rule load applies). Strict: any file or
-    * row group without a non-null int64 statistic for `ts` yields None
-    * rather than a partial bound. */
+    * [[Tables.load]], resolved PER FILE: a TIMESTAMP(NANOS/MICROS)
+    * annotation fixes the file's unit; a plain int64 infers it from the
+    * file's min via [[nanosScale]] (the rule load applies). Strict: None
+    * — so the caller runs the aggregate fallback, which is always
+    * consistent with load — when any file or row group lacks a non-null
+    * int64 statistic for `ts`, when files disagree on the annotation or
+    * the unit, or when a file is TIMESTAMP(MILLIS) (load reads every
+    * timestamp annotation as micros, so footer and data would differ by
+    * 1000×). Never a partial bound. */
   def footerTsBoundsNanos(s: SparkSession,
       path: String): Option[(Long, Long)] = {
     import org.apache.hadoop.fs.Path
     import scala.jdk.CollectionConverters._
     import org.apache.parquet.schema.LogicalTypeAnnotation
+    import LogicalTypeAnnotation.TimeUnit
     val conf = s.sessionState.newHadoopConf()
     val p = new Path(path)
     val fs = p.getFileSystem(conf)
@@ -162,32 +167,27 @@ private[graft] object TsEncoding {
         .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
         .map(_.getPath)
     if (files.isEmpty) return None
-    var lo = Long.MaxValue
-    var hi = Long.MinValue
-    var scale: Option[Long] = None
-    files.foreach { f =>
+    // per file: (annotated scale, None = raw int64; raw (min, max))
+    val perFile = files.map { f =>
       val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
         org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf))
       try {
         val footer = reader.getFooter
-        if (scale.isEmpty) {
-          val schema = footer.getFileMetaData.getSchema
-          if (!schema.containsField("ts")) return None
+        val schema = footer.getFileMetaData.getSchema
+        if (!schema.containsField("ts")) return None
+        val annotated: Option[Long] =
           schema.getType(Seq("ts"): _*).getLogicalTypeAnnotation match {
             case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
               t.getUnit match {
-                case LogicalTypeAnnotation.TimeUnit.NANOS =>
-                  scale = Some(1L)
-                case LogicalTypeAnnotation.TimeUnit.MICROS =>
-                  scale = Some(1000L)
-                case LogicalTypeAnnotation.TimeUnit.MILLIS =>
-                  scale = Some(1000000L)
-                case _ => return None
+                case TimeUnit.NANOS => Some(1L)
+                case TimeUnit.MICROS => Some(1000L)
+                case _ => return None // MILLIS: load would read it as micros
               }
-            case null => () // raw int64: infer from the min sample below
+            case null => None // raw int64: infer from the file's min below
             case _ => return None
           }
-        }
+        var lo = Long.MaxValue
+        var hi = Long.MinValue
         footer.getBlocks.asScala.foreach { block =>
           val chunks = block.getColumns.asScala
             .filter(_.getPath.toDotString == "ts")
@@ -197,19 +197,22 @@ private[graft] object TsEncoding {
             if (st == null || st.isEmpty || !st.hasNonNullValue) return None
             (st.genericGetMin, st.genericGetMax) match {
               case (mn: java.lang.Long, mx: java.lang.Long) =>
-                if (mn.longValue() < lo) lo = mn.longValue()
-                if (mx.longValue() > hi) hi = mx.longValue()
+                lo = Math.min(lo, mn.longValue())
+                hi = Math.max(hi, mx.longValue())
               case _ => return None
             }
           }
         }
+        (annotated, lo, hi)
       } finally reader.close()
     }
-    if (lo > hi) None
-    else {
-      val k = scale.getOrElse(nanosScale(lo))
-      Some((lo * k, hi * k))
-    }
+    if (perFile.map(_._1).distinct.size != 1) return None
+    val withRows = perFile.filter { case (_, lo, hi) => lo <= hi }
+    val scales = withRows.map { case (a, lo, _) =>
+      a.getOrElse(nanosScale(lo)) }.distinct
+    if (scales.size != 1) None
+    else Some((withRows.map(_._2).min * scales.head,
+      withRows.map(_._3).max * scales.head))
   }
 
   /** Multiplier to epoch-NANOS, inferred from a sample epoch value's

@@ -23,9 +23,9 @@ import graft.functions.TimeRange
   *    (QueryApi.scala:236-270, QueryEngineV2.scala:545-552), terminated
   *    by `{"type":"done"}` (SSEMessage.scala:30). When segment spans
   *    are registered, delivery is INCREMENTAL: sealed replay groups
-  *    stream group-at-a-time through
-  *    [[QueryEngine.evaluateIncremental]], flushed per batch — the SSE
-  *    half of O4/T6.
+  *    stream in replay order through [[QueryEngine.evaluateIncremental]]
+  *    (one query per wave of 1, 2, 4, … groups), flushed per event —
+  *    the SSE half of O4/T6.
   *  - `POST /api/v1/tags/{dataset}?tagName=&s=&e=&limit=` — SSE of tag
   *    payloads (`message = {tag: value}` / name→count for the name
   *    query), default limit 1000 (QueryApi.scala:99-175).
@@ -169,8 +169,12 @@ final class QueryHttpApi(
   /** SSE endpoint shell: chunked text/event-stream, handler emits
     * events through `emit`, then the done sentinel; a pre-stream error
     * becomes a 400 like the reference (QueryApi.scala:283-288), a
-    * missing/unknown credential a 401. */
-  private[api] def sse(f: (HttpExchange, Tenant, String => Unit) => Unit)
+    * missing/unknown credential a 401. The handler gets the request body
+    * as a parameter: HttpExchange attributes live in the server's
+    * per-CONTEXT map, so a body stored there could be overwritten by a
+    * concurrent POST to the same route before the handler reads it. */
+  private[api] def sse(
+      f: (HttpExchange, Tenant, String, String => Unit) => Unit)
       : com.sun.net.httpserver.HttpHandler = { ex =>
     // headers go out on the FIRST event, so parse/plan errors (which
     // all happen before any emit) can still answer 400 like the
@@ -233,7 +237,7 @@ final class QueryHttpApi(
     var hb: java.util.concurrent.ScheduledFuture[_] = null
     try {
       val tenant = scope(ex) // 401 before any header commits
-      ex.setAttribute("body", body(ex)) // read before responding
+      val requestBody = body(ex) // read before responding
       sc.foreach { c =>
         c.setJobGroup(qid, s"sse ${ex.getRequestURI.getPath}",
           interruptOnCancel = true)
@@ -265,7 +269,7 @@ final class QueryHttpApi(
         }
       }, heartbeatMillis, heartbeatMillis,
         java.util.concurrent.TimeUnit.MILLISECONDS)
-      f(ex, tenant, emit)
+      f(ex, tenant, requestBody, emit)
       emit("""{"type":"done"}""")
     } catch {
       case _: Unauthorized =>
@@ -312,15 +316,14 @@ final class QueryHttpApi(
 
   // ------------------------------------------------------------- routes
 
-  private def handleGraph(ex: HttpExchange, tenant: Tenant,
+  private def handleGraph(ex: HttpExchange, tenant: Tenant, q: String,
       emit: String => Unit): Unit = {
     val tables = tenant.tables
     val segments = tenant.segments
     val p = params(ex)
     val (startMs, endMs) = timeRange(p)
     val stepMs = TimeRange.autoStepMillis(startMs, endMs)
-    val ast = AstJson.parseAstInput(
-      ex.getAttribute("body").asInstanceOf[String])
+    val ast = AstJson.parseAstInput(q)
     val groupBys = ast.baseExpressions.values.flatMap(_.chart)
       .flatMap(_.groupBys).toList.distinct
 
@@ -344,15 +347,18 @@ final class QueryHttpApi(
     if (p.get("explain").exists(_.toBoolean)) {
       // plan-only mode: one "explain" event with the formatted physical
       // plan (pushdown/pruning/codegen spans visible to the operator)
-      // and the replay-group count the incremental path would run —
-      // nothing executes, so this answers in planning time even when
-      // the window covers months of segments
+      // and the replay-group and wave counts the incremental path would
+      // run (one query per wave) — nothing executes, so this answers in
+      // planning time even when the window covers months of segments
       val df = QueryEngine.evaluate(tables, ast, startMs, endMs, stepMs)
       val m = new java.util.LinkedHashMap[String, AnyRef]()
       m.put("stepMs", Long.box(stepMs))
-      if (segments.nonEmpty)
-        m.put("replayGroups", Int.box(ReplaySequencer.sequence(
-          segments, startMs, endMs, stepMs, minGroupSize).size))
+      if (segments.nonEmpty) {
+        val groups = ReplaySequencer.sequence(
+          segments, startMs, endMs, stepMs, minGroupSize)
+        m.put("replayGroups", Int.box(groups.size))
+        m.put("replayWaves", Int.box(ReplaySequencer.waves(groups).size))
+      }
       m.put("plan",
         org.apache.spark.sql.GraftColumnBridge.explainString(df))
       emit(payload("_", "explain", m))
@@ -360,8 +366,9 @@ final class QueryHttpApi(
     }
 
     if (segments.nonEmpty) {
-      // incremental: sealed replay groups stream group-at-a-time; the
-      // lazy iterator runs each group's pruned job as the socket drains
+      // incremental: sealed replay groups stream in waves of 1, 2, 4, …
+      // groups; the lazy iterator runs each wave's pruned query as the
+      // socket drains
       QueryEngine.streamRows(QueryEngine.evaluateIncremental(
           tables, ast, startMs, endMs, stepMs, segments, minGroupSize))
         .foreach { case (_, _, r) => emitChartRow(r) }
@@ -406,14 +413,13 @@ final class QueryHttpApi(
     }
   }
 
-  private def handleTags(ex: HttpExchange, tenant: Tenant,
+  private def handleTags(ex: HttpExchange, tenant: Tenant, q: String,
       emit: String => Unit): Unit = {
     import scala.jdk.CollectionConverters._
     val p = params(ex)
     val (startMs, endMs) = timeRange(p)
     val dataset = ex.getRequestURI.getPath.stripPrefix("/api/v1/tags")
       .stripPrefix("/") match { case "" => "logs"; case d => d }
-    val q = ex.getAttribute("body").asInstanceOf[String]
     // The reference's tag route parses a BARE BaseExpr only —
     // ASTUtils.toBaseExpr (ASTUtils.scala:290) reads top-level
     // id/dataset/filter and would reject a `baseExpressions` wrapper.
@@ -468,7 +474,7 @@ final class QueryHttpApi(
   }
 
   private def handleCardinality(ex: HttpExchange, tenant: Tenant,
-      emit: String => Unit): Unit = {
+      q: String, emit: String => Unit): Unit = {
     val segments = tenant.segments
     val p = params(ex)
     val (startMs, endMs) = timeRange(p)
@@ -476,7 +482,6 @@ final class QueryHttpApi(
     // reference accepts only a bare BaseExpr here; we additionally
     // accept the /graph-style `baseExpressions` wrapper and scope to
     // its first expression by id, ignoring the rest.
-    val q = ex.getAttribute("body").asInstanceOf[String]
     val expr =
       if (mapper.readTree(q).has("baseExpressions"))
         AstJson.parseAstInput(q).baseExpressions.toList.sortBy(_._1)

@@ -404,10 +404,13 @@ object QueryEngine {
 
   // -------------------------------------------------------------- tags APIs
 
+  /** The reference's default tag-value limit (BaseExpr.scala:127-143). */
+  val DefaultTagLimit = 1000
+
   /** Tag-value counts: SELECT tag, COUNT(*) ... GROUP BY tag
     * (reference BaseExpr.scala:127-143, default limit 1000). */
   def tagValues(tel: Telemetry, e: BaseExpr, tagName: String,
-      startMs: Long, endMs: Long, limit: Int = 1000): DataFrame = {
+      startMs: Long, endMs: Long, limit: Int = DefaultTagLimit): DataFrame = {
     val base = prepared(tel, e, startMs, endMs)
     // a tag absent from the scanned segments' schema has no values —
     // return the empty frame instead of an unresolved-column error
@@ -1053,12 +1056,62 @@ object QueryEngine {
       .orderBy("metric_name", "metric_type")
   }
 
-  /** One incrementally-delivered result batch: the chart rows for replay
-    * group `seq` covering [startMs, endMs). `sealedBatch` = false only
-    * for the trailing live (unsealed) batch. `df` is the SAME shape as
-    * [[evaluate]]'s output, restricted to the group's range. */
-  case class ReplayBatch(seq: Int, startMs: Long, endMs: Long,
-      sealedBatch: Boolean, df: DataFrame)
+  /** Column carrying each incrementally-delivered row's replay group
+    * seq (0-based, in replay order; the live batch takes the seq after
+    * the last sealed group). */
+  val REPLAY_SEQ = "replay_seq"
+
+  /** One incrementally-delivered result batch: the chart rows of ONE
+    * replay wave ([[ReplaySequencer.waves]]) — groups `firstSeq` until
+    * `firstSeq + groups.size` in replay order — evaluated as a single
+    * query. `df` is [[evaluate]]'s output plus [[REPLAY_SEQ]], ordered by
+    * (replay_seq, step_ts, label), so selecting one seq yields exactly
+    * that group's rows. `sealedBatch` = false only for the trailing live
+    * (unsealed) batch: one group covering the whole window. */
+  case class ReplayBatch(firstSeq: Int,
+      groups: Seq[ReplaySequencer.ReplayGroup], sealedBatch: Boolean,
+      df: DataFrame) {
+    def seqs: Range = firstSeq until firstSeq + groups.size
+  }
+
+  /** The time hull [min start, max end) of a wave of (group, seq); it
+    * may hold gaps between groups. */
+  private def hull(wave: Seq[(ReplaySequencer.ReplayGroup, Int)])
+      : (Long, Long) =
+    (wave.map(_._1.startMs).min, wave.map(_._1.endMs).max)
+
+  /** Per ROW: the seq of the wave group whose [start, end) holds
+    * epoch-millis `tMs`; null when `tMs` falls in a gap between groups,
+    * so a `replay_seq IS NOT NULL` filter drops exactly the rows the
+    * per-group queries never scanned. A compiled CASE: it runs in the
+    * scan stage, whose code already varies per wave with the pushed
+    * time-range literals. */
+  private def replaySeq(tMs: Column,
+      wave: Seq[(ReplaySequencer.ReplayGroup, Int)]): Column = {
+    def in(g: ReplaySequencer.ReplayGroup) =
+      tMs >= g.startMs && tMs < g.endMs
+    val (g0, i0) = wave.head
+    wave.tail.foldLeft(when(in(g0), lit(i0))) { case (c, (g, i)) =>
+      c.when(in(g), lit(i))
+    }
+  }
+
+  /** Per step BUCKET (post-aggregation chart rows): the seq of the wave
+    * group that bucket [stepTs, stepTs + stepMs) overlaps, null for a
+    * gap bucket. Group bounds are step-aligned except where the window
+    * clips them, so a bucket overlaps at most one group. The bounds ride
+    * in one array literal read by an interpreted `aggregate`, so the
+    * final stage's generated code holds no per-wave constant and every
+    * wave after the first hits the codegen cache (primitive literals are
+    * inlined into generated code; an array literal is passed by
+    * reference). */
+  private def bucketSeq(stepTs: Column, stepMs: Long,
+      wave: Seq[(ReplaySequencer.ReplayGroup, Int)]): Column = {
+    val bounds = typedLit(wave.map { case (g, i) =>
+      (g.startMs - stepMs, g.endMs, i) })
+    aggregate(bounds, lit(null).cast("int"), (acc, b) =>
+      when(stepTs > b("_1") && stepTs < b("_2"), b("_3")).otherwise(acc))
+  }
 
   /** Incremental (SSE-style) result delivery — the reference streams
     * partial results per replay group as workers finish, sealed segments
@@ -1069,23 +1122,27 @@ object QueryEngine {
     * this as time-to-first-datapoint ∝ the first group, not the query.
     *
     * Spark-first shape: each [[ReplaySequencer.ReplayGroup]] is a time
-    * range, so a batch is just [[evaluate]] over [group.start,
-    * group.end) — the pushed timestamp filters + manifest pruning
-    * restrict that job's scan to exactly the group's segments. The
-    * iterator is LAZY: a group's job runs when the consumer advances,
-    * so emission is genuinely incremental, not a buffered split of one
-    * job. Because groups tile the window on step boundaries (no chart
-    * bucket straddles two groups), the ordered concatenation of all
-    * batches equals the batch [[evaluate]] exactly — pinned by
-    * IncrementalDeliverySpec and the `ast_incremental_chart` oracle.
+    * range, and consecutive groups run together in waves of 1, 2, 4, …
+    * ([[ReplaySequencer.waves]]): a batch is ONE [[evaluate]] over the
+    * wave's time hull, each chart row tagged with its group's seq. A
+    * G-group replay therefore pays ⌈log2(G+1)⌉ plans, codegen passes and
+    * job sets instead of G, while group 0 still runs alone. The pushed
+    * timestamp filters + manifest pruning restrict each wave's scan to
+    * its groups' segments. Groups tile the window on step boundaries,
+    * so every chart bucket lies inside one group or one gap; gap buckets
+    * get no seq and drop. The iterator is LAZY: a wave's query runs when
+    * the consumer advances. The ordered concatenation of all batches
+    * equals the batch [[evaluate]] exactly — pinned by
+    * IncrementalDeliverySpec, ReplayWaveSpec and the
+    * `ast_incremental_chart` oracle.
     *
     * Ordering contract (the reference's sealed-before-unsealed rule):
     * all sealed groups emit first, in replay order (forward: step ranges
     * strictly increasing; reverse: strictly decreasing — newest first,
     * the log-tail view); the live batch, when `liveTables` is given,
-    * emits LAST regardless of its time range. Rows inside every batch
-    * are (step_ts, label)-ordered, so per-step delivery order matches
-    * the reference's per-group mergeSorted emission. */
+    * emits LAST regardless of its time range. Rows are (replay_seq,
+    * step_ts, label)-ordered, so per-step delivery order matches the
+    * reference's per-group mergeSorted emission. */
   def evaluateIncremental(tables: String => Telemetry, ast: ASTInput,
       startMs: Long, endMs: Long, stepMs: Long,
       segments: Seq[ReplaySequencer.SegmentSpan],
@@ -1094,15 +1151,24 @@ object QueryEngine {
       : Iterator[ReplayBatch] = {
     val groups = ReplaySequencer.sequence(
       segments, startMs, endMs, stepMs, minGroupSize, reverse)
-    val sealedIt = groups.iterator.zipWithIndex.map { case (g, i) =>
-      ReplayBatch(i, g.startMs, g.endMs, sealedBatch = true,
-        evaluate(tables, ast, g.startMs, g.endMs, stepMs))
-    }
+    def ordered(df: DataFrame, seq: Column): DataFrame =
+      df.withColumn(REPLAY_SEQ, seq).where(col(REPLAY_SEQ).isNotNull)
+        .orderBy(REPLAY_SEQ, STEP_TS, LABEL)
+    val sealedIt = ReplaySequencer.waves(groups.zipWithIndex).iterator
+      .map { wave =>
+        val (lo, hi) = hull(wave)
+        ReplayBatch(wave.head._2, wave.map(_._1), sealedBatch = true,
+          ordered(evaluate(tables, ast, lo, hi, stepMs),
+            bucketSeq(col(STEP_TS), stepMs, wave)))
+      }
     liveTables match {
       case None => sealedIt
       case Some(live) => sealedIt ++ Iterator.single(
-        ReplayBatch(groups.size, startMs, endMs, sealedBatch = false,
-          evaluate(live, ast, startMs, endMs, stepMs)))
+        ReplayBatch(groups.size,
+          Seq(ReplaySequencer.ReplayGroup(startMs, endMs, Nil)),
+          sealedBatch = false,
+          ordered(evaluate(live, ast, startMs, endMs, stepMs),
+            lit(groups.size))))
     }
   }
 
@@ -1112,8 +1178,16 @@ object QueryEngine {
     * into the running state (HllSketch.heapify + Union, lgK 12,
     * byte-identical to the reference's statefulMapConcat) and emits the
     * updated estimate — a dashboard watches the distinct count converge
-    * while the replay progresses. Lazy: each group costs one pruned
-    * one-row aggregation job when the consumer advances. */
+    * while the replay progresses. One estimate per group, empty groups
+    * included. Lazy per wave: one pruned aggregation grouped by
+    * [[REPLAY_SEQ]] yields every group sketch of the wave, unioned in
+    * seq order.
+    *
+    * The emitted value is the union's COMPOSITE estimate, a function of
+    * the sketch registers alone. The HIP estimate (`getResult
+    * .getEstimate`) also depends on the order coupons reach the union,
+    * which follows the partition layout of each group's scan: the same
+    * rows repartitioned moved it by a whole unit. */
   def cardinalityIncremental(tel: Telemetry, e: BaseExpr,
       groupBys: Seq[String], startMs: Long, endMs: Long, stepMs: Long,
       segments: Seq[ReplaySequencer.SegmentSpan], minGroupSize: Int = 1)
@@ -1122,16 +1196,22 @@ object QueryEngine {
     val groups = ReplaySequencer.sequence(
       segments, startMs, endMs, stepMs, minGroupSize)
     val union = new org.apache.datasketches.hll.Union(12)
-    groups.iterator.zipWithIndex.map { case (g, i) =>
-      val base = prepared(tel, e, g.startMs, g.endMs)
+    ReplaySequencer.waves(groups.zipWithIndex).iterator.flatMap { wave =>
+      val (lo, hi) = hull(wave)
+      val base = prepared(tel, e, lo, hi)
       val keys = groupBys.filter(base.columns.toSet.contains)
         .map(FilterCompiler.fieldCol)
-      val bytes = base
-        .agg(graft.functions.SketchInteropFunctions
-          .dsHllSketch(tupleKey(keys)).as("sk"))
-        .head().getAs[Array[Byte]](0)
-      if (bytes != null) union.update(HllSketch.heapify(bytes))
-      (i, union.getResult.getEstimate)
+      val sketches: Map[Int, Array[Byte]] = base
+        .select(replaySeq(tel.tsMillis, wave).as(REPLAY_SEQ),
+          tupleKey(keys).as("_k"))
+        .where(col(REPLAY_SEQ).isNotNull)
+        .groupBy(REPLAY_SEQ)
+        .agg(graft.functions.SketchInteropFunctions.dsHllSketch(col("_k")))
+        .collect().map(r => r.getInt(0) -> r.getAs[Array[Byte]](1)).toMap
+      wave.map { case (_, i) =>
+        sketches.get(i).foreach(b => union.update(HllSketch.heapify(b)))
+        (i, union.getCompositeEstimate)
+      }
     }
   }
 
@@ -1140,8 +1220,12 @@ object QueryEngine {
     * the coordinator so each value reaches the UI once, when first seen
     * (QueryEngineV2.scala:419-491 over the TagNameCompressionStage
     * dedup). Per group: the values NOT seen in any earlier group, in
-    * sorted order. Lazy — a dropdown fills from the first group while
-    * the rest of the window still replays. */
+    * sorted order, out of the group's top [[DefaultTagLimit]] by count
+    * (what [[tagValues]] keeps for the group alone). Lazy per wave — a
+    * dropdown fills from the first group while the rest of the window
+    * still replays. Each wave is one query: per-(seq, value) counts,
+    * ranked within each replay_seq by (count desc, value) and cut at the
+    * limit; the first-seen dedup stays on the driver, in seq order. */
   def tagValuesIncremental(tel: Telemetry, e: BaseExpr, tagName: String,
       startMs: Long, endMs: Long, stepMs: Long,
       segments: Seq[ReplaySequencer.SegmentSpan], minGroupSize: Int = 1)
@@ -1149,14 +1233,31 @@ object QueryEngine {
     val groups = ReplaySequencer.sequence(
       segments, startMs, endMs, stepMs, minGroupSize)
     val seen = scala.collection.mutable.HashSet[String]()
-    groups.iterator.zipWithIndex.map { case (g, i) =>
-      // the distinct-value frame is bounded by the tag's cardinality
-      // (the same bound the reference streams through its coordinator)
-      val vals = tagValues(tel, e, tagName, g.startMs, g.endMs)
-        .select("tagValue").collect().map(_.getString(0))
-      val fresh = vals.filterNot(seen.contains).sorted.toSeq
-      seen ++= fresh
-      (i, fresh)
+    ReplaySequencer.waves(groups.zipWithIndex).iterator.flatMap { wave =>
+      val (lo, hi) = hull(wave)
+      val base = prepared(tel, e, lo, hi)
+      // a tag absent from the scanned segments' schema has no values
+      // (the same missing-column tolerance as tagValues)
+      val byGroup: Map[Int, Seq[String]] =
+        if (!base.columns.contains(tagName) &&
+            !e.syntheticFields.contains(tagName)) Map.empty
+        else base
+          .select(replaySeq(tel.tsMillis, wave).as(REPLAY_SEQ),
+            FilterCompiler.fieldCol(tagName).as("tagValue"))
+          .where(col(REPLAY_SEQ).isNotNull && col("tagValue").isNotNull)
+          .groupBy(REPLAY_SEQ, "tagValue")
+          .agg(count(lit(1)).as("count"))
+          .withColumn("_rk", row_number().over(
+            org.apache.spark.sql.expressions.Window
+              .partitionBy(REPLAY_SEQ).orderBy(desc("count"), col("tagValue"))))
+          .where(col("_rk") <= DefaultTagLimit)
+          .collect().toSeq
+          .groupMap(_.getInt(0))(_.getString(1))
+      wave.map { case (_, i) =>
+        val fresh = byGroup.getOrElse(i, Nil).filterNot(seen.contains).sorted
+        seen ++= fresh
+        (i, fresh)
+      }
     }
   }
 
@@ -1164,7 +1265,14 @@ object QueryEngine {
     * events per replay group next to the chart batches
     * (QueryEngineV2.scala:493-543): each group contributes its own
     * exemplar frame (the BaseExpr's order/limit applied WITHIN the
-    * group, exactly the per-group worker behavior). Lazy per group. */
+    * group, exactly the per-group worker behavior). Lazy per group.
+    *
+    * Deliberately NOT waved: a group's order/limit is a map-side
+    * TakeOrdered — each partition ships only its top `limit` rows to the
+    * driver, nothing is shuffled. A wave could only express a per-group
+    * limit as a rank partitioned by replay_seq, which shuffles the wide
+    * exemplar rows (up to `limit` per group and map partition; with the
+    * large limits exemplar queries use, every matching row). */
   def exemplarsIncremental(tel: Telemetry, e: BaseExpr,
       startMs: Long, endMs: Long, stepMs: Long,
       segments: Seq[ReplaySequencer.SegmentSpan], minGroupSize: Int = 1)
@@ -1176,14 +1284,15 @@ object QueryEngine {
 
   /** Row-level SSE-style emission: drain each replay batch through
     * `toLocalIterator` — one partition in flight per batch, rows stream
-    * to the caller in (batch, step_ts, label) order without collecting
-    * any batch whole. The iterator triggers each group's job only when
-    * the previous group's rows are consumed. */
+    * to the caller in (replay_seq, step_ts, label) order without
+    * collecting any batch whole. The iterator triggers each wave's job
+    * only when the previous wave's rows are consumed. */
   def streamRows(batches: Iterator[ReplayBatch])
       : Iterator[(Int, Boolean, org.apache.spark.sql.Row)] =
     batches.flatMap { b =>
       import scala.jdk.CollectionConverters._
-      b.df.toLocalIterator().asScala.map(r => (b.seq, b.sealedBatch, r))
+      b.df.toLocalIterator().asScala
+        .map(r => (r.getInt(r.fieldIndex(REPLAY_SEQ)), b.sealedBatch, r))
     }
 
   /** The grouping keys of `e` that actually reach its chart output under

@@ -11,11 +11,12 @@ package graft.engine
   *
   * Spark-first consequence: a replay group is just a TIME RANGE. Unlike
   * the reference — which ships each group's segment list to workers —
-  * the group evaluates as a normal pruned query over [start, end):
-  * pushed timestamp filters + the manifest FileIndex already restrict
-  * the scan to exactly that group's segments, so "evaluate one group"
-  * costs one small partition-pruned job, and time-to-first-datapoint is
-  * proportional to the FIRST group's data, not the query's.
+  * groups evaluate as normal pruned queries over a time range: pushed
+  * timestamp filters + the manifest FileIndex already restrict the scan
+  * to exactly those groups' segments. Consecutive groups run together as
+  * one query per [[waves wave]] (1, 2, 4, … groups), each row tagged
+  * with its group's seq, and time-to-first-datapoint stays proportional
+  * to the FIRST group's data, not the query's.
   *
   * Groups tile the query window disjointly on step boundaries (each
   * piece is a whole step interval, merging only joins contiguous
@@ -99,6 +100,32 @@ object ReplaySequencer {
       if (accN >= minGroupSize) flush()
     }
     flush()
+    out.result()
+  }
+
+  /** Cut a replay sequence into contiguous WAVES of 1, 2, 4, 8, …
+    * elements: wave k holds elements 2^k−1 to 2^(k+1)−2, and the last
+    * wave takes whatever is left. Order is kept, and every element lands
+    * in exactly one wave.
+    *
+    * Why: each replay group evaluated alone pays a whole Spark query's
+    * fixed cost (analysis, planning, codegen, a handful of jobs) for a
+    * few thousand rows. A wave runs as ONE query that tags each row with
+    * its group's seq, so a G-group replay costs ⌈log2(G+1)⌉ queries
+    * instead of G. Group 0 still runs alone, so the first event is no
+    * later than before; group i is never later than the end of the wave
+    * holding it, and the last group arrives sooner whenever the
+    * per-query cost is above zero. */
+  def waves[A](groups: Seq[A]): List[Seq[A]] = {
+    val out = List.newBuilder[Seq[A]]
+    var rest = groups
+    var size = 1
+    while (rest.nonEmpty) {
+      val (wave, tail) = rest.splitAt(size)
+      out += wave
+      rest = tail
+      size *= 2
+    }
     out.result()
   }
 }

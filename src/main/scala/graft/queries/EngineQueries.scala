@@ -634,7 +634,6 @@ object EngineQueries {
     * replay order, a missed group, or a broken coordinator dedup all
     * hash-mismatch (exact values, no estimator gating needed). */
   def ast_incremental_tags(s: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.load(s, dir, "events")
     val ast = AstJson.parseBaseExpr(
       """{"id": "a", "dataset": "logs",
         |  "filter": {"k": "props", "op": "exists"}}""".stripMargin)
@@ -655,7 +654,6 @@ object EngineQueries {
     * reverse, cardinality, tags, exemplars: every result kind the
     * reference streams per replay group). */
   def ast_incremental_exemplars(s: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.load(s, dir, "events")
     val ast = AstJson.parseBaseExpr(
       """{"id": "a", "dataset": "logs", "order": "DESC", "limit": 100000,
         |  "filter": {"op": "and",
@@ -956,7 +954,7 @@ object EngineQueries {
       _ => tel(sealedDf), ast, START, END, DAY, Seq(span),
       minGroupSize = 4, liveTables = Some(_ => tel(liveDf)))
     batches.map { rb =>
-      rb.df.select(lit(rb.seq).cast("long").as("emit_seq"),
+      rb.df.select(col(QueryEngine.REPLAY_SEQ).cast("long").as("emit_seq"),
         lit(rb.sealedBatch).as("sealed"), col("step_ts"),
         col("group_key"), round(col("value"), 6).as("value"))
     }.reduce(_ unionByName _)
@@ -988,8 +986,8 @@ object EngineQueries {
     QueryEngine.evaluateIncremental(_ => tel, ast, START, END, DAY,
         Seq(span), minGroupSize = 4, reverse = true)
       .map { rb =>
-        rb.df.select(lit(rb.seq).cast("long").as("emit_seq"), col("step_ts"),
-          col("group_key"), round(col("value"), 6).as("value"))
+        rb.df.select(col(QueryEngine.REPLAY_SEQ).cast("long").as("emit_seq"),
+          col("step_ts"), col("group_key"), round(col("value"), 6).as("value"))
       }.reduce(_ unionByName _)
       .orderBy("emit_seq", "step_ts", "group_key")
   }
@@ -997,8 +995,9 @@ object EngineQueries {
   /** Incremental delivery × FORMULAS: a `a / b` ratio AST replayed in
     * day-interval groups (minGroupSize 4, the reference's
     * executionGroupSize). [[QueryEngine.evaluateIncremental]] runs the
-    * full formula evaluation PER GROUP, so this pins that formula
-    * semantics tile across group boundaries: groups end on step
+    * full formula evaluation once per replay WAVE and tags every bucket
+    * with its group, so this pins that formula semantics tile across
+    * group (and wave) boundaries: groups end on step
     * boundaries, every formula join key (step_ts) lives entirely inside
     * one group, and the ordered concatenation of the batches equals the
     * batch formula (reference: Formula.scala:32-69 applies the operation
@@ -1042,7 +1041,7 @@ object EngineQueries {
     QueryEngine.evaluateIncremental(_ => tel, ast, START, END, DAY,
         Seq(span), minGroupSize = 4)
       .map { rb =>
-        rb.df.select(lit(rb.seq).cast("long").as("emit_seq"),
+        rb.df.select(col(QueryEngine.REPLAY_SEQ).cast("long").as("emit_seq"),
           col("step_ts"), round(col("value"), 6).as("value"))
       }.reduce(_ unionByName _)
       .orderBy("emit_seq", "step_ts")

@@ -110,10 +110,67 @@ class HttpApiSpec extends AnyFunSuite {
       assert(plan.contains("HashAggregate"), plan.take(400))
       assert(m.get("stepMs").asLong() ==
         graft.functions.TimeRange.autoStepMillis(base, base + 48 * hour))
-      assert(m.get("replayGroups").asInt() ==
-        ReplaySequencer.sequence(Seq(span), base, base + 48 * hour,
-          m.get("stepMs").asLong(), 4).size)
+      val groups = ReplaySequencer.sequence(Seq(span), base,
+        base + 48 * hour, m.get("stepMs").asLong(), 4)
+      assert(m.get("replayGroups").asInt() == groups.size)
+      // one query per wave of 1, 2, 4, … groups: 36 groups → 6 waves
+      assert(groups.size == 36)
+      assert(m.get("replayWaves").asInt() == 6)
+      assert(m.get("replayWaves").asInt() ==
+        ReplaySequencer.waves(groups).size)
     } finally api.stop()
+  }
+
+  test("concurrent POSTs to one route each run their OWN body") {
+    // regression: the body used to travel as an HttpExchange attribute,
+    // which the JDK server keeps per CONTEXT — concurrent POSTs to one
+    // route could read each other's AST. Eight distinct filters, all
+    // released at once by one latch, must each answer as when sent alone.
+    def astFor(i: Int): String =
+      s"""{"baseExpressions": {"a": {
+         |  "dataset": "logs",
+         |  "filter": {"k": "value", "v": ["${i * 3}"], "op": "gt",
+         |             "dataType": "number"},
+         |  "chart": {"aggregation": "sum", "groupBys": ["event_type"]}
+         |}}}""".stripMargin
+    def answer(text: String): Seq[(Long, String, Double)] =
+      sseEvents(text).filter(n =>
+          Option(n.get("type")).exists(_.asText() == "timeseries"))
+        .map { n =>
+          val m = n.get("message")
+          (m.get("timestamp").asLong(),
+            m.get("tags").get("event_type").asText(),
+            m.get("value").asDouble())
+        }.sortBy(t => (t._1, t._2))
+    withApi() { port =>
+      val path = s"/api/v1/graph?s=$base&e=${base + 48 * hour}" +
+        "&timeseriesOnly=true"
+      val serial = (0 until 8).map { i =>
+        val (code, text) = http(port, "POST", path, astFor(i))
+        assert(code == 200)
+        answer(text)
+      }
+      assert(serial.distinct.size == 8, "filters must give distinct answers")
+      // a few bursts: each one is a fresh chance for the bodies to cross
+      (0 until 4).foreach { round =>
+        val go = new java.util.concurrent.CountDownLatch(1)
+        val got = new java.util.concurrent.ConcurrentHashMap[Int,
+          Seq[(Long, String, Double)]]()
+        val threads = (0 until 8).map { i =>
+          new Thread(() => {
+            go.await()
+            val (code, text) = http(port, "POST", path, astFor(i))
+            if (code == 200) got.put(i, answer(text))
+          })
+        }
+        threads.foreach(_.start())
+        go.countDown()
+        threads.foreach(_.join(120000))
+        val wrong = (0 until 8).filter(i => got.get(i) != serial(i))
+        assert(wrong.isEmpty,
+          s"burst $round: requests $wrong answered another body")
+      }
+    }
   }
 
   test("POST /api/v1/graph streams timeseries events that equal the " +
@@ -217,8 +274,9 @@ class HttpApiSpec extends AnyFunSuite {
 
   test("heartbeat frames keep the stream alive between replay-group " +
     "jobs and parsers skip them (T5)") {
-    // 50 ms heartbeat + 8 single-interval replay groups: every group is
-    // its own Spark job (>> 50 ms), so heartbeats appear between events
+    // 50 ms heartbeat + 144 single-interval replay groups in 8 waves:
+    // every wave is its own Spark query (>> 50 ms), so heartbeats appear
+    // between events
     val span = ReplaySequencer.SegmentSpan("s", base, base + 48 * hour)
     val api = new QueryHttpApi(_ => tel, segments = Seq(span),
       minGroupSize = 1, heartbeatMillis = 50,
@@ -247,12 +305,22 @@ class HttpApiSpec extends AnyFunSuite {
 
   test("a client disconnect cancels the request's remaining Spark work " +
     "(job group teardown, the engine half of stream abort)") {
-    // 48 single-interval replay groups = 48 sequential jobs (~5 s);
-    // the client reads ONE event and slams the socket. The heartbeat
-    // write then fails within ~100 ms and cancels the job group, so
-    // the group's job count must stop growing almost immediately.
+    // 144 single-interval replay groups in 8 waves. Every row after the
+    // first group costs 3 s, so the second wave's job runs for seconds
+    // with nothing to write; the client reads ONE event and slams the
+    // socket. Only the heartbeat can notice then: its write fails within
+    // ~100 ms and cancels the job group, so the group's jobs must stop
+    // almost immediately.
+    val firstGroupEndNs = (base + 20 * 60000L) * 1000000L // 20 min step
+    val slowValue = udf { (ts: Long, v: Double) =>
+      if (ts >= firstGroupEndNs) Thread.sleep(3000)
+      v
+    }
+    val slowTel = Telemetry.nanos(events, "ts",
+      valueCol = slowValue(col("ts"), col("value")),
+      message = Some(col("props")))
     val span = ReplaySequencer.SegmentSpan("s", base, base + 48 * hour)
-    val api = new QueryHttpApi(_ => tel, segments = Seq(span),
+    val api = new QueryHttpApi(_ => slowTel, segments = Seq(span),
       minGroupSize = 1, heartbeatMillis = 100,
       now = () => java.time.Instant.ofEpochMilli(base + 48 * hour))
     val port = api.start(0)
@@ -283,9 +351,9 @@ class HttpApiSpec extends AnyFunSuite {
       val at1800 = tracker.getActiveJobIds().length
       assert(at1800 == 0,
         s"jobs still active 1.8s after disconnect: $at1800 (at600=$at600)")
-      // without cancellation the 48-group replay would still be running
-      // (~5 s of jobs); with it the handler thread dies on the next
-      // write and no further group jobs launch
+      // without cancellation the second wave would still be running
+      // (3 s a row); with it the handler thread dies on the next write
+      // and no further wave jobs launch
     } finally api.stop()
   }
 
@@ -446,7 +514,7 @@ class HttpApiSpec extends AnyFunSuite {
 
   test("two concurrent SSE streams both progress to done with " +
     "heartbeats — one stream cannot starve or wedge the other") {
-    // 48 single-interval replay groups each (= 48 sequential jobs per
+    // 144 single-interval replay groups each (8 sequential waves per
     // stream) + 50 ms heartbeats: the pooled dispatcher, per-request
     // FAIR pools, and the shared heartbeat scheduler (writes dispatched
     // off-thread) must service both sockets side by side

@@ -138,19 +138,23 @@ class IncrementalDeliverySpec extends AnyFunSuite {
       _ => tel(sealedDf), AST, start, end, 3600000L, Seq(span),
       minGroupSize = 24, liveTables = Some(_ => tel(liveDf))).toList
 
-    // ordering contract
+    // ordering contract: groups are numbered 0, 1, 2, … in delivery
+    // order, the live batch last
     val sealedFlags = batches.map(_.sealedBatch)
     assert(sealedFlags.init.forall(identity) && !sealedFlags.last)
-    assert(batches.map(_.seq) === batches.indices.toList)
+    val seqs = batches.flatMap(_.seqs)
+    assert(seqs === seqs.indices.toList)
     val sealedB = batches.init
-    sealedB.sliding(2).foreach {
+    sealedB.flatMap(_.groups).sliding(2).foreach {
       case List(a, b) => assert(a.endMs <= b.startMs)
       case _ =>
     }
-    // steps monotone ACROSS sealed batches as delivered
-    val stepsPerBatch = sealedB.map(_.df.select("step_ts")
-      .as[Long].collect().toSeq)
-    stepsPerBatch.filter(_.nonEmpty).sliding(2).foreach {
+    // steps monotone ACROSS sealed groups as delivered
+    val sealedRows = sealedB.map(_.df).reduce(_ unionByName _)
+    val stepsPerGroup = sealedB.flatMap(_.seqs).map(i =>
+      sealedRows.where(col(QueryEngine.REPLAY_SEQ) === i)
+        .select("step_ts").as[Long].collect().toSeq)
+    stepsPerGroup.filter(_.nonEmpty).sliding(2).foreach {
       case Seq(a, b) => assert(a.max < b.min)
       case _ =>
     }
@@ -192,10 +196,12 @@ class IncrementalDeliverySpec extends AnyFunSuite {
     val span = SegmentSpan("s", base, base + 96 * hour)
     val batches = QueryEngine.evaluateIncremental(_ => tel(df), ast,
       base, base + 96 * hour, hour, Seq(span), minGroupSize = 24).toList
-    assert(batches.size === 4)
+    assert(batches.flatMap(_.seqs).size === 4)
     // group 1 covers buckets 24-47; its first bucket must be ABSENT
     // (div-by-zero drop), the other 23 present with the right ratio
-    val g1 = batches(1).df.select("step_ts", "value")
+    val g1 = batches.map(_.df).reduce(_ unionByName _)
+      .where(col(QueryEngine.REPLAY_SEQ) === 1)
+      .select("step_ts", "value")
       .as[(Long, Double)].collect().toMap
     assert(!g1.contains(base + 24 * hour))
     assert(g1.size === 23)
@@ -262,8 +268,8 @@ class IncrementalDeliverySpec extends AnyFunSuite {
     val batches = QueryEngine.evaluateIncremental(
       _ => tel(ev), AST, base, end, 3600000L, Seq(span),
       minGroupSize = 24, reverse = true).toList
-    assert(batches.size > 1)
-    batches.sliding(2).foreach {
+    assert(batches.flatMap(_.seqs).size > 1)
+    batches.flatMap(_.groups).sliding(2).foreach {
       case List(a, b) => assert(b.endMs <= a.startMs,
         s"reverse order violated: $a then $b")
       case _ =>
@@ -305,7 +311,7 @@ class IncrementalDeliverySpec extends AnyFunSuite {
     val batches = QueryEngine.evaluateIncremental(
       _ => relTel, AST, start, end, 86400000L, spans,
       minGroupSize = 3).toList
-    assert(batches.size > 1, "expected multiple replay groups")
+    assert(batches.flatMap(_.seqs).size > 1, "expected multiple replay groups")
     val concat = batches.map(_.df).reduce(_ unionByName _)
       .select("step_ts", "group_key", "value")
       .collect().map(r => (r.getLong(0), r.getString(1), r.getDouble(2)))

@@ -76,7 +76,7 @@ class SseStallSpec extends AnyFunSuite {
       heartbeatMillis = 25, writeStallMillis = 200)
     val ex = new StallingExchange(allow = 2)
     val handlerDone = new CountDownLatch(1)
-    val handler = api.sse { (_, _, emit) =>
+    val handler = api.sse { (_, _, _, emit) =>
       // emit until the fake socket stalls; the force-close must turn
       // the parked write into an IOException that unwinds this handler
       (0 until 1000).foreach(i => emit(s"""{"n":$i}"""))
@@ -112,7 +112,7 @@ class SseStallSpec extends AnyFunSuite {
       heartbeatMillis = 25, writeStallMillis = 600000)
     val ex = new StallingExchange(allow = 1) // emit ok; heartbeat parks
     val handlerDone = new CountDownLatch(1)
-    val handler = api.sse { (_, _, emit) =>
+    val handler = api.sse { (_, _, _, emit) =>
       emit("""{"n":1}""") // commit headers; stream is live
       // wait for a heartbeat to fire and park on the stalled socket
       assert(ex.writeBlocked.await(10, TimeUnit.SECONDS),
@@ -163,7 +163,7 @@ class SseStallSpec extends AnyFunSuite {
       _ => null.asInstanceOf[Telemetry],
       heartbeatMillis = 25, writeStallMillis = 600000)
     val handlerDone = new CountDownLatch(1)
-    val handler = api.sse { (_, _, emit) =>
+    val handler = api.sse { (_, _, _, emit) =>
       emit("""{"n":1}""") // slow but completes; commits headers
       // a heartbeat is now mid-write; unwind while it holds the lock
       assert(hbWriteStarted.await(10, TimeUnit.SECONDS),
@@ -194,7 +194,7 @@ class SseStallSpec extends AnyFunSuite {
       }
       override def getResponseBody: OutputStream = sink
     }
-    val handler = api.sse { (_, _, emit) =>
+    val handler = api.sse { (_, _, _, emit) =>
       emit("""{"n":1}"""); Thread.sleep(300); emit("""{"n":2}""")
     }
     handler.handle(ex)

@@ -3,7 +3,8 @@
 # compiles and the sf0.001 smoke passes. Run before any end-of-round commit:
 #   tools/gate.sh            # compile + smoke + report-freshness (~2 min)
 #   tools/gate.sh --quick    # compile + smoke only (mid-round iteration)
-#   tools/gate.sh --full     # fresh test suite + Verify+oracle at sf0.01
+#   tools/gate.sh --full     # fresh test suite + perfbench self-tests +
+#                            # Verify+oracle at sf0.01
 # Exit 0 = safe to snapshot; nonzero = DO NOT COMMIT the snapshot.
 set -euo pipefail
 cd "$(dirname "$0")/.."
@@ -47,6 +48,10 @@ python3 tools/parse_oracles.py /tmp/gate_smoke /root/testdata/sf0.001 \
 if [ "${1:-}" = "--full" ]; then
   echo "== gate: full test suite (fresh report dir) =="
   sbt -batch test || { echo "GATE FAIL: test suite red"; exit 1; }
+
+  echo "== gate: serving benchmark self-tests (generator, stats, SSE reading) =="
+  python3 perfbench/test_gen.py || { echo "GATE FAIL: perfbench generator tests"; exit 1; }
+  (cd perfbench && sbt --batch test) || { echo "GATE FAIL: perfbench tests"; exit 1; }
 
   echo "== gate: Verify + oracle at sf0.01 =="
   sbt -batch "runMain graft.Verify /root/testdata/sf0.01 /tmp/gate_verify" >/tmp/gate_verify.log 2>&1 \
