@@ -108,37 +108,19 @@ object Tables {
   * constant whether the table is 17 MB or 100 TB.
   */
 private[graft] object TsEncoding {
+  import org.apache.hadoop.conf.Configuration
+  import org.apache.hadoop.fs.Path
+  import org.apache.parquet.schema.LogicalTypeAnnotation
+  import LogicalTypeAnnotation.TimeUnit
 
-  /** Min `ts` statistic from the first parquet file under `path`
-    * (file or directory). None when stats are absent. */
+  /** Min `ts` statistic of the first parquet file under `path` (file
+    * or directory, by name) — the unit sample [[Tables.load]] infers a
+    * raw int64's scale from. None when the file has no rows or a row
+    * group without a usable statistic (load then keeps the raw value). */
   def footerTsMin(s: SparkSession, path: String): Option[Long] = {
-    import org.apache.hadoop.fs.Path
-    import scala.jdk.CollectionConverters._
     val conf = s.sessionState.newHadoopConf()
-    val p = new Path(path)
-    val fs = p.getFileSystem(conf)
-    val file =
-      if (fs.getFileStatus(p).isFile) Some(p)
-      else fs.listStatus(p).toSeq
-        .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-        .sortBy(_.getPath.getName).headOption.map(_.getPath)
-    file.flatMap { f =>
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf))
-      try {
-        val mins = reader.getFooter.getBlocks.asScala.flatMap { block =>
-          block.getColumns.asScala
-            .filter(_.getPath.toDotString == "ts")
-            .flatMap(c => Option(c.getStatistics))
-            .filter(st => !st.isEmpty && st.hasNonNullValue)
-            .flatMap(_.genericGetMin match {
-              case l: java.lang.Long => Some(l.longValue())
-              case _ => None
-            })
-        }
-        if (mins.isEmpty) None else Some(mins.min)
-      } finally reader.close()
-    }
+    parquetFiles(conf, path).headOption.flatMap(footerTs(conf, _))
+      .collect { case (_, lo, hi) if lo <= hi => lo }
   }
 
   /** Exact (min, max) epoch-nanos bounds of `ts` from EVERY file's
@@ -154,65 +136,76 @@ private[graft] object TsEncoding {
     * 1000×). Never a partial bound. */
   def footerTsBoundsNanos(s: SparkSession,
       path: String): Option[(Long, Long)] = {
-    import org.apache.hadoop.fs.Path
-    import scala.jdk.CollectionConverters._
-    import org.apache.parquet.schema.LogicalTypeAnnotation
-    import LogicalTypeAnnotation.TimeUnit
     val conf = s.sessionState.newHadoopConf()
-    val p = new Path(path)
-    val fs = p.getFileSystem(conf)
-    val files =
-      if (fs.getFileStatus(p).isFile) Seq(p)
-      else fs.listStatus(p).toSeq
-        .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-        .map(_.getPath)
-    if (files.isEmpty) return None
-    // per file: (annotated scale, None = raw int64; raw (min, max))
-    val perFile = files.map { f =>
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf))
-      try {
-        val footer = reader.getFooter
-        val schema = footer.getFileMetaData.getSchema
-        if (!schema.containsField("ts")) return None
-        val annotated: Option[Long] =
-          schema.getType(Seq("ts"): _*).getLogicalTypeAnnotation match {
-            case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
-              t.getUnit match {
-                case TimeUnit.NANOS => Some(1L)
-                case TimeUnit.MICROS => Some(1000L)
-                case _ => return None // MILLIS: load would read it as micros
-              }
-            case null => None // raw int64: infer from the file's min below
-            case _ => return None
-          }
-        var lo = Long.MaxValue
-        var hi = Long.MinValue
-        footer.getBlocks.asScala.foreach { block =>
-          val chunks = block.getColumns.asScala
-            .filter(_.getPath.toDotString == "ts")
-          if (chunks.isEmpty) return None
-          chunks.foreach { c =>
-            val st = c.getStatistics
-            if (st == null || st.isEmpty || !st.hasNonNullValue) return None
-            (st.genericGetMin, st.genericGetMax) match {
-              case (mn: java.lang.Long, mx: java.lang.Long) =>
-                lo = Math.min(lo, mn.longValue())
-                hi = Math.max(hi, mx.longValue())
-              case _ => return None
-            }
-          }
-        }
-        (annotated, lo, hi)
-      } finally reader.close()
+    val perFile = parquetFiles(conf, path).map(footerTs(conf, _))
+    if (perFile.isEmpty || perFile.contains(None)) return None
+    val footers = perFile.flatten
+    if (footers.map(_._1).distinct.size != 1) return None
+    val annotated: Option[Long] = footers.head._1 match {
+      case None => None // raw int64: infer from each file's min below
+      case Some(TimeUnit.NANOS) => Some(1L)
+      case Some(TimeUnit.MICROS) => Some(1000L)
+      case Some(_) => return None // MILLIS: load would read it as micros
     }
-    if (perFile.map(_._1).distinct.size != 1) return None
-    val withRows = perFile.filter { case (_, lo, hi) => lo <= hi }
-    val scales = withRows.map { case (a, lo, _) =>
-      a.getOrElse(nanosScale(lo)) }.distinct
+    val withRows = footers.filter { case (_, lo, hi) => lo <= hi }
+    val scales = withRows.map { case (_, lo, _) =>
+      annotated.getOrElse(nanosScale(lo)) }.distinct
     if (scales.size != 1) None
     else Some((withRows.map(_._2).min * scales.head,
       withRows.map(_._3).max * scales.head))
+  }
+
+  /** `path` itself when it is a file, else its `.parquet` files by name. */
+  private def parquetFiles(conf: Configuration, path: String): Seq[Path] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(conf)
+    if (fs.getFileStatus(p).isFile) Seq(p)
+    else fs.listStatus(p).toSeq
+      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
+      .map(_.getPath).sortBy(_.getName)
+  }
+
+  /** One file's `ts` footer: (timestamp unit annotation, None for a
+    * plain signed int64; raw min; raw max) over every row group's
+    * statistics — min > max when the file has no row group. None when
+    * the file has no `ts`, another annotation, or a row group without a
+    * non-null int64 statistic for it. */
+  private def footerTs(conf: Configuration,
+      f: Path): Option[(Option[TimeUnit], Long, Long)] = {
+    import scala.jdk.CollectionConverters._
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf))
+    try {
+      val footer = reader.getFooter
+      val schema = footer.getFileMetaData.getSchema
+      if (!schema.containsField("ts")) return None
+      val unit = schema.getType(Seq("ts"): _*).getLogicalTypeAnnotation match {
+        case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
+          Some(t.getUnit)
+        case null => None
+        case i: LogicalTypeAnnotation.IntLogicalTypeAnnotation
+          if i.isSigned && i.getBitWidth == 64 => None
+        case _ => return None
+      }
+      var lo = Long.MaxValue
+      var hi = Long.MinValue
+      footer.getBlocks.asScala.foreach { block =>
+        val chunks = block.getColumns.asScala
+          .filter(_.getPath.toDotString == "ts")
+        if (chunks.isEmpty) return None
+        chunks.foreach { c =>
+          val st = c.getStatistics
+          if (st == null || st.isEmpty || !st.hasNonNullValue) return None
+          (st.genericGetMin, st.genericGetMax) match {
+            case (mn: java.lang.Long, mx: java.lang.Long) =>
+              lo = Math.min(lo, mn.longValue())
+              hi = Math.max(hi, mx.longValue())
+            case _ => return None
+          }
+        }
+      }
+      Some((unit, lo, hi))
+    } finally reader.close()
   }
 
   /** Multiplier to epoch-NANOS, inferred from a sample epoch value's

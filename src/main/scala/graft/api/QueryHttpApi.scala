@@ -8,7 +8,7 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.Row
 
 import graft.ast.{AstJson, BaseExpr, Filter, Ops, BinaryClause}
-import graft.engine.{QueryEngine, ReplaySequencer, Telemetry}
+import graft.engine.{QueryEngine, ReplaySequencer, Telemetry, WaveScheduler}
 import graft.functions.TimeRange
 
 /** The HTTP/SSE transport shell over [[graft.engine.QueryEngine]] — the
@@ -24,8 +24,8 @@ import graft.functions.TimeRange
   *    by `{"type":"done"}` (SSEMessage.scala:30). When segment spans
   *    are registered, delivery is INCREMENTAL: sealed replay groups
   *    stream in replay order through [[QueryEngine.evaluateIncremental]]
-  *    (one query per wave of 1, 2, 4, … groups), flushed per event —
-  *    the SSE half of O4/T6.
+  *    (one query per wave of 1, 2, 4, … groups; wave 0 alone, then every
+  *    later wave at once), flushed per event — the SSE half of O4/T6.
   *  - `POST /api/v1/tags/{dataset}?tagName=&s=&e=&limit=` — SSE of tag
   *    payloads (`message = {tag: value}` / name→count for the name
   *    query), default limit 1000 (QueryApi.scala:99-175).
@@ -194,18 +194,21 @@ final class QueryHttpApi(
     // of letting the stall wedge heartbeats for every other stream.
     @volatile var writeStart = 0L
     val hbPending = new java.util.concurrent.atomic.AtomicBoolean(false)
-    // per-request Spark job group (thread-local, inherited by every job
-    // this handler launches) so an abandoned stream can be CANCELLED —
-    // the reference tears the Akka stream down on disconnect; here a
-    // disconnect must stop the remaining replay groups' cluster work,
-    // not just the writes
+    // per-request Spark job group (thread-local, carried by every job
+    // this handler launches, replay waves on the engine's pool included)
+    // so an abandoned stream can be CANCELLED — the reference tears the
+    // Akka stream down on disconnect; here a disconnect must stop the
+    // remaining replay groups' cluster work, not just the writes
     val qid = "graft-sse-" +
       java.util.UUID.randomUUID().toString.substring(0, 8)
     val sc = org.apache.spark.sql.SparkSession.getDefaultSession
       .orElse(org.apache.spark.sql.SparkSession.getActiveSession)
       .map(_.sparkContext)
+    // future jobs too: a handler between two jobs at cancel time must
+    // not start its next one (replay waves on the engine's pool stop
+    // when the handler closes its replay, see drain)
     def cancel(): Unit =
-      sc.foreach(c => try c.cancelJobGroup(qid)
+      sc.foreach(c => try c.cancelJobGroupAndFutureJobs(qid)
       catch { case _: Exception => () })
     def raw(jsonStr: String): Unit = {
       lock.lock()
@@ -281,9 +284,13 @@ final class QueryHttpApi(
         ex.getResponseBody.write(msg)
       case _: Exception =>
         // mid-stream: the truncated stream (no done sentinel) is the
-        // error signal, as in SSE generally; stop the remaining work
-        cancel()
+        // error signal, as in SSE generally
+        ()
     } finally {
+      // every exit cancels the request's remaining Spark work, not only
+      // an error: a handler that stopped early (a tags limit reached, a
+      // disconnect) may leave jobs behind
+      cancel()
       // Teardown: stop scheduling new heartbeats, then close the
       // exchange UNDER the write lock when it can be acquired quickly —
       // a healthy in-flight heartbeat raw() holds the lock for
@@ -308,6 +315,12 @@ final class QueryHttpApi(
       }
     }
   }
+
+  /** Emit every replay result; a failed emit (the client went away)
+    * also stops the waves launched ahead of it. */
+  private def drain[A](replay: WaveScheduler.Replay[A])(f: A => Unit)
+      : Unit =
+    try replay.foreach(f) finally replay.close()
 
   private def payload(id: String, tpe: String,
       message: java.util.Map[String, AnyRef]): String =
@@ -367,11 +380,12 @@ final class QueryHttpApi(
 
     if (segments.nonEmpty) {
       // incremental: sealed replay groups stream in waves of 1, 2, 4, …
-      // groups; the lazy iterator runs each wave's pruned query as the
-      // socket drains
-      QueryEngine.streamRows(QueryEngine.evaluateIncremental(
-          tables, ast, startMs, endMs, stepMs, segments, minGroupSize))
-        .foreach { case (_, _, r) => emitChartRow(r) }
+      // groups; wave 0 runs alone, then every later wave at once, and
+      // rows go out in replay order as the socket drains
+      drain(QueryEngine.streamRows(QueryEngine.evaluateIncremental(
+          tables, ast, startMs, endMs, stepMs, segments, minGroupSize))) {
+        case (_, _, r) => emitChartRow(r)
+      }
     } else {
       // batch path drains through toLocalIterator like the incremental
       // one — one partition in flight, never the whole chart buffered on
@@ -451,13 +465,13 @@ final class QueryHttpApi(
         val it = QueryEngine.tagValuesIncremental(tel, expr, tag,
           startMs, endMs, TimeRange.autoStepMillis(startMs, endMs),
           tenant.segments, minGroupSize)
-        while (sent < limit && it.hasNext) {
+        try while (sent < limit && it.hasNext) {
           val (_, fresh) = it.next()
           fresh.take(limit - sent).foreach { v =>
             emit(payload("_", "data", java.util.Map.of(tag, v)))
             sent += 1
           }
-        }
+        } finally it.close() // the limit may leave later waves running
       case Some(tag) =>
         QueryEngine.tagValues(tel, expr, tag, startMs, endMs, limit)
           .toLocalIterator().asScala.foreach { r =>
@@ -493,12 +507,11 @@ final class QueryHttpApi(
     if (segments.nonEmpty) {
       // running estimate per replay group, the reference's converging
       // cardinality stream (QueryEngineV2.scala:599-668)
-      QueryEngine.cardinalityIncremental(tel, expr, groupBys,
+      drain(QueryEngine.cardinalityIncremental(tel, expr, groupBys,
           startMs, endMs, TimeRange.autoStepMillis(startMs, endMs),
-          segments, minGroupSize)
-        .foreach { case (_, est) =>
-          emit(s"""{"message": ${math.rint(est).toLong}}""")
-        }
+          segments, minGroupSize)) { case (_, est) =>
+        emit(s"""{"message": ${math.rint(est).toLong}}""")
+      }
     } else {
       val est = QueryEngine.cardinality(tel, expr, groupBys,
         startMs, endMs).head().getLong(0)

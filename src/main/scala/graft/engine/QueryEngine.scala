@@ -1130,8 +1130,11 @@ object QueryEngine {
     * timestamp filters + manifest pruning restrict each wave's scan to
     * its groups' segments. Groups tile the window on step boundaries,
     * so every chart bucket lies inside one group or one gap; gap buckets
-    * get no seq and drop. The iterator is LAZY: a wave's query runs when
-    * the consumer advances. The ordered concatenation of all batches
+    * get no seq and drop. The iterator builds a wave's DataFrame when
+    * pulled and runs no job: [[streamRows]] runs wave 0 alone, then
+    * every later wave at once ([[WaveScheduler]]), so the last group
+    * arrives by the end of the slowest later wave, not of their sum. The
+    * ordered concatenation of all batches
     * equals the batch [[evaluate]] exactly — pinned by
     * IncrementalDeliverySpec, ReplayWaveSpec and the
     * `ast_incremental_chart` oracle.
@@ -1179,9 +1182,10 @@ object QueryEngine {
     * byte-identical to the reference's statefulMapConcat) and emits the
     * updated estimate — a dashboard watches the distinct count converge
     * while the replay progresses. One estimate per group, empty groups
-    * included. Lazy per wave: one pruned aggregation grouped by
-    * [[REPLAY_SEQ]] yields every group sketch of the wave, unioned in
-    * seq order.
+    * included. Each wave is one pruned aggregation grouped by
+    * [[REPLAY_SEQ]] that collects every group sketch of the wave; wave 0
+    * runs alone, then every later wave at once ([[WaveScheduler]]), and
+    * the union takes the sketches on the consumer thread in seq order.
     *
     * The emitted value is the union's COMPOSITE estimate, a function of
     * the sketch registers alone. The HIP estimate (`getResult
@@ -1191,24 +1195,29 @@ object QueryEngine {
   def cardinalityIncremental(tel: Telemetry, e: BaseExpr,
       groupBys: Seq[String], startMs: Long, endMs: Long, stepMs: Long,
       segments: Seq[ReplaySequencer.SegmentSpan], minGroupSize: Int = 1)
-      : Iterator[(Int, Double)] = {
+      : WaveScheduler.Replay[(Int, Double)] = {
     import org.apache.datasketches.hll.HllSketch
     val groups = ReplaySequencer.sequence(
       segments, startMs, endMs, stepMs, minGroupSize)
     val union = new org.apache.datasketches.hll.Union(12)
-    ReplaySequencer.waves(groups.zipWithIndex).iterator.flatMap { wave =>
-      val (lo, hi) = hull(wave)
-      val base = prepared(tel, e, lo, hi)
-      val keys = groupBys.filter(base.columns.toSet.contains)
-        .map(FilterCompiler.fieldCol)
-      val sketches: Map[Int, Array[Byte]] = base
-        .select(replaySeq(tel.tsMillis, wave).as(REPLAY_SEQ),
-          tupleKey(keys).as("_k"))
-        .where(col(REPLAY_SEQ).isNotNull)
-        .groupBy(REPLAY_SEQ)
-        .agg(graft.functions.SketchInteropFunctions.dsHllSketch(col("_k")))
-        .collect().map(r => r.getInt(0) -> r.getAs[Array[Byte]](1)).toMap
-      wave.map { case (_, i) =>
+    val waves = ReplaySequencer.waves(groups.zipWithIndex).iterator
+      .map { wave =>
+        val (lo, hi) = hull(wave)
+        val base = prepared(tel, e, lo, hi)
+        val keys = groupBys.filter(base.columns.toSet.contains)
+          .map(FilterCompiler.fieldCol)
+        WaveScheduler.Wave(base
+          .select(replaySeq(tel.tsMillis, wave).as(REPLAY_SEQ),
+            tupleKey(keys).as("_k"))
+          .where(col(REPLAY_SEQ).isNotNull)
+          .groupBy(REPLAY_SEQ)
+          .agg(graft.functions.SketchInteropFunctions.dsHllSketch(col("_k"))),
+          (df: DataFrame) => (wave, df.collect()))
+      }
+    WaveScheduler.inReplayOrder(waves) { case (wave, rows) =>
+      val sketches = rows.map(r => r.getInt(0) -> r.getAs[Array[Byte]](1))
+        .toMap
+      wave.iterator.map { case (_, i) =>
         sketches.get(i).foreach(b => union.update(HllSketch.heapify(b)))
         (i, union.getCompositeEstimate)
       }
@@ -1221,27 +1230,31 @@ object QueryEngine {
     * (QueryEngineV2.scala:419-491 over the TagNameCompressionStage
     * dedup). Per group: the values NOT seen in any earlier group, in
     * sorted order, out of the group's top [[DefaultTagLimit]] by count
-    * (what [[tagValues]] keeps for the group alone). Lazy per wave — a
-    * dropdown fills from the first group while the rest of the window
-    * still replays. Each wave is one query: per-(seq, value) counts,
-    * ranked within each replay_seq by (count desc, value) and cut at the
-    * limit; the first-seen dedup stays on the driver, in seq order. */
+    * (what [[tagValues]] keeps for the group alone) — a dropdown fills
+    * from the first group while the rest of the window still replays.
+    * Each wave is one query: per-(seq, value) counts, ranked within each
+    * replay_seq by (count desc, value), cut at the limit and collected;
+    * wave 0 runs alone, then every later wave at once
+    * ([[WaveScheduler]]). The first-seen dedup stays on the consumer
+    * thread, in seq order. */
   def tagValuesIncremental(tel: Telemetry, e: BaseExpr, tagName: String,
       startMs: Long, endMs: Long, stepMs: Long,
       segments: Seq[ReplaySequencer.SegmentSpan], minGroupSize: Int = 1)
-      : Iterator[(Int, Seq[String])] = {
+      : WaveScheduler.Replay[(Int, Seq[String])] = {
     val groups = ReplaySequencer.sequence(
       segments, startMs, endMs, stepMs, minGroupSize)
     val seen = scala.collection.mutable.HashSet[String]()
-    ReplaySequencer.waves(groups.zipWithIndex).iterator.flatMap { wave =>
-      val (lo, hi) = hull(wave)
-      val base = prepared(tel, e, lo, hi)
-      // a tag absent from the scanned segments' schema has no values
-      // (the same missing-column tolerance as tagValues)
-      val byGroup: Map[Int, Seq[String]] =
+    val waves = ReplaySequencer.waves(groups.zipWithIndex).iterator
+      .map { wave =>
+        val (lo, hi) = hull(wave)
+        val base = prepared(tel, e, lo, hi)
+        // a tag absent from the scanned segments' schema has no values
+        // (the same missing-column tolerance as tagValues)
         if (!base.columns.contains(tagName) &&
-            !e.syntheticFields.contains(tagName)) Map.empty
-        else base
+            !e.syntheticFields.contains(tagName))
+          WaveScheduler.Wave(base,
+            (_: DataFrame) => (wave, Array.empty[org.apache.spark.sql.Row]))
+        else WaveScheduler.Wave(base
           .select(replaySeq(tel.tsMillis, wave).as(REPLAY_SEQ),
             FilterCompiler.fieldCol(tagName).as("tagValue"))
           .where(col(REPLAY_SEQ).isNotNull && col("tagValue").isNotNull)
@@ -1250,10 +1263,12 @@ object QueryEngine {
           .withColumn("_rk", row_number().over(
             org.apache.spark.sql.expressions.Window
               .partitionBy(REPLAY_SEQ).orderBy(desc("count"), col("tagValue"))))
-          .where(col("_rk") <= DefaultTagLimit)
-          .collect().toSeq
-          .groupMap(_.getInt(0))(_.getString(1))
-      wave.map { case (_, i) =>
+          .where(col("_rk") <= DefaultTagLimit),
+          (df: DataFrame) => (wave, df.collect()))
+      }
+    WaveScheduler.inReplayOrder(waves) { case (wave, rows) =>
+      val byGroup = rows.toSeq.groupMap(_.getInt(0))(_.getString(1))
+      wave.iterator.map { case (_, i) =>
         val fresh = byGroup.getOrElse(i, Nil).filterNot(seen.contains).sorted
         seen ++= fresh
         (i, fresh)
@@ -1265,14 +1280,19 @@ object QueryEngine {
     * events per replay group next to the chart batches
     * (QueryEngineV2.scala:493-543): each group contributes its own
     * exemplar frame (the BaseExpr's order/limit applied WITHIN the
-    * group, exactly the per-group worker behavior). Lazy per group.
+    * group, exactly the per-group worker behavior). Lazy per group and
+    * serial: the consumer runs each frame when it reaches it.
     *
     * Deliberately NOT waved: a group's order/limit is a map-side
     * TakeOrdered — each partition ships only its top `limit` rows to the
     * driver, nothing is shuffled. A wave could only express a per-group
     * limit as a rank partitioned by replay_seq, which shuffles the wide
     * exemplar rows (up to `limit` per group and map partition; with the
-    * large limits exemplar queries use, every matching row). */
+    * large limits exemplar queries use, every matching row). Nor does
+    * it use [[WaveScheduler]]: it hands back each group's frame
+    * unexecuted and the caller drains the frames one after another, so
+    * one group's wide exemplar rows at most are in flight on the driver.
+    * Running later groups ahead of the consumer would pull theirs too. */
   def exemplarsIncremental(tel: Telemetry, e: BaseExpr,
       startMs: Long, endMs: Long, stepMs: Long,
       segments: Seq[ReplaySequencer.SegmentSpan], minGroupSize: Int = 1)
@@ -1282,18 +1302,22 @@ object QueryEngine {
         (i, exemplars(tel, e, g.startMs, g.endMs))
       }
 
-  /** Row-level SSE-style emission: drain each replay batch through
-    * `toLocalIterator` — one partition in flight per batch, rows stream
-    * to the caller in (replay_seq, step_ts, label) order without
-    * collecting any batch whole. The iterator triggers each wave's job
-    * only when the previous wave's rows are consumed. */
+  /** Row-level SSE-style emission, in (replay_seq, step_ts, label)
+    * order. Wave 0 runs and drains alone; once its rows are consumed,
+    * every later wave's `toLocalIterator` starts at once
+    * ([[WaveScheduler]]) — that runs the wave's AQE query stages and
+    * hands back the lazy iterator, so the consumer still drains one
+    * partition in flight per wave and no batch is collected whole. */
   def streamRows(batches: Iterator[ReplayBatch])
-      : Iterator[(Int, Boolean, org.apache.spark.sql.Row)] =
-    batches.flatMap { b =>
-      import scala.jdk.CollectionConverters._
-      b.df.toLocalIterator().asScala
+      : WaveScheduler.Replay[(Int, Boolean, org.apache.spark.sql.Row)] = {
+    import scala.jdk.CollectionConverters._
+    WaveScheduler.inReplayOrder(batches.map(b =>
+      WaveScheduler.Wave(b.df, (df: DataFrame) => (b, df.toLocalIterator()))
+    )) { case (b, rows) =>
+      rows.asScala
         .map(r => (r.getInt(r.fieldIndex(REPLAY_SEQ)), b.sealedBatch, r))
     }
+  }
 
   /** The grouping keys of `e` that actually reach its chart output under
     * a consuming output's `grouping` context. Zero live keys means the

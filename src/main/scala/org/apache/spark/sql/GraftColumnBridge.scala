@@ -38,6 +38,16 @@ object GraftColumnBridge {
       case _ => None
     }
 
+  /** Run `body` on `exec` with the calling thread's Spark local
+    * properties (job group, scheduler pool, job tags) and `spark` as the
+    * active session — `SQLExecution.withThreadLocalCaptured` wants the
+    * classic session type. */
+  def withThreadLocalCaptured[T](spark: SparkSession,
+      exec: java.util.concurrent.ExecutorService)(body: => T)
+      : java.util.concurrent.CompletableFuture[T] =
+    execution.SQLExecution.withThreadLocalCaptured(
+      spark.asInstanceOf[classic.SparkSession], exec)(body)
+
   /** Register a function into an ALREADY-RUNNING session's registry
     * (SparkSessionExtensions only apply to sessions built after
     * withExtensions; this covers the getOrCreate-reuse case). */

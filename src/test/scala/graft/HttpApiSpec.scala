@@ -306,8 +306,8 @@ class HttpApiSpec extends AnyFunSuite {
   test("a client disconnect cancels the request's remaining Spark work " +
     "(job group teardown, the engine half of stream abort)") {
     // 144 single-interval replay groups in 8 waves. Every row after the
-    // first group costs 3 s, so the second wave's job runs for seconds
-    // with nothing to write; the client reads ONE event and slams the
+    // first group costs 3 s, so the later waves run for seconds with
+    // nothing to write; the client reads ONE event and slams the
     // socket. Only the heartbeat can notice then: its write fails within
     // ~100 ms and cancels the job group, so the group's jobs must stop
     // almost immediately.
@@ -351,9 +351,9 @@ class HttpApiSpec extends AnyFunSuite {
       val at1800 = tracker.getActiveJobIds().length
       assert(at1800 == 0,
         s"jobs still active 1.8s after disconnect: $at1800 (at600=$at600)")
-      // without cancellation the second wave would still be running
-      // (3 s a row); with it the handler thread dies on the next write
-      // and no further wave jobs launch
+      // without cancellation the later waves would still be running
+      // (3 s a row); with it their jobs, and any they would submit next,
+      // die with the request's job group
     } finally api.stop()
   }
 
@@ -387,6 +387,61 @@ class HttpApiSpec extends AnyFunSuite {
       assert(sseEvents(capped).count(n =>
         Option(n.get("type")).exists(_.asText() == "data")) == 1)
     } finally api.stop()
+  }
+
+  test("a tags request that reaches its limit leaves no replay wave " +
+    "running: every job of the request ends within ~1 s of the response") {
+    // 144 single-interval (20 min) replay groups in 8 waves, each group
+    // with one fresh `slot` value. A UDF on the event time makes chosen
+    // rows slow; the frame is RDD-backed so it runs in tasks (over a
+    // local relation the optimizer would evaluate it at planning time).
+    //  - limit=1 is met by group 0 while every later row costs 3 s;
+    //  - limit=2 is met by wave 1 (groups 1-2) while the last wave holds
+    //    a 10 s row — only the request's cancel on exit can stop it. One
+    //    slow task, so the request's other jobs keep the remaining cores.
+    val raw = (0 until 480).map { i =>
+      ((base + i * 6L * 60000L) * 1000000L, s"t${i * 6 / 20}", 1.0)
+    }.toDF("ts", "slot", "value")
+    val frame = spark.createDataFrame(raw.rdd, raw.schema)
+    def slowFrom(fromMs: Long, sleepMs: Long): Telemetry = {
+      val slow = udf { (ms: Long) =>
+        if (ms >= fromMs) Thread.sleep(sleepMs)
+        ms
+      }
+      Telemetry(frame, slow(expr("ts div 1000000")),
+        (s, e) => col("ts") >= s * 1000000L && col("ts") < e * 1000000L,
+        col("value"), None)
+    }
+    val span = ReplaySequencer.SegmentSpan("s", base, base + 48 * hour)
+    val cases = Seq(
+      1 -> slowFrom(base + 20 * 60000L, 3000),
+      2 -> slowFrom(base + 479 * 6L * 60000L, 10000))
+    for ((limit, slowTel) <- cases) {
+      val api = new QueryHttpApi(_ => slowTel, segments = Seq(span),
+        minGroupSize = 1,
+        now = () => java.time.Instant.ofEpochMilli(base + 48 * hour))
+      val port = api.start(0)
+      try JobLog.during(spark.sparkContext) { log =>
+        val (code, text) = http(port, "POST", "/api/v1/tags/logs" +
+          s"?tagName=slot&limit=$limit&s=$base&e=${base + 48 * hour}",
+          """{"id": "a", "dataset": "logs",
+            |  "filter": {"k": "slot", "op": "exists"}}""".stripMargin)
+        val closed = System.currentTimeMillis()
+        assert(code == 200)
+        val evs = sseEvents(text)
+        assert(evs.last.get("type").asText() == "done")
+        assert(evs.filter(n => Option(n.get("type"))
+            .exists(_.asText() == "data"))
+          .map(_.get("message").get("slot").asText()) ==
+          (0 until limit).map(i => s"t$i"))
+        Thread.sleep(1500)
+        val jobs = log.all.filter(j =>
+          Option(j.group).exists(_.startsWith("graft-sse-")))
+        assert(jobs.nonEmpty)
+        assert(jobs.forall(_.end <= closed + 1000),
+          s"limit=$limit: response closed at $closed\n" + jobs.mkString("\n"))
+      } finally api.stop()
+    }
   }
 
   test("multi-tenant: Bearer key scopes every route to that tenant's " +
@@ -514,8 +569,8 @@ class HttpApiSpec extends AnyFunSuite {
 
   test("two concurrent SSE streams both progress to done with " +
     "heartbeats — one stream cannot starve or wedge the other") {
-    // 144 single-interval replay groups each (8 sequential waves per
-    // stream) + 50 ms heartbeats: the pooled dispatcher, per-request
+    // 144 single-interval replay groups each (8 waves per stream) +
+    // 50 ms heartbeats: the pooled dispatcher, per-request
     // FAIR pools, and the shared heartbeat scheduler (writes dispatched
     // off-thread) must service both sockets side by side
     val span = ReplaySequencer.SegmentSpan("s", base, base + 48 * hour)

@@ -7,7 +7,7 @@ import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ast.{ASTInput, AstJson}
-import graft.engine.{QueryEngine, ReplaySequencer, Telemetry}
+import graft.engine.{QueryEngine, ReplaySequencer, Telemetry, WaveScheduler}
 import graft.engine.ReplaySequencer.SegmentSpan
 
 /** Replay waves: incremental delivery runs 1, 2, 4, … replay groups per
@@ -309,5 +309,114 @@ class ReplayWaveSpec extends AnyFunSuite {
       assert(one > 0)
       assert(replay <= 5 * one, s"replay ran $replay jobs, one group $one")
     } finally sc.removeSparkListener(listener)
+  }
+
+  // ------------------------------------------------------------ schedule
+
+  private val sumByService = AstJson.parseAstInput(
+    """{"baseExpressions": {"a": {"dataset": "logs",
+      |  "filter": {"k": "service", "op": "exists"},
+      |  "chart": {"aggregation": "sum", "groupBys": ["service"]}
+      |}}}""".stripMargin)
+
+  /** Run `body` under job group `group`, scheduler pool `pool` and
+    * interrupt-on-cancel, as `QueryHttpApi` runs a request. */
+  private def asCaller[T](group: String, pool: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    sc.setJobGroup(group, group, interruptOnCancel = true)
+    sc.setLocalProperty("spark.scheduler.pool", pool)
+    try body finally {
+      sc.clearJobGroup()
+      sc.setLocalProperty("spark.scheduler.pool", null)
+    }
+  }
+
+  test("an 18-group chart replay runs wave 0 alone, then overlaps the " +
+    "later waves under the caller's job group and pool; 20 jobs") {
+    val t = tel(tagEvents)
+    val span = Seq(SegmentSpan("s", base, base + 18 * hour))
+    def replay(): Unit = QueryEngine.streamRows(QueryEngine
+      .evaluateIncremental(_ => t, sumByService, base, base + 18 * hour,
+        hour, span)).foreach(_ => ())
+    replay() // warm: no first compiles inside the logged run
+    val oneGroup = JobLog.during(spark.sparkContext) { log =>
+      asCaller("wave-one", "wave-pool") {
+        val it = QueryEngine.evaluate(_ => t, sumByService, base,
+          base + hour, hour).toLocalIterator()
+        while (it.hasNext) it.next()
+      }
+      log.all.size
+    }
+    val jobs = JobLog.during(spark.sparkContext) { log =>
+      asCaller("wave-schedule", "wave-pool")(replay())
+      log.all
+    }
+    // 5 waves × (aggregate stage, sort sampling, sort stage, drain): the
+    // drain reuses the stages its wave's pool task ran, none runs twice
+    assert(jobs.size === 20, jobs.mkString("\n"))
+    assert(jobs.forall(j => j.group == "wave-schedule" &&
+      j.pool == "wave-pool"), jobs.mkString("\n"))
+    val pooled = jobs.filter(
+      _.tags.exists(_.startsWith(WaveScheduler.JobTagPrefix)))
+    assert(pooled.nonEmpty)
+    // wave 0 runs on the caller, before anything is submitted to the pool
+    val (wave0, later) = jobs.span(j => !pooled.contains(j))
+    assert(wave0.size === oneGroup, jobs.mkString("\n"))
+    assert(later.map(_.start).min >= wave0.map(_.end).max,
+      jobs.mkString("\n"))
+    assert(pooled.combinations(2).exists { case Seq(a, b) => a.overlaps(b) },
+      s"no two later-wave jobs overlap:\n${jobs.mkString("\n")}")
+  }
+
+  test("a failing wave 2 surfaces its own error from the chart, tags and " +
+    "cardinality iterators promptly; no job of the caller outlives it") {
+    // 18 hourly groups → waves [0] [1-2] [3-6] [7-14] [15-17]. Rows of
+    // hours 3-6 throw inside a UDF; one row of the last wave sleeps 20 s,
+    // so that wave is still running when wave 2 fails. An RDD-backed
+    // frame keeps the UDF in tasks: over a local relation the optimizer
+    // would evaluate it on the driver, at planning time.
+    val slowMs = tagEvents.select((col("ts") / 1000000L).cast("long"))
+      .as[Long].collect().filter(ms => (ms - base) / hour == 16).min
+    val (b, hr) = (base, hour) // the UDF must not capture the suite
+    val hostile = udf { (ms: Long) =>
+      val h = (ms - b) / hr
+      if (h >= 3 && h < 7) throw new IllegalStateException("wave-2 row")
+      if (ms == slowMs) Thread.sleep(20000)
+      ms
+    }
+    val t = Telemetry(spark.createDataFrame(tagEvents.rdd, tagEvents.schema),
+      hostile(expr("ts div 1000000")),
+      (s, e) => col("ts") >= s * 1000000L && col("ts") < e * 1000000L,
+      col("value"), Some(col("props")))
+    val span = Seq(SegmentSpan("s", base, base + 18 * hour))
+    val end = base + 18 * hour
+    val kinds: Seq[(String, () => Unit)] = Seq(
+      "chart" -> (() => QueryEngine.streamRows(QueryEngine
+        .evaluateIncremental(_ => t, sumByService, base, end, hour, span))
+        .foreach(_ => ())),
+      "tags" -> (() => QueryEngine.tagValuesIncremental(t, anyService,
+        "service", base, end, hour, span).foreach(_ => ())),
+      "cardinality" -> (() => QueryEngine.cardinalityIncremental(t,
+        anyService, Seq("user_id"), base, end, hour, span)
+        .foreach(_ => ())))
+    for ((kind, run) <- kinds) {
+      JobLog.during(spark.sparkContext) { log =>
+        val t0 = System.nanoTime()
+        val err = intercept[Exception](asCaller(kind, kind)(run()))
+        val secs = (System.nanoTime() - t0) / 1e9
+        assert(!err.isInstanceOf[java.util.concurrent.CompletionException],
+          kind)
+        assert(Iterator.iterate[Throwable](err)(_.getCause)
+          .takeWhile(_ != null)
+          .exists(c => String.valueOf(c.getMessage).contains("wave-2 row")),
+          s"$kind: $err")
+        val mine = log.all.filter(_.group == kind)
+        assert(secs < 15,
+          s"$kind: the error took $secs s:\n${mine.mkString("\n")}")
+        assert(mine.nonEmpty)
+        assert(mine.forall(_.end != Long.MaxValue),
+          s"$kind: jobs still running:\n${mine.mkString("\n")}")
+      }
+    }
   }
 }

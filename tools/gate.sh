@@ -5,9 +5,21 @@
 #   tools/gate.sh --quick    # compile + smoke only (mid-round iteration)
 #   tools/gate.sh --full     # fresh test suite + perfbench self-tests +
 #                            # Verify+oracle at sf0.01
+#   tools/gate.sh --serving  # compile + the serving-path specs only
+#                            # (replay waves, incremental delivery, HTTP/SSE)
 # Exit 0 = safe to snapshot; nonzero = DO NOT COMMIT the snapshot.
 set -euo pipefail
 cd "$(dirname "$0")/.."
+
+if [ "${1:-}" = "--serving" ]; then
+  # fast loop on the serving path; NOT a snapshot gate (no smoke, no
+  # oracle), so it never ends in "gate: PASS"
+  echo "== gate: sbt Test/compile + serving specs =="
+  sbt -batch Test/compile "testOnly graft.ReplayWaveSpec \
+    graft.IncrementalDeliverySpec graft.HttpApiSpec graft.api.SseStallSpec"
+  echo "== gate: serving specs green (not a snapshot gate) =="
+  exit 0
+fi
 
 if [ "${1:-}" != "--quick" ] && [ "${1:-}" != "--full" ]; then
   # a red test introduced by a late commit must not ship unnoticed
