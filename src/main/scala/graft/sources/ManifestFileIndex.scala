@@ -58,41 +58,9 @@ final class ManifestFileIndex(
 
   import ManifestFileIndex._
 
-  // One listStatus RPC per parent DIRECTORY (not one HEAD per segment —
-  // serial per-file getFileStatus against an object store would stall
-  // the driver for minutes at thousands of segments), directories
-  // fetched concurrently; files the manifest knows but the listing
-  // misses fall back to a direct lookup.
-  private val statuses: Map[String, FileStatus] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val byParent = manifest.map(_.file).groupBy(f => new Path(f).getParent)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(8, math.max(1, byParent.size)))
-    try {
-      import scala.jdk.CollectionConverters._
-      val tasks = byParent.toSeq.map { case (parent, files) =>
-        new java.util.concurrent.Callable[Seq[(String, FileStatus)]] {
-          override def call(): Seq[(String, FileStatus)] = {
-            val fs = parent.getFileSystem(conf)
-            // manifest strings may be unqualified; the listing is —
-            // key the lookup by the fully-qualified form of both
-            val wanted = files
-              .map(f => fs.makeQualified(new Path(f)).toString -> f).toMap
-            fs.listStatus(parent).toSeq
-              .flatMap(st => wanted.get(st.getPath.toString)
-                .map(orig => orig -> st))
-          }
-        }
-      }
-      val listed = pool.invokeAll(tasks.asJava).asScala
-        .flatMap(_.get()).toMap
-      val missing = manifest.map(_.file).toSet -- listed.keySet
-      listed ++ missing.map { f =>
-        val p = new Path(f)
-        f -> p.getFileSystem(conf).getFileStatus(p)
-      }
-    } finally pool.shutdown()
-  }
+  private val statuses: Map[String, FileStatus] =
+    listPaths(spark, manifest.map(_.file))
+      .map { case (f, sts) => f -> sts.head }.toMap
 
   override def rootPaths: Seq[Path] =
     manifest.map(s => new Path(s.file).getParent).distinct
@@ -218,15 +186,97 @@ object ManifestFileIndex {
     require(segs.nonEmpty, "empty manifest")
     val schema = dataSchema.getOrElse(
       spark.read.parquet(segs.head.file).schema)
-    val index = new ManifestFileIndex(spark, segs, tsCol, tsToMillis, indexed)
-    val rel = HadoopFsRelation(
+    frameOver(spark,
+      new ManifestFileIndex(spark, segs, tsCol, tsToMillis, indexed), schema)
+  }
+
+  /** DataFrame over the data files of `paths` (files or Spark output
+    * directories), listed by [[listPaths]] — no Spark listing job, which
+    * `spark.read.parquet` launches (one task per path) past 32 paths —
+    * with the schema inferred from their footers, merged across files
+    * when `mergeSchema` (else the first file's), as `spark.read.parquet`
+    * does. */
+  private[sources] def scanOf(spark: SparkSession, paths: Seq[String],
+      mergeSchema: Boolean): DataFrame = {
+    val files = listPaths(spark, paths).flatMap(_._2).distinctBy(_.getPath)
+    val schema = new ParquetFileFormat().inferSchema(spark,
+      Map("mergeSchema" -> mergeSchema.toString), files)
+    require(schema.isDefined,
+      s"no parquet data files under ${paths.take(3).mkString(", ")}")
+    frameOver(spark, new Listed(files), schema.get)
+  }
+
+  private def frameOver(spark: SparkSession, index: FileIndex,
+      schema: StructType): DataFrame =
+    GraftColumnBridge.ofRelation(spark, HadoopFsRelation(
       location = index,
       partitionSchema = new StructType(),
       dataSchema = schema,
       bucketSpec = None,
       fileFormat = new ParquetFileFormat(),
       options = Map.empty)(
-      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession])
-    GraftColumnBridge.ofRelation(spark, rel)
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]))
+
+  /** A flat file set listed up front: no pruning, no re-listing. */
+  private final class Listed(files: Seq[FileStatus]) extends FileIndex {
+    override val partitionSchema: StructType = new StructType()
+    override def rootPaths: Seq[Path] = files.map(_.getPath.getParent).distinct
+    override def inputFiles: Array[String] = files.map(_.getPath.toString).toArray
+    override def refresh(): Unit = ()
+    override def sizeInBytes: Long = files.map(_.getLen).sum
+    override def listFiles(partitionFilters: Seq[Expression],
+        dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
+      Seq(PartitionDirectory(InternalRow.empty, files.toArray))
   }
+
+  /** Each path with its data files, in input order. One listStatus RPC
+    * per parent DIRECTORY (not one HEAD per segment — serial per-file
+    * getFileStatus against an object store would stall the driver for
+    * minutes at thousands of segments), directories fetched concurrently;
+    * a path the listing misses falls back to a direct lookup. A path that
+    * names a directory expands to its files, skipping `_`/`.`-prefixed
+    * names (`_SUCCESS`, checksums) as Spark's listing does; a nested data
+    * directory (a partitioned layout) is rejected, not read partially. */
+  private[sources] def listPaths(spark: SparkSession,
+      paths: Seq[String]): Seq[(String, Seq[FileStatus])] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val byParent = paths.distinct.groupBy(f => new Path(f).getParent)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(
+      math.min(8, math.max(1, byParent.size)))
+    try {
+      import scala.jdk.CollectionConverters._
+      val tasks = byParent.toSeq.map { case (parent, ps) =>
+        new java.util.concurrent.Callable[Seq[(String, Seq[FileStatus])]] {
+          override def call(): Seq[(String, Seq[FileStatus])] = {
+            val fs = parent.getFileSystem(conf)
+            // input strings may be unqualified; the listing is — key the
+            // lookup by the fully-qualified form of both
+            val listed = fs.listStatus(parent)
+              .map(st => st.getPath.toString -> st).toMap
+            ps.map { p =>
+              val st = listed.getOrElse(
+                fs.makeQualified(new Path(p)).toString,
+                fs.getFileStatus(new Path(p)))
+              p -> (if (!st.isDirectory) Seq(st) else {
+                val kids = fs.listStatus(st.getPath).toSeq
+                  .filterNot(k => hidden(k.getPath.getName))
+                require(kids.forall(_.isFile),
+                  s"$p holds a nested directory; pass its files instead")
+                kids.sortBy(_.getPath.toString)
+              })
+            }
+          }
+        }
+      }
+      val byPath = pool.invokeAll(tasks.asJava).asScala.flatMap { f =>
+        try f.get() catch {
+          case e: java.util.concurrent.ExecutionException => throw e.getCause
+        }
+      }.toMap
+      paths.map(p => p -> byPath(p))
+    } finally pool.shutdown()
+  }
+
+  private def hidden(name: String): Boolean =
+    name.startsWith("_") || name.startsWith(".") || name.endsWith("._COPYING_")
 }

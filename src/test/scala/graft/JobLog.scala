@@ -7,8 +7,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
   SparkListenerJobStart}
 
 /** Every job a context starts while the log is attached: when it
-  * started and ended (the scheduler's clock, epoch ms) and the local
-  * properties it was submitted with. */
+  * started and ended (the scheduler's clock, epoch ms), the local
+  * properties it was submitted with and its task count. */
 final class JobLog(sc: SparkContext) extends SparkListener {
   import JobLog.Job
 
@@ -20,7 +20,8 @@ final class JobLog(sc: SparkContext) extends SparkListener {
       p.getProperty("spark.jobGroup.id"),
       p.getProperty("spark.scheduler.pool"),
       Option(p.getProperty("spark.job.tags"))
-        .map(_.split(",").toSet).getOrElse(Set.empty)))
+        .map(_.split(",").toSet).getOrElse(Set.empty),
+      e.stageInfos.map(_.numTasks).sum))
   }
 
   override def onJobEnd(e: SparkListenerJobEnd): Unit =
@@ -34,13 +35,14 @@ final class JobLog(sc: SparkContext) extends SparkListener {
 }
 
 object JobLog {
+  /** `tasks` sums the job's stages, skipped ones included. */
   final case class Job(id: Int, start: Long, group: String, pool: String,
-      tags: Set[String]) {
+      tags: Set[String], tasks: Int) {
     /** Long.MaxValue while the job runs. */
     @volatile var end: Long = Long.MaxValue
     def overlaps(o: Job): Boolean = start < o.end && o.start < end
     override def toString: String =
-      s"job $id [$start, $end] group=$group pool=$pool tags=$tags"
+      s"job $id [$start, $end] group=$group pool=$pool tags=$tags tasks=$tasks"
   }
 
   def during[T](sc: SparkContext)(f: JobLog => T): T = {

@@ -330,6 +330,117 @@ class SegmentIndexSpec extends AnyFunSuite {
     assert(pruned.sameElements(full))
   }
 
+  private def tempDir(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toString
+
+  private def parquetFiles(dir: String): Seq[String] =
+    new java.io.File(dir).listFiles.filter(_.getName.endsWith(".parquet"))
+      .map(_.getAbsolutePath).toSeq.sorted
+
+  /** The per-row build this index used to run, kept as the oracle: every
+    * row's fingerprint array, exploded, de-duplicated and joined to
+    * per-file bounds from a second scan. */
+  private def perRowManifest(files: Seq[String], indexed: Seq[String]) = {
+    val df = spark.read.option("mergeSchema", "true").parquet(files: _*)
+    val idx = indexed.filter(df.columns.toSet)
+    def fps(c: String) = concat(
+      array(lit(SegmentIndex.columnMarker(c))),
+      coalesce(
+        transform(graft.operators.Dedup.charNgrams(lower(col(c)), 3),
+          g => xxhash64(lit(c), g)),
+        array().cast("array<bigint>")))
+    val all =
+      if (idx.isEmpty) array().cast("array<bigint>")
+      else flatten(array(idx.map(fps): _*))
+    val base = df.select(input_file_name().as("file"),
+      col("ts").as("_ts_ms"), all.as("_fps"))
+    val bounds = base.groupBy(col("file")).agg(
+      count(lit(1)).as("row_count"),
+      min(col("_ts_ms")).as("min_ts"),
+      max(col("_ts_ms")).as("max_ts"))
+    val prints = base
+      .select(col("file"), explode(col("_fps")).as("fp")).distinct()
+      .groupBy(col("file")).agg(collect_set(col("fp")).as("fingerprints"))
+    bounds.join(prints, Seq("file"), "left")
+      .withColumn("fingerprints",
+        coalesce(col("fingerprints"), array().cast("array<bigint>")))
+  }
+
+  private def rowsOf(m: org.apache.spark.sql.DataFrame) =
+    m.select("file", "row_count", "min_ts", "max_ts", "fingerprints")
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
+        r.getLong(3), r.getSeq[Long](4).sorted))
+      .sortBy(_._1).toSeq
+
+  test("build is row-identical to the per-row formula on awkward values, " +
+    "merged schemas and mixed directory/file inputs") {
+    import spark.implicits._
+    val dir = tempDir("graft_seg_eq")
+    // a Spark output directory holding both indexed columns
+    Seq[(Long, String, String)](
+      (100L, "Checkout-API", "host-A"), (200L, null, "h"),
+      (300L, "", null), (400L, "a", "ab"), (500L, "ab", ""),
+      (600L, "Zürich-ÜBER", "日本語テキスト"), (700L, "checkout-api", "HOST-a"),
+      (800L, "ΣΊΣΥΦΟΣ", "naïve café"))
+      .toDF("ts", "service", "host")
+      .coalesce(1).write.parquet(s"$dir/both")
+    // plain files without `host`: its marker still lands (null values)
+    Seq[(Long, String)]((50L, "PAYMENT-svc"), (60L, "x"), (70L, null))
+      .toDF("ts", "service").coalesce(1).write.parquet(s"$dir/svc")
+    Seq[(Long, String)]((900L, "Ünïcödé-Svc"), (950L, "payment-SVC"))
+      .toDF("ts", "service").coalesce(1).write.parquet(s"$dir/svc2")
+    // zero rows: absent from the manifest, as before
+    Seq.empty[(Long, String)].toDF("ts", "service")
+      .coalesce(1).write.parquet(s"$dir/empty")
+    val inputs = Seq(s"$dir/both") ++ parquetFiles(s"$dir/svc") ++
+      parquetFiles(s"$dir/svc2") ++ parquetFiles(s"$dir/empty")
+    assert(parquetFiles(s"$dir/empty").size == 1)
+    for (indexed <- Seq(Seq("service", "host"), Seq("host"), Seq.empty)) {
+      val got = rowsOf(SegmentIndex.build(spark, inputs, "ts", identity,
+        indexed))
+      val want = rowsOf(perRowManifest(inputs, indexed))
+      assert(got == want, s"indexed=$indexed")
+      assert(got.size == 3 && !got.exists(_._1.contains("/empty/")), got)
+    }
+  }
+
+  test("build refuses an empty file list with a clear message") {
+    val e = intercept[IllegalArgumentException](
+      SegmentIndex.build(spark, Nil, "ts", identity, Seq("service")))
+    assert(e.getMessage.contains("no segment files"), e.getMessage)
+  }
+
+  test("build lists on the driver and reads the files in ONE scan") {
+    // 40 files: past Spark's 32-path threshold, where spark.read.parquet
+    // runs a listing job with one task per path
+    val dir = tempDir("graft_seg_jobs") + "/segs"
+    spark.range(0, 400)
+      .select(col("id").as("ts"),
+        concat(lit("svc-"), (col("id") % 7).cast("string")).as("service"))
+      .repartition(40).write.parquet(dir)
+    val files = parquetFiles(dir)
+    assert(files.size == 40)
+    val (m, jobs) = JobLog.during(spark.sparkContext) { log =>
+      val m = SegmentIndex.build(spark, files, "ts", identity, Seq("service"))
+      m.collect()
+      (m, log.all)
+    }
+    assert(jobs.nonEmpty && jobs.forall(_.tasks < files.size),
+      jobs.mkString("\n"))
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{
+      AdaptiveSparkPlanExec, QueryStageExec}
+    def scans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
+      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
+      case q: QueryStageExec => scans(q.plan)
+      case f: FileSourceScanExec => Seq(f)
+      case other => other.children.flatMap(scans)
+    }
+    assert(scans(m.queryExecution.executedPlan).size == 1,
+      m.queryExecution.executedPlan)
+    assert(rowsOf(m).map(_._2).sum == 400L)
+  }
+
   test("manifest artifact signature rotates on a one-byte file change") {
     val dir = java.nio.file.Files.createTempDirectory("graft_sig").toFile
     val f = new java.io.File(dir, "seg.parquet")
