@@ -357,23 +357,31 @@ final class QueryHttpApi(
       emit(payload("_", "timeseries", m))
     }
 
+    def replay() = QueryEngine.evaluateIncremental(
+      tables, ast, startMs, endMs, stepMs, segments, minGroupSize)
+
     if (p.get("explain").exists(_.toBoolean)) {
       // plan-only mode: one "explain" event with the formatted physical
-      // plan (pushdown/pruning/codegen spans visible to the operator)
-      // and the replay-group and wave counts the incremental path would
-      // run (one query per wave) — nothing executes, so this answers in
-      // planning time even when the window covers months of segments
-      val df = QueryEngine.evaluate(tables, ast, startMs, endMs, stepMs)
+      // plan of the frame this route runs — wave 0's on the incremental
+      // path (later waves differ only in their time hull), none when no
+      // replay group overlaps the window — and the replay-group and
+      // wave counts (one query per wave). Nothing executes, so this
+      // answers in planning time even when the window covers months of
+      // segments
       val m = new java.util.LinkedHashMap[String, AnyRef]()
       m.put("stepMs", Long.box(stepMs))
-      if (segments.nonEmpty) {
-        val groups = ReplaySequencer.sequence(
-          segments, startMs, endMs, stepMs, minGroupSize)
-        m.put("replayGroups", Int.box(groups.size))
-        m.put("replayWaves", Int.box(ReplaySequencer.waves(groups).size))
-      }
-      m.put("plan",
-        org.apache.spark.sql.GraftColumnBridge.explainString(df))
+      val df =
+        if (segments.isEmpty)
+          Some(QueryEngine.evaluateRuns(tables, ast, startMs, endMs, stepMs))
+        else {
+          val groups = ReplaySequencer.sequence(
+            segments, startMs, endMs, stepMs, minGroupSize)
+          m.put("replayGroups", Int.box(groups.size))
+          m.put("replayWaves", Int.box(ReplaySequencer.waves(groups).size))
+          replay().nextOption().map(_.df)
+        }
+      df.foreach(d => m.put("plan",
+        org.apache.spark.sql.GraftColumnBridge.explainString(d)))
       emit(payload("_", "explain", m))
       return
     }
@@ -382,18 +390,18 @@ final class QueryHttpApi(
       // incremental: sealed replay groups stream in waves of 1, 2, 4, …
       // groups; wave 0 runs alone, then every later wave at once, and
       // rows go out in replay order as the socket drains
-      drain(QueryEngine.streamRows(QueryEngine.evaluateIncremental(
-          tables, ast, startMs, endMs, stepMs, segments, minGroupSize))) {
+      drain(QueryEngine.streamRows(replay())) {
         case (_, _, r) => emitChartRow(r)
       }
     } else {
-      // batch path drains through toLocalIterator like the incremental
-      // one — one partition in flight, never the whole chart buffered on
-      // the driver (a year at 1h step × a high-cardinality groupBy would
-      // otherwise sit in driver memory before the first byte goes out)
-      import scala.jdk.CollectionConverters._
-      QueryEngine.evaluate(tables, ast, startMs, endMs, stepMs)
-        .toLocalIterator().asScala.foreach(emitChartRow)
+      // batch path: the same driver-side merge as a replay wave, so the
+      // whole chart (steps × series rows) sits on the driver before the
+      // first byte goes out — bounded by spark.driver.maxResultSize,
+      // which fails the request loudly (see QueryEngine.mergeRuns)
+      QueryEngine.mergeRuns(
+          QueryEngine.evaluateRuns(tables, ast, startMs, endMs, stepMs),
+          QueryEngine.ChartOrder)
+        .foreach(emitChartRow)
     }
 
     // auto-exemplars beside every returning log/trace chart expression

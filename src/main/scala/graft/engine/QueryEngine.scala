@@ -1,7 +1,9 @@
 package graft.engine
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType,
+  StructType}
 import graft.ast._
 import graft.compile.{ComputeCompiler, FilterCompiler}
 
@@ -619,8 +621,32 @@ object QueryEngine {
     * its labels never need the id). When a caller unions multiple
     * returning expressions that share a grouping, the rows interleave
     * under identical labels — evaluate each expression separately (or
-    * combine via `formulae`) if per-expression identity matters. */
+    * combine via `formulae`) if per-expression identity matters.
+    *
+    * Rows are ordered by [[ChartOrder]] with a global sort; the serving
+    * path takes [[evaluateRuns]] and merges on the driver instead. */
   def evaluate(tables: String => Telemetry, ast: ASTInput,
+      startMs: Long, endMs: Long, stepMs: Long): DataFrame =
+    chartRows(tables, ast, startMs, endMs, stepMs)
+      .orderBy(ChartOrder.map(col): _*)
+
+  /** The order [[evaluate]] delivers chart rows in. */
+  val ChartOrder: Seq[String] = Seq(STEP_TS, LABEL)
+
+  /** [[evaluate]]'s rows sorted within each partition by [[ChartOrder]]
+    * instead of globally: the frame the batch `/graph` route runs, in
+    * [[ChartOrder]] once [[mergeRuns]] merges it. No range-sampling job
+    * and no sort exchange. */
+  def evaluateRuns(tables: String => Telemetry, ast: ASTInput,
+      startMs: Long, endMs: Long, stepMs: Long): DataFrame =
+    chartRows(tables, ast, startMs, endMs, stepMs)
+      .sortWithinPartitions(ChartOrder.map(col): _*)
+
+  /** [[evaluate]]'s rows in no particular order. Its callers add their
+    * own sort: a global sort kept below a partition-local one is not
+    * removed by the optimizer, so the serving frames must not start
+    * from [[evaluate]]. */
+  private def chartRows(tables: String => Telemetry, ast: ASTInput,
       startMs: Long, endMs: Long, stepMs: Long): DataFrame = {
     val formulaNodes: List[(String, AstNode)] = ast.formulae.map { f =>
       f -> FormulaParser.parse(f, ast.baseExpressions)
@@ -680,7 +706,6 @@ object QueryEngine {
         .select(col(STEP_TS), col(GROUP_KEY), col(VALUE), col(LABEL))
     }
     (sharedDfs ++ perNodeDfs).reduceLeft(_ unionByName _)
-      .orderBy(STEP_TS, LABEL)
   }
 
   // ------------------------------------------- shared-scan multi-expression
@@ -1000,7 +1025,7 @@ object QueryEngine {
           o => o.getField("p"))).as("_o"))
       .select(col(STEP_TS), col("_o.k").as(GROUP_KEY),
         col("_o.v").as(VALUE), col("_o.l").as(LABEL))
-    // no orderBy here: evaluate() sorts once after unioning buckets
+    // no sort here: evaluate()'s callers sort once after the union
   }
 
   /** Combined result of one AST evaluation: the chart series stream plus
@@ -1064,10 +1089,12 @@ object QueryEngine {
   /** One incrementally-delivered result batch: the chart rows of ONE
     * replay wave ([[ReplaySequencer.waves]]) — groups `firstSeq` until
     * `firstSeq + groups.size` in replay order — evaluated as a single
-    * query. `df` is [[evaluate]]'s output plus [[REPLAY_SEQ]], ordered by
-    * (replay_seq, step_ts, label), so selecting one seq yields exactly
-    * that group's rows. `sealedBatch` = false only for the trailing live
-    * (unsealed) batch: one group covering the whole window. */
+    * query. `df` holds [[evaluate]]'s rows plus [[REPLAY_SEQ]], so
+    * selecting one seq yields exactly that group's rows. It is sorted
+    * WITHIN each partition by [[ReplayOrder]], not globally: the emit
+    * order comes from [[streamRows]], which merges the partitions on the
+    * driver. `sealedBatch` = false only for the trailing live (unsealed)
+    * batch: one group covering the whole window. */
   case class ReplayBatch(firstSeq: Int,
       groups: Seq[ReplaySequencer.ReplayGroup], sealedBatch: Boolean,
       df: DataFrame) {
@@ -1134,17 +1161,23 @@ object QueryEngine {
     * pulled and runs no job: [[streamRows]] runs wave 0 alone, then
     * every later wave at once ([[WaveScheduler]]), so the last group
     * arrives by the end of the slowest later wave, not of their sum. The
-    * ordered concatenation of all batches
-    * equals the batch [[evaluate]] exactly — pinned by
-    * IncrementalDeliverySpec, ReplayWaveSpec and the
+    * concatenation of all batches equals the batch [[evaluate]] exactly —
+    * pinned by IncrementalDeliverySpec, ReplayWaveSpec and the
     * `ast_incremental_chart` oracle.
+    *
+    * No wave sorts globally: its frame is sorted within each post-
+    * aggregate partition, and [[streamRows]] merges the partitions on
+    * the driver, as the reference's coordinator k-way merges its sorted
+    * worker streams (QueryEngineV2.scala:76-97). A wave is then its
+    * aggregate stage and one result job, with no range-sampling job and
+    * no sort exchange.
     *
     * Ordering contract (the reference's sealed-before-unsealed rule):
     * all sealed groups emit first, in replay order (forward: step ranges
     * strictly increasing; reverse: strictly decreasing — newest first,
     * the log-tail view); the live batch, when `liveTables` is given,
-    * emits LAST regardless of its time range. Rows are (replay_seq,
-    * step_ts, label)-ordered, so per-step delivery order matches the
+    * emits LAST regardless of its time range. [[streamRows]] emits rows
+    * in [[ReplayOrder]], so per-step delivery order matches the
     * reference's per-group mergeSorted emission. */
   def evaluateIncremental(tables: String => Telemetry, ast: ASTInput,
       startMs: Long, endMs: Long, stepMs: Long,
@@ -1154,14 +1187,14 @@ object QueryEngine {
       : Iterator[ReplayBatch] = {
     val groups = ReplaySequencer.sequence(
       segments, startMs, endMs, stepMs, minGroupSize, reverse)
-    def ordered(df: DataFrame, seq: Column): DataFrame =
+    def runs(df: DataFrame, seq: Column): DataFrame =
       df.withColumn(REPLAY_SEQ, seq).where(col(REPLAY_SEQ).isNotNull)
-        .orderBy(REPLAY_SEQ, STEP_TS, LABEL)
+        .sortWithinPartitions(ReplayOrder.map(col): _*)
     val sealedIt = ReplaySequencer.waves(groups.zipWithIndex).iterator
       .map { wave =>
         val (lo, hi) = hull(wave)
         ReplayBatch(wave.head._2, wave.map(_._1), sealedBatch = true,
-          ordered(evaluate(tables, ast, lo, hi, stepMs),
+          runs(chartRows(tables, ast, lo, hi, stepMs),
             bucketSeq(col(STEP_TS), stepMs, wave)))
       }
     liveTables match {
@@ -1170,7 +1203,7 @@ object QueryEngine {
         ReplayBatch(groups.size,
           Seq(ReplaySequencer.ReplayGroup(startMs, endMs, Nil)),
           sealedBatch = false,
-          ordered(evaluate(live, ast, startMs, endMs, stepMs),
+          runs(chartRows(live, ast, startMs, endMs, stepMs),
             lit(groups.size))))
     }
   }
@@ -1232,11 +1265,18 @@ object QueryEngine {
     * sorted order, out of the group's top [[DefaultTagLimit]] by count
     * (what [[tagValues]] keeps for the group alone) — a dropdown fills
     * from the first group while the rest of the window still replays.
-    * Each wave is one query: per-(seq, value) counts, ranked within each
-    * replay_seq by (count desc, value), cut at the limit and collected;
-    * wave 0 runs alone, then every later wave at once
-    * ([[WaveScheduler]]). The first-seen dedup stays on the consumer
-    * thread, in seq order. */
+    *
+    * Each wave is one query: per-(seq, value) counts, then each
+    * partition keeps its own top [[DefaultTagLimit]] per seq by (count
+    * desc, value). That cut is exact: the aggregate hash-partitions by
+    * (seq, value), so every count is complete in its partition and a
+    * value missing from its partition's top K is outside the group's
+    * too. The collected lists are merged into each group's top K on the
+    * driver, so the driver holds at most limit × partitions values per
+    * group, and no exchange by seq (a rank window) runs: a wave is its
+    * aggregate stage and one result job. Wave 0 runs alone, then every
+    * later wave at once ([[WaveScheduler]]). The merge and the
+    * first-seen dedup stay on the consumer thread, in seq order. */
   def tagValuesIncremental(tel: Telemetry, e: BaseExpr, tagName: String,
       startMs: Long, endMs: Long, stepMs: Long,
       segments: Seq[ReplaySequencer.SegmentSpan], minGroupSize: Int = 1)
@@ -1253,27 +1293,46 @@ object QueryEngine {
         if (!base.columns.contains(tagName) &&
             !e.syntheticFields.contains(tagName))
           WaveScheduler.Wave(base,
-            (_: DataFrame) => (wave, Array.empty[org.apache.spark.sql.Row]))
-        else WaveScheduler.Wave(base
-          .select(replaySeq(tel.tsMillis, wave).as(REPLAY_SEQ),
-            FilterCompiler.fieldCol(tagName).as("tagValue"))
-          .where(col(REPLAY_SEQ).isNotNull && col("tagValue").isNotNull)
-          .groupBy(REPLAY_SEQ, "tagValue")
-          .agg(count(lit(1)).as("count"))
-          .withColumn("_rk", row_number().over(
-            org.apache.spark.sql.expressions.Window
-              .partitionBy(REPLAY_SEQ).orderBy(desc("count"), col("tagValue"))))
-          .where(col("_rk") <= DefaultTagLimit),
-          (df: DataFrame) => (wave, df.collect()))
+            (_: DataFrame) => (wave, Array.empty[Row]))
+        else {
+          val counts = base
+            .select(replaySeq(tel.tsMillis, wave).as(REPLAY_SEQ),
+              FilterCompiler.fieldCol(tagName).as("tagValue"))
+            .where(col(REPLAY_SEQ).isNotNull && col("tagValue").isNotNull)
+            .groupBy(REPLAY_SEQ, "tagValue")
+            .agg(count(lit(1)).as("count"))
+            .sortWithinPartitions(col(REPLAY_SEQ), desc("count"),
+              col("tagValue"))
+          val limit = DefaultTagLimit
+          WaveScheduler.Wave(counts.mapPartitions { (rows: Iterator[Row]) =>
+              // a partition's rows arrive grouped by seq
+              var seq, n = -1
+              rows.filter { r =>
+                if (r.getInt(0) != seq) { seq = r.getInt(0); n = 0 }
+                n += 1
+                n <= limit
+              }
+            }(Encoders.row(counts.schema)),
+            (df: DataFrame) => (wave, df.collect()))
+        }
       }
     WaveScheduler.inReplayOrder(waves) { case (wave, rows) =>
-      val byGroup = rows.toSeq.groupMap(_.getInt(0))(_.getString(1))
+      val byGroup = rows.toSeq.groupBy(_.getInt(0))
       wave.iterator.map { case (_, i) =>
-        val fresh = byGroup.getOrElse(i, Nil).filterNot(seen.contains).sorted
+        val top = byGroup.getOrElse(i, Nil).sorted(tagRank)
+          .take(DefaultTagLimit).map(_.getString(1))
+        val fresh = top.filterNot(seen.contains).sorted
         seen ++= fresh
         (i, fresh)
       }
     }
+  }
+
+  /** [[tagValues]]' order on (seq, value, count) rows: count desc, then
+    * value as Spark sorts strings. */
+  private val tagRank: Ordering[Row] = (a, b) => {
+    val c = java.lang.Long.compare(b.getLong(2), a.getLong(2))
+    if (c != 0) c else compareUtf8(a.getString(1), b.getString(1))
   }
 
   /** Incremental exemplar delivery — the reference streams exemplar
@@ -1302,20 +1361,87 @@ object QueryEngine {
         (i, exemplars(tel, e, g.startMs, g.endMs))
       }
 
-  /** Row-level SSE-style emission, in (replay_seq, step_ts, label)
-    * order. Wave 0 runs and drains alone; once its rows are consumed,
-    * every later wave's `toLocalIterator` starts at once
-    * ([[WaveScheduler]]) — that runs the wave's AQE query stages and
-    * hands back the lazy iterator, so the consumer still drains one
-    * partition in flight per wave and no batch is collected whole. */
+  /** The order [[streamRows]] emits chart rows in. */
+  val ReplayOrder: Seq[String] = REPLAY_SEQ +: ChartOrder
+
+  /** Row-level SSE-style emission, (seq, sealed, row) in [[ReplayOrder]].
+    * Each wave's task runs [[mergeRuns]] over its batch: one result job
+    * fetches the wave's sorted partitions and the merge runs in the same
+    * task, so a later wave's merge overlaps the other waves' jobs. Wave
+    * 0 runs and drains alone; once its rows are consumed, every later
+    * wave starts at once ([[WaveScheduler]]). The consumer holds a
+    * wave's rows on the driver while it emits them (see [[mergeRuns]]). */
   def streamRows(batches: Iterator[ReplayBatch])
-      : WaveScheduler.Replay[(Int, Boolean, org.apache.spark.sql.Row)] = {
-    import scala.jdk.CollectionConverters._
+      : WaveScheduler.Replay[(Int, Boolean, Row)] =
     WaveScheduler.inReplayOrder(batches.map(b =>
-      WaveScheduler.Wave(b.df, (df: DataFrame) => (b, df.toLocalIterator()))
-    )) { case (b, rows) =>
-      rows.asScala
+      WaveScheduler.Wave(b.df,
+        (df: DataFrame) => (b, mergeRuns(df, ReplayOrder))))) {
+      case (b, rows) => rows.iterator
         .map(r => (r.getInt(r.fieldIndex(REPLAY_SEQ)), b.sealedBatch, r))
+    }
+
+  /** The rows of `df` in the order `df.orderBy(keys)` gives — ascending,
+    * nulls first, strings in UTF-8 byte order — without a global sort.
+    * The serving path's one way to order a result: `df` comes sorted
+    * within each partition by `keys` ([[evaluateRuns]], a
+    * [[ReplayBatch]]), one job collects every partition, and a TimSort
+    * on the driver finds the sorted runs the partitions arrive as and
+    * merges them. Any frame gives the right order; an unsorted one only
+    * costs a full sort on the driver.
+    *
+    * Memory: the whole result sits on the driver while it is merged and
+    * emitted (a `toLocalIterator` drain would hold one partition at a
+    * time). That is the bound every `collect()` on the serving path (tags
+    * and cardinality waves) lives under: chart rows are steps × series,
+    * and a result past `spark.driver.maxResultSize` fails the request
+    * loudly instead of growing the heap. */
+  def mergeRuns(df: DataFrame, keys: Seq[String]): Array[Row] = {
+    val rows = df.collect()
+    java.util.Arrays.sort(rows, rowOrder(df.schema, keys))
+    rows
+  }
+
+  /** Spark's ascending order over key columns of collected rows: nulls
+    * first, then by value. Only the sort-key types the serving path
+    * has (int seq, long step, string label) are supported. */
+  private def rowOrder(schema: StructType, keys: Seq[String])
+      : java.util.Comparator[Row] =
+    keys.map { k =>
+      val i = schema.fieldIndex(k)
+      val byValue: (Row, Row) => Int = schema(i).dataType match {
+        case IntegerType =>
+          (a, b) => Integer.compare(a.getInt(i), b.getInt(i))
+        case LongType =>
+          (a, b) => java.lang.Long.compare(a.getLong(i), b.getLong(i))
+        case StringType =>
+          (a, b) => compareUtf8(a.getString(i), b.getString(i))
+        case t => throw new IllegalArgumentException(
+          s"no driver-side order for sort key $k of type $t")
+      }
+      val c: java.util.Comparator[Row] = (a, b) =>
+        if (a.isNullAt(i)) { if (b.isNullAt(i)) 0 else -1 }
+        else if (b.isNullAt(i)) 1
+        else byValue(a, b)
+      c
+    }.reduceLeft(_ thenComparing _)
+
+  /** `a` against `b` in the order of their UTF-8 bytes, which is code
+    * point order and how Spark sorts strings. `String.compareTo` compares
+    * UTF-16 units, which differs only where a surrogate (half of a code
+    * point past U+FFFF) meets a unit in U+E000–U+FFFF: moving the
+    * surrogates above that range restores code point order without
+    * encoding either string. */
+  private[graft] def compareUtf8(a: String, b: String): Int = {
+    val n = math.min(a.length, b.length)
+    var i = 0
+    while (i < n && a.charAt(i) == b.charAt(i)) i += 1
+    if (i == n) Integer.compare(a.length, b.length)
+    else {
+      val (x, y) = (a.charAt(i).toInt, b.charAt(i).toInt)
+      if (x >= 0xD800 && y >= 0xD800) {
+        def shift(c: Int) = if (c >= 0xE000) c - 0x800 else c + 0x2000
+        shift(x) - shift(y)
+      } else x - y
     }
   }
 

@@ -108,6 +108,11 @@ class HttpApiSpec extends AnyFunSuite {
       // the formatted plan carries the chart shape: step bucketing and
       // the partial/final aggregate pair
       assert(plan.contains("HashAggregate"), plan.take(400))
+      // it is the replay wave's frame the route runs — sorted within
+      // partitions and merged on the driver — not the globally sorted
+      // batch evaluate
+      assert(plan.contains(QueryEngine.REPLAY_SEQ), plan)
+      assert(!plan.toLowerCase.contains("rangepartitioning"), plan)
       assert(m.get("stepMs").asLong() ==
         graft.functions.TimeRange.autoStepMillis(base, base + 48 * hour))
       val groups = ReplaySequencer.sequence(Seq(span), base,

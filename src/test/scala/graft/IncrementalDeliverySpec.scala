@@ -323,8 +323,7 @@ class IncrementalDeliverySpec extends AnyFunSuite {
     assert(concat === whole)
   }
 
-  test("streamRows delivers (seq, sealed, row) in batch order without " +
-    "collecting any batch") {
+  test("streamRows delivers (seq, sealed, row) in replay order") {
     val ev = mkEvents(120)
     val bounds = ev.agg(org.apache.spark.sql.functions.min(col("ts")), org.apache.spark.sql.functions.max(col("ts"))).head()
     val span = SegmentSpan("s", bounds.getLong(0) / 1000000L,
@@ -334,12 +333,15 @@ class IncrementalDeliverySpec extends AnyFunSuite {
       _ => tel(ev), AST, base, base + 120L * 97 * 60000, 3600000L,
       Seq(span), minGroupSize = 48)).toList
     assert(rows.nonEmpty)
-    // seq non-decreasing; within a batch, step_ts non-decreasing
+    // seq non-decreasing; within a seq, (step_ts, label) non-decreasing
     rows.sliding(2).foreach {
       case List((s1, _, r1), (s2, _, r2)) =>
         assert(s1 <= s2)
-        if (s1 == s2)
-          assert(r1.getAs[Long]("step_ts") <= r2.getAs[Long]("step_ts"))
+        if (s1 == s2) {
+          val (t1, t2) = (r1.getAs[Long]("step_ts"), r2.getAs[Long]("step_ts"))
+          assert(t1 < t2 || t1 == t2 &&
+            r1.getAs[String]("label") <= r2.getAs[String]("label"))
+        }
       case _ =>
     }
   }

@@ -332,28 +332,20 @@ class ReplayWaveSpec extends AnyFunSuite {
   }
 
   test("an 18-group chart replay runs wave 0 alone, then overlaps the " +
-    "later waves under the caller's job group and pool; 20 jobs") {
+    "later waves under the caller's job group and pool; 10 jobs") {
     val t = tel(tagEvents)
     val span = Seq(SegmentSpan("s", base, base + 18 * hour))
     def replay(): Unit = QueryEngine.streamRows(QueryEngine
       .evaluateIncremental(_ => t, sumByService, base, base + 18 * hour,
         hour, span)).foreach(_ => ())
     replay() // warm: no first compiles inside the logged run
-    val oneGroup = JobLog.during(spark.sparkContext) { log =>
-      asCaller("wave-one", "wave-pool") {
-        val it = QueryEngine.evaluate(_ => t, sumByService, base,
-          base + hour, hour).toLocalIterator()
-        while (it.hasNext) it.next()
-      }
-      log.all.size
-    }
     val jobs = JobLog.during(spark.sparkContext) { log =>
       asCaller("wave-schedule", "wave-pool")(replay())
       log.all
     }
-    // 5 waves × (aggregate stage, sort sampling, sort stage, drain): the
-    // drain reuses the stages its wave's pool task ran, none runs twice
-    assert(jobs.size === 20, jobs.mkString("\n"))
+    // 5 waves × (aggregate stage, one result job over the sorted
+    // partitions): no range sampling, no sort exchange
+    assert(jobs.size === 10, jobs.mkString("\n"))
     assert(jobs.forall(j => j.group == "wave-schedule" &&
       j.pool == "wave-pool"), jobs.mkString("\n"))
     val pooled = jobs.filter(
@@ -361,11 +353,61 @@ class ReplayWaveSpec extends AnyFunSuite {
     assert(pooled.nonEmpty)
     // wave 0 runs on the caller, before anything is submitted to the pool
     val (wave0, later) = jobs.span(j => !pooled.contains(j))
-    assert(wave0.size === oneGroup, jobs.mkString("\n"))
+    assert(wave0.size === 2, jobs.mkString("\n"))
     assert(later.map(_.start).min >= wave0.map(_.end).max,
       jobs.mkString("\n"))
     assert(pooled.combinations(2).exists { case Seq(a, b) => a.overlaps(b) },
       s"no two later-wave jobs overlap:\n${jobs.mkString("\n")}")
+  }
+
+  test("an 18-group tags replay runs 10 jobs: per wave its aggregate " +
+    "stage and one result job, no exchange by replay_seq") {
+    val t = tel(tagEvents)
+    val span = Seq(SegmentSpan("s", base, base + 18 * hour))
+    def replay(): Unit = QueryEngine.tagValuesIncremental(t, anyService,
+      "service", base, base + 18 * hour, hour, span).foreach(_ => ())
+    replay() // warm
+    val jobs = JobLog.during(spark.sparkContext) { log =>
+      asCaller("tags-schedule", "wave-pool")(replay())
+      log.all
+    }
+    assert(jobs.size === 10, jobs.mkString("\n"))
+    assert(jobs.forall(_.group == "tags-schedule"), jobs.mkString("\n"))
+  }
+
+  /** Global sorts and range exchanges in an executed adaptive plan:
+    * its final plan, query stages included. */
+  private def globalSorts(df: DataFrame): Seq[String] = {
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.SortExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    object Walk extends
+      org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    Walk.collect(df.queryExecution.executedPlan) {
+      case s: SortExec if s.global => s.nodeName
+      case e: ShuffleExchangeExec
+          if e.outputPartitioning.isInstanceOf[RangePartitioning] =>
+        e.nodeName
+    }
+  }
+
+  test("neither the batch /graph frame nor a chart wave runs a global " +
+    "sort: no RangePartitioning exchange, no global SortExec") {
+    val t = tel(tagEvents)
+    val end = base + 18 * hour
+    val batch = QueryEngine.evaluateRuns(_ => t, sumByService, base, end, hour)
+    assert(QueryEngine.mergeRuns(batch, QueryEngine.ChartOrder).nonEmpty)
+    assert(globalSorts(batch) === Nil, batch.queryExecution.executedPlan)
+    val waves = QueryEngine.evaluateIncremental(_ => t, sumByService, base,
+      end, hour, Seq(SegmentSpan("s", base, end))).toList
+    assert(QueryEngine.streamRows(waves.iterator).size ===
+      QueryEngine.evaluate(_ => t, sumByService, base, end, hour).count())
+    waves.foreach(w =>
+      assert(globalSorts(w.df) === Nil, w.df.queryExecution.executedPlan))
+    // the check itself sees the batch reference's global sort
+    val sorted = QueryEngine.evaluate(_ => t, sumByService, base, end, hour)
+    sorted.collect()
+    assert(globalSorts(sorted).nonEmpty)
   }
 
   test("a failing wave 2 surfaces its own error from the chart, tags and " +

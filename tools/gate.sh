@@ -6,7 +6,8 @@
 #   tools/gate.sh --full     # fresh test suite + perfbench self-tests +
 #                            # Verify+oracle at sf0.01
 #   tools/gate.sh --serving  # compile + the serving-path specs only
-#                            # (replay waves, incremental delivery, HTTP/SSE,
+#                            # (replay waves, the driver-side merge,
+#                            # incremental delivery, HTTP/SSE,
 #                            # and the manifest build the set-up runs)
 # Exit 0 = safe to snapshot; nonzero = DO NOT COMMIT the snapshot.
 set -euo pipefail
@@ -17,8 +18,8 @@ if [ "${1:-}" = "--serving" ]; then
   # oracle), so it never ends in "gate: PASS"
   echo "== gate: sbt Test/compile + serving specs =="
   sbt -batch Test/compile "testOnly graft.ReplayWaveSpec \
-    graft.IncrementalDeliverySpec graft.HttpApiSpec graft.api.SseStallSpec \
-    graft.SegmentIndexSpec graft.ManifestFileIndexSpec"
+    graft.DriverMergeSpec graft.IncrementalDeliverySpec graft.HttpApiSpec \
+    graft.api.SseStallSpec graft.SegmentIndexSpec graft.ManifestFileIndexSpec"
   echo "== gate: serving specs green (not a snapshot gate) =="
   exit 0
 fi
