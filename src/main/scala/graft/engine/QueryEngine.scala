@@ -423,9 +423,10 @@ object QueryEngine {
       return base.limit(0)
         .select(lit(null).cast("string").as("tagValue"),
           lit(0L).as("count"))
+    // values go out as strings whatever the column's type
     base
       .where(FilterCompiler.fieldCol(tagName).isNotNull)
-      .groupBy(FilterCompiler.fieldCol(tagName).as("tagValue"))
+      .groupBy(FilterCompiler.fieldCol(tagName).cast("string").as("tagValue"))
       .agg(count(lit(1)).as("count"))
       .orderBy(desc("count"), col("tagValue"))
       .limit(limit)
@@ -1297,7 +1298,7 @@ object QueryEngine {
         else {
           val counts = base
             .select(replaySeq(tel.tsMillis, wave).as(REPLAY_SEQ),
-              FilterCompiler.fieldCol(tagName).as("tagValue"))
+              FilterCompiler.fieldCol(tagName).cast("string").as("tagValue"))
             .where(col(REPLAY_SEQ).isNotNull && col("tagValue").isNotNull)
             .groupBy(REPLAY_SEQ, "tagValue")
             .agg(count(lit(1)).as("count"))

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ast._
-import graft.sources.SegmentIndex
+import graft.sources.{ManifestFileIndex, SegmentIndex}
 
 /** Manifest-pruned segment scans (SURVEY.md S3/S4/U2) over a multi-file
   * segment directory (the same 4-file events layout the streaming entries
@@ -119,26 +119,16 @@ object SourceQueries {
           ts => expr("ts div 1000000"), Seq("event_type")))
     })
 
-  /** Pruning every file is a valid empty RESULT, not a schema-less one:
-    * downstream select/where and the oracle schema compare still need the
-    * entry's declared output shape. Spec `(name, ddlType)*`, e.g.
-    * `typedEmpty(s, "event_id" -> "bigint", "n" -> "bigint")`. */
-  private def typedEmpty(s: SparkSession, cols: (String, String)*): DataFrame =
-    s.createDataFrame(
-      s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(cols.map { case (n, t) =>
-        org.apache.spark.sql.types.StructField(n,
-          org.apache.spark.sql.types.DataType.fromDDL(t))
-      }))
+  /** The events segment dir as a [[ManifestFileIndex]] relation: the
+    * filters of a query over it prune segment files at plan time. A
+    * fully pruned scan is an empty frame of the segments' schema. */
+  private def events(s: SparkSession, dir: String): DataFrame =
+    ManifestFileIndex.relation(
+      s, manifest(s, dir), "ts", _ / 1000000L, Set("event_type"))
 
   /** S4+U2: trigram-pruned scan, then the full filter. */
   def s4_pruned_scan(s: SparkSession, dir: String): DataFrame = {
-    val clause = Filter("event_type", List("click"), Ops.EQ)
-    val df = SegmentIndex.scan(s, manifest(s, dir), Some(clause),
-        Set("event_type"), Long.MinValue, Long.MaxValue)
-      .getOrElse(return typedEmpty(s, "event_id" -> "bigint",
-        "user_id" -> "bigint", "value" -> "double"))
-    df.where(col("event_type") === "click")
+    events(s, dir).where(col("event_type") === "click")
       .select(col("event_id"), col("user_id"), col("value"))
       .orderBy("event_id")
   }
@@ -147,11 +137,9 @@ object SourceQueries {
   def s3_time_pruned(s: SparkSession, dir: String): DataFrame = {
     val start = java.time.Instant.parse("2024-01-10T00:00:00Z").toEpochMilli
     val end = java.time.Instant.parse("2024-01-12T00:00:00Z").toEpochMilli
-    val df = SegmentIndex.scan(s, manifest(s, dir), None,
-        Set("event_type"), start, end)
-      .getOrElse(return typedEmpty(s, "event_type" -> "string",
-        "n" -> "bigint"))
-    df.where(expr("ts div 1000000") >= start && expr("ts div 1000000") < end)
+    // on raw ts (nanos), the shape the relation's scan prunes on
+    events(s, dir)
+      .where(col("ts") >= start * 1000000L && col("ts") < end * 1000000L)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"))
       .orderBy("event_type")
@@ -161,12 +149,7 @@ object SourceQueries {
     * segment pruning (pruning is sound → oracle vs the full table; that
     * files are actually skipped is proven in SegmentIndexSpec). */
   def s6_regex_pruned(s: SparkSession, dir: String): DataFrame = {
-    val clause = Filter("event_type", List("pur.has[a-e]+"), Ops.REGEX)
-    val df = SegmentIndex.scan(s, manifest(s, dir), Some(clause),
-        Set("event_type"), Long.MinValue, Long.MaxValue)
-      .getOrElse(return typedEmpty(s, "event_id" -> "bigint",
-        "event_type" -> "string", "value" -> "double"))
-    df.where(col("event_type").rlike("(?i)pur.has[a-e]+"))
+    events(s, dir).where(col("event_type").rlike("(?i)pur.has[a-e]+"))
       .select(col("event_id"), col("event_type"), col("value"))
       .orderBy("event_id")
   }
@@ -176,12 +159,7 @@ object SourceQueries {
     * in SegmentIndexSpec; result equivalence proven here vs the full
     * table, since pruning is sound). */
   def s7_regex_alternation(s: SparkSession, dir: String): DataFrame = {
-    val clause = Filter("event_type", List("(purchase|signup)"), Ops.REGEX)
-    val df = SegmentIndex.scan(s, manifest(s, dir), Some(clause),
-        Set("event_type"), Long.MinValue, Long.MaxValue)
-      .getOrElse(return typedEmpty(s, "event_id" -> "bigint",
-        "event_type" -> "string", "value" -> "double"))
-    df.where(col("event_type").rlike("(?i)(purchase|signup)"))
+    events(s, dir).where(col("event_type").rlike("(?i)(purchase|signup)"))
       .select(col("event_id"), col("event_type"), col("value"))
       .orderBy("event_id")
   }
@@ -198,12 +176,7 @@ object SourceQueries {
     * (pruning is sound). */
   def s28_regex_class_pruned(s: SparkSession, dir: String): DataFrame = {
     val re = "(s[iu]gn[ou]p|er{2}or)"
-    val clause = Filter("event_type", List(re), Ops.REGEX)
-    val df = SegmentIndex.scan(s, manifest(s, dir), Some(clause),
-        Set("event_type"), Long.MinValue, Long.MaxValue)
-      .getOrElse(return typedEmpty(s, "event_id" -> "bigint",
-        "event_type" -> "string", "value" -> "double"))
-    df.where(col("event_type").rlike(s"(?i)$re"))
+    events(s, dir).where(col("event_type").rlike(s"(?i)$re"))
       .select(col("event_id"), col("event_type"), col("value"))
       .orderBy("event_id")
   }
@@ -220,12 +193,7 @@ object SourceQueries {
     * (pruning is sound). */
   def s30_regex_nested_pruned(s: SparkSession, dir: String): DataFrame = {
     val re = "(si(gn|ng)up|er(ro|or)r)"
-    val clause = Filter("event_type", List(re), Ops.REGEX)
-    val df = SegmentIndex.scan(s, manifest(s, dir), Some(clause),
-        Set("event_type"), Long.MinValue, Long.MaxValue)
-      .getOrElse(return typedEmpty(s, "event_id" -> "bigint",
-        "event_type" -> "string", "value" -> "double"))
-    df.where(col("event_type").rlike(s"(?i)$re"))
+    events(s, dir).where(col("event_type").rlike(s"(?i)$re"))
       .select(col("event_id"), col("event_type"), col("value"))
       .orderBy("event_id")
   }
@@ -241,12 +209,7 @@ object SourceQueries {
     * as the equivalent contains test). */
   def s31_regex_lookahead_pruned(s: SparkSession, dir: String): DataFrame = {
     val re = "(?=.*signup).*"
-    val clause = Filter("event_type", List(re), Ops.REGEX)
-    val df = SegmentIndex.scan(s, manifest(s, dir), Some(clause),
-        Set("event_type"), Long.MinValue, Long.MaxValue)
-      .getOrElse(return typedEmpty(s, "event_id" -> "bigint",
-        "event_type" -> "string", "value" -> "double"))
-    df.where(col("event_type").rlike(s"(?i)$re"))
+    events(s, dir).where(col("event_type").rlike(s"(?i)$re"))
       .select(col("event_id"), col("event_type"), col("value"))
       .orderBy("event_id")
   }
@@ -263,9 +226,7 @@ object SourceQueries {
       .toEpochMilli * 1000000L
     val endNs = java.time.Instant.parse("2024-01-20T00:00:00Z")
       .toEpochMilli * 1000000L
-    val rel = graft.sources.ManifestFileIndex.relation(
-      s, manifest(s, dir), "ts", _ / 1000000L, Set("event_type"))
-    rel.where(col("ts") >= startNs && col("ts") < endNs &&
+    events(s, dir).where(col("ts") >= startNs && col("ts") < endNs &&
         col("event_type") === "purchase")
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),
@@ -299,9 +260,7 @@ object SourceQueries {
 
   private[graft] def astFileIndexTelemetry(
       s: SparkSession, dir: String): graft.engine.Telemetry = {
-    val rel = graft.sources.ManifestFileIndex.relation(
-      s, manifest(s, dir), "ts", _ / 1000000L, Set("event_type"))
-    graft.engine.Telemetry.nanos(rel, "ts",
+    graft.engine.Telemetry.nanos(events(s, dir), "ts",
       valueCol = col("value"), message = Some(col("props")))
   }
 
@@ -374,8 +333,7 @@ object SourceQueries {
         |  "chart": {"aggregation": "sum", "groupBys": ["event_type"]}
         |}}}""".stripMargin)
     val regional = regionRoots(s, dir).map { case (_, mf) =>
-      graft.sources.ManifestFileIndex.relation(
-        s, mf, "ts", _ / 1000000L, Set("event_type"))
+      ManifestFileIndex.relation(s, mf, "ts", _ / 1000000L, Set("event_type"))
     }
     val unioned = regional.reduce(_ unionByName _)
     val tel = graft.engine.Telemetry.nanos(unioned, "ts",
@@ -411,18 +369,15 @@ object SourceQueries {
     * then the exact predicate. Pruning is sound → oracle vs the full
     * table (file-skipping itself is proven in SegmentIndexSpec). */
   def s15_docs_grep(s: SparkSession, dir: String): DataFrame = {
-    val clause = Filter("text", List("vector"), Ops.CONTAINS)
-    val df = SegmentIndex.scan(s, docManifest(s, dir), Some(clause),
-        Set("text"), Long.MinValue, Long.MaxValue)
-      .getOrElse(return typedEmpty(s, "doc_id" -> "bigint",
-        "source" -> "string"))
+    val docs = ManifestFileIndex.relation(
+      s, docManifest(s, dir), "doc_id", identity, Set("text"))
     // `(?i)vector`, NOT `(?i).*vector.*`: RLike is find() semantics, so
     // the wrappers add nothing — except that a failing row makes the
     // greedy leading `.*` retry the whole tail FROM EVERY START OFFSET,
     // turning the scan O(len²) per row. On the sf10 soak corpus the
     // wrapped spelling cost ~50 s per pass; the bare literal is a
     // Boyer–Moore-style substring probe (~2 s). Same rows either way.
-    df.where(col("text").rlike("(?i)vector"))
+    docs.where(col("text").rlike("(?i)vector"))
       .select(col("doc_id"), col("source"))
       .orderBy("doc_id")
   }

@@ -4,9 +4,9 @@ import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{
-  And, Attribute, Contains, EqualTo, Expression, GreaterThan,
-  GreaterThanOrEqual, In, LessThan, LessThanOrEqual, Literal, Or, StartsWith,
-  EndsWith}
+  And, Attribute, Contains, EndsWith, EqualTo, Expression, GreaterThan,
+  GreaterThanOrEqual, In, InSet, LessThan, LessThanOrEqual, Literal, Or,
+  RLike, StartsWith}
 import org.apache.spark.sql.execution.datasources.{
   FileIndex, HadoopFsRelation, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
@@ -19,14 +19,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * "deluxe" form of the reference's metadata-index scan
   * (`metric_seg`/`log_seg` lookups, reference QueryEngineV2.scala:742-951).
   *
-  * [[SegmentIndex.scan]] prunes eagerly at call time and needs the caller
-  * to hand over the clause; this index defers pruning to plan time, so ANY
-  * DataFrame operation over the relation — `spark.sql` included — skips
-  * segments it provably does not need, with zero cooperation from the
-  * query author. Catalyst hands `listFiles` the data filters it already
-  * pushed; unrecognized predicates simply fall back to "scan everything
-  * the other conjuncts allow" (pruning stays sound: conjuncts only ever
-  * REMOVE files).
+  * Pruning happens at plan time, so ANY DataFrame operation over the
+  * relation — `spark.sql` included — skips segments it provably does not
+  * need, with zero cooperation from the query author. Catalyst hands
+  * `listFiles` the data filters it already pushed; unrecognized
+  * predicates simply fall back to "scan everything the other conjuncts
+  * allow" (pruning stays sound: conjuncts only ever REMOVE files).
+  * [[SegmentIndex.prune]] lists files for an AST clause with the same
+  * [[ManifestFileIndex.mayMatch]].
   *
   * Driver-side state is the manifest rows (file → row_count / min_ts /
   * max_ts / fingerprints): KBs per thousand segments, the same planning
@@ -36,9 +36,11 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - ts comparisons (`>`, `>=`, `<`, `<=`, `=` on `tsCol`, literal in
   *    the COLUMN's unit) → manifest [min_ts, max_ts] overlap, after
   *    `tsToMillis` converts literals to manifest millis;
-  *  - equality / IN / contains / prefix / suffix on indexed string
-  *    columns → trigram fingerprint subset tests (the same
-  *    [[SegmentIndex.valueFingerprints]] the eager path uses);
+  *  - equality / IN / `InSet` (a long IN after Catalyst's OptimizeIn) /
+  *    contains / prefix / suffix on indexed string columns → trigram
+  *    fingerprint subset tests ([[SegmentIndex.valueFingerprints]]);
+  *  - `RLike` on an indexed column (the AST's regex and contains) → the
+  *    regex's [[SegmentIndex.requiredTrigrams]] tree over the same tests;
   *  - `And` recurses into both sides; `Or` prunes only if BOTH branches
   *    prune (union of their candidate sets).
   */
@@ -73,76 +75,105 @@ final class ManifestFileIndex(
 
   override def listFiles(partitionFilters: Seq[Expression],
       dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
-    val kept = dataFilters.foldLeft(manifest) { (segs, f) =>
-      segs.filter(seg => mayMatch(seg, f))
-    }
+    val may = dataFilters.map(mayMatch(_, indexed, Some(tsCol -> tsToMillis)))
+    val kept = manifest.filter(seg => may.forall(_(seg)))
     Seq(PartitionDirectory(InternalRow.empty,
       kept.map(s => statuses(s.file)).toArray))
   }
-
-  /** Sound may-match test: false ONLY when the manifest proves no row of
-    * the segment can satisfy `f`. */
-  private def mayMatch(seg: Segment, f: Expression): Boolean = f match {
-    case And(l, r) => mayMatch(seg, l) && mayMatch(seg, r)
-    case Or(l, r) => mayMatch(seg, l) || mayMatch(seg, r)
-    // ---- time bounds (literals arrive in the ts column's own unit) ----
-    case GreaterThanOrEqual(TsAttr(`tsCol`), LongLit(v)) =>
-      seg.maxTs >= tsToMillis(v)
-    case GreaterThan(TsAttr(`tsCol`), LongLit(v)) => seg.maxTs >= tsToMillis(v)
-    case LessThan(TsAttr(`tsCol`), LongLit(v)) => seg.minTs <= tsToMillis(v)
-    case LessThanOrEqual(TsAttr(`tsCol`), LongLit(v)) =>
-      seg.minTs <= tsToMillis(v)
-    case GreaterThanOrEqual(LongLit(v), TsAttr(`tsCol`)) =>
-      seg.minTs <= tsToMillis(v)
-    case GreaterThan(LongLit(v), TsAttr(`tsCol`)) =>
-      seg.minTs <= tsToMillis(v)
-    case LessThanOrEqual(LongLit(v), TsAttr(`tsCol`)) =>
-      seg.maxTs >= tsToMillis(v)
-    case LessThan(LongLit(v), TsAttr(`tsCol`)) =>
-      seg.maxTs >= tsToMillis(v)
-    case EqualTo(TsAttr(`tsCol`), LongLit(v)) =>
-      val ms = tsToMillis(v); seg.minTs <= ms && seg.maxTs >= ms
-    case EqualTo(LongLit(v), TsAttr(`tsCol`)) =>
-      val ms = tsToMillis(v); seg.minTs <= ms && seg.maxTs >= ms
-    // ---- trigram fingerprints on indexed string dims ----
-    case EqualTo(TsAttr(c), StrLit(v)) if indexed.contains(c) =>
-      hasTrigrams(seg, c, v)
-    case EqualTo(StrLit(v), TsAttr(c)) if indexed.contains(c) =>
-      hasTrigrams(seg, c, v)
-    case In(TsAttr(c), vs) if indexed.contains(c) &&
-        vs.forall(_.isInstanceOf[Literal]) =>
-      vs.exists {
-        case StrLit(v) => hasTrigrams(seg, c, v)
-        case _ => true
-      }
-    case Contains(TsAttr(c), StrLit(v)) if indexed.contains(c) =>
-      hasTrigrams(seg, c, v)
-    case StartsWith(TsAttr(c), StrLit(v)) if indexed.contains(c) =>
-      hasTrigrams(seg, c, v)
-    case EndsWith(TsAttr(c), StrLit(v)) if indexed.contains(c) =>
-      hasTrigrams(seg, c, v)
-    case _ => true // not provably excludable -> keep
-  }
-
-  private def hasTrigrams(seg: Segment, c: String, v: String): Boolean =
-    // prune only when the manifest proves this column was fingerprinted
-    // at build time — a query-time `indexed` set wider than the
-    // build-time one must degrade to scan, not prune everything
-    if (!seg.fingerprints.contains(SegmentIndex.columnMarker(c))) true
-    else SegmentIndex.valueFingerprints(c, v) match {
-      case Some(fps) => fps.forall(seg.fingerprints.contains)
-      case None => true // value too short to index -> cannot exclude
-    }
 }
 
 object ManifestFileIndex {
+  import SegmentIndex.TriReq
 
   /** One manifest row: the planning metadata for one segment file. */
   final case class Segment(file: String, rowCount: Long, minTs: Long,
       maxTs: Long, fingerprints: Set[Long])
 
+  /** Sound may-match test for one filter, compiled once and applied per
+    * segment: the predicate is false ONLY when the manifest proves no row
+    * of the segment can satisfy `f`. `time` names the ts column and
+    * converts its literals (in the column's own unit) to manifest millis;
+    * None = no time cases. Trigram cases apply to `indexed` columns and
+    * need the segment's [[SegmentIndex.columnMarker]]: a query-time
+    * `indexed` set wider than the build-time one must degrade to scan,
+    * not prune everything. */
+  private[sources] def mayMatch(f: Expression, indexed: Set[String],
+      time: Option[(String, Long => Long)]): Segment => Boolean = {
+    object Ts {
+      def unapply(e: Expression): Boolean =
+        time.exists { case (c, _) => Attr.unapply(e).contains(c) }
+    }
+    def ms(v: Long): Long = time.get._2(v)
+    object Indexed {
+      def unapply(e: Expression): Option[String] =
+        Attr.unapply(e).filter(indexed.contains)
+    }
+    def value(c: String, v: String) = trigrams(c, TriReq.Lit(v))
+    def anyValue(c: String, vs: Iterable[Any]) =
+      trigrams(c, TriReq.anyOf(vs.toSeq.map {
+        case v: UTF8String => TriReq.Lit(v.toString)
+        case _ => TriReq.Free
+      }))
+    def compile(f: Expression): Segment => Boolean = f match {
+      case And(l, r) =>
+        val (a, b) = (compile(l), compile(r)); s => a(s) && b(s)
+      case Or(l, r) =>
+        val (a, b) = (compile(l), compile(r)); s => a(s) || b(s)
+      // ---- time bounds ----
+      case GreaterThanOrEqual(Ts(), LongLit(v)) => val m = ms(v); _.maxTs >= m
+      case GreaterThan(Ts(), LongLit(v)) => val m = ms(v); _.maxTs >= m
+      case LessThan(Ts(), LongLit(v)) => val m = ms(v); _.minTs <= m
+      case LessThanOrEqual(Ts(), LongLit(v)) => val m = ms(v); _.minTs <= m
+      case GreaterThanOrEqual(LongLit(v), Ts()) => val m = ms(v); _.minTs <= m
+      case GreaterThan(LongLit(v), Ts()) => val m = ms(v); _.minTs <= m
+      case LessThanOrEqual(LongLit(v), Ts()) => val m = ms(v); _.maxTs >= m
+      case LessThan(LongLit(v), Ts()) => val m = ms(v); _.maxTs >= m
+      case EqualTo(Ts(), LongLit(v)) =>
+        val m = ms(v); s => s.minTs <= m && s.maxTs >= m
+      case EqualTo(LongLit(v), Ts()) =>
+        val m = ms(v); s => s.minTs <= m && s.maxTs >= m
+      // ---- trigram fingerprints on indexed string dims ----
+      case EqualTo(Indexed(c), StrLit(v)) => value(c, v)
+      case EqualTo(StrLit(v), Indexed(c)) => value(c, v)
+      case In(Indexed(c), vs) if vs.forall(_.isInstanceOf[Literal]) =>
+        anyValue(c, vs.map(_.eval()))
+      // Catalyst's OptimizeIn pushes an IN longer than
+      // spark.sql.optimizer.inSetConversionThreshold as InSet
+      case InSet(Indexed(c), hset) => anyValue(c, hset)
+      case Contains(Indexed(c), StrLit(v)) => value(c, v)
+      case StartsWith(Indexed(c), StrLit(v)) => value(c, v)
+      case EndsWith(Indexed(c), StrLit(v)) => value(c, v)
+      // the AST's regex and contains: every match holds the literals of
+      // the regex's requirement tree
+      case RLike(Indexed(c), StrLit(re)) =>
+        trigrams(c, SegmentIndex.requiredTrigrams(re))
+      case _ => _ => true // not provably excludable -> keep
+    }
+    compile(f)
+  }
+
+  /** May a segment hold a value of column c meeting requirement `r`? A
+    * literal needs all of its [[SegmentIndex.valueFingerprints]] (a value
+    * too short or coercion-unsafe to index cannot exclude); All/AnyOf
+    * mirror the tree; Free keeps the segment. */
+  private def trigrams(c: String, r: TriReq): Segment => Boolean = {
+    import TriReq._
+    def compile(r: TriReq): Segment => Boolean = r match {
+      case Lit(v) => SegmentIndex.valueFingerprints(c, v) match {
+        case Some(fps) => s => fps.forall(s.fingerprints.contains)
+        case None => _ => true
+      }
+      case All(xs) => val ps = xs.map(compile); s => ps.forall(_(s))
+      case AnyOf(xs) => val ps = xs.map(compile); s => ps.exists(_(s))
+      case Free => _ => true
+    }
+    val marker = SegmentIndex.columnMarker(c)
+    val p = compile(r)
+    s => !s.fingerprints.contains(marker) || p(s)
+  }
+
   /** Attribute name extractor (strips qualifiers). */
-  private object TsAttr {
+  private object Attr {
     def unapply(e: Expression): Option[String] = e match {
       case a: Attribute => Some(a.name)
       case _ => None

@@ -1,8 +1,12 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import graft.ast._
+import graft.compile.FilterCompiler
 
 /** Segment manifest + trigram-fingerprint data skipping — the Spark-native
   * form of the reference's metadata index (SURVEY.md S3/S4/U2: PostgreSQL
@@ -21,13 +25,17 @@ import graft.ast._
   *    segment to possibly match eq/contains on an indexed column —
   *    same contract as the reference's trigram index; absence proves
   *    absence, presence is only a candidate.
-  *  - Clause pruning (U2): AND intersects candidate sets, OR unions,
-  *    NOT/regex/short-values degrade to "all segments" (sound).
+  *  - Clause pruning (U2): AND intersects candidate sets, OR unions; a
+  *    regex or contains value must meet its [[requiredTrigrams]] tree.
+  *    NOT, short values and regex constructs without a required literal
+  *    keep every segment (sound).
   *  - Time pruning (F10): segment [min_ts, max_ts] must overlap the query
   *    range — the manifest twin of parquet row-group min/max skipping.
   *
-  * At cluster scale the pruned file list feeds `spark.read.parquet(files)`
-  * so Spark never even lists the skipped segments; partition-dir layouts
+  * One may-match decides both: [[ManifestFileIndex.mayMatch]], which the
+  * plan-time [[ManifestFileIndex]] relation applies to the filters
+  * Catalyst pushes into its scan and [[prune]] applies to an AST clause.
+  * Skipped segments are never even listed; partition-dir layouts
   * (`dateInt=/hour=`) remain complementary (Catalyst partition pruning).
   */
 object SegmentIndex {
@@ -141,7 +149,10 @@ object SegmentIndex {
     // conservative, and never fires for ordinary tag values.
     val dateLike = s.nonEmpty && s.exists(_.isDigit) &&
       s.forall(c => c.isDigit || " -/:.tz+".contains(c))
-    if (s.length < 3 || s.toDoubleOption.isDefined || dateLike) None
+    // 'Σ' lowercases by context (σ inside a word, ς at its end): a
+    // substring's own end need not be the stored value's
+    if (s.length < 3 || s.toDoubleOption.isDefined || dateLike ||
+        v.contains('Σ')) None
     else Some(
       (0 to s.length - 3).map { i =>
         val g = s.substring(i, i + 3)
@@ -261,17 +272,23 @@ object SegmentIndex {
             if (gt < 0) throw Bail
             body(gt + 1)
           case _ =>
-            // inline flags with a body, (?idmsu-…:X): parse X unless the
-            // 'x' (comment/whitespace) flag is present — x changes
-            // tokenization, so literal chars there are untrustworthy
-            val colon = regex.indexOf(':', open + 2)
-            val close = regex.indexOf(')', open + 2)
-            if (colon > 0 && (close < 0 || colon < close) &&
-                colon > open + 2 &&
-                regex.substring(open + 2, colon)
-                  .forall("idmsuU-".contains(_)))
-              body(colon + 1)
-            else skipBalanced()
+            // inline flags, bare (?idmsuxU-…) or with a body (?…:X).
+            // Turning on x (whitespace and # comments are not literal
+            // text), u or U (Unicode case folding: (?iu)ſ matches "s",
+            // which lowercased trigrams cannot mirror) makes literal
+            // chars untrustworthy: a body is skipped, and a bare group
+            // — its flags hold for the rest of the pattern — bails
+            val end = regex.indexWhere(ch => ch == ':' || ch == ')', open + 2)
+            val spec = if (end < 0) "" else regex.substring(open + 2, end)
+            val unsafe = spec.takeWhile(_ != '-').exists("xuU".contains(_))
+            if (spec.isEmpty || !spec.forall("idmsuxU-".contains(_)))
+              skipBalanced()
+            else (unsafe, regex.charAt(end)) match {
+              case (false, ':') => body(end + 1)
+              case (false, _) => (Frag(Free, None), end + 1)
+              case (true, ':') => skipBalanced()
+              case (true, _) => throw Bail
+            }
         }
       } else body(open + 1)
     }
@@ -519,91 +536,47 @@ object SegmentIndex {
     flat(requiredTrigrams(regex)).filter(_.length >= 3)
   }
 
-  /** Compile a [[TriReq]] into a manifest predicate: a literal requires
-    * all its trigrams present; AND/OR mirror the tree; `Free` (and runs
-    * too short to carry a trigram) impose nothing. */
-  private def reqColumn(k: String, r: TriReq): Column = r match {
-    case TriReq.Free => lit(true)
-    case TriReq.Lit(s) => valueFingerprints(k, s) match {
-      case Some(fps) if fps.nonEmpty =>
-        guarded(k,
-          fps.map(fp => array_contains(col("fingerprints"), fp))
-            .reduce(_ && _))
-      case _ => lit(true)
-    }
-    case TriReq.All(xs) => xs.map(reqColumn(k, _)).reduce(_ && _)
-    case TriReq.AnyOf(xs) => xs.map(reqColumn(k, _)).reduce(_ || _)
-  }
-
-  /** Trigram pruning applies only to segments whose manifest proves the
-    * column was fingerprinted at build time (see [[columnMarker]]);
-    * otherwise keep the segment. */
-  private def guarded(k: String, prune: Column): Column =
-    !array_contains(col("fingerprints"), columnMarker(k)) || prune
-
-  /** Candidate predicate over the manifest for one clause; `lit(true)`
-    * where the index can't help (sound: never prunes a matching segment).
-    */
-  def candidate(clause: QueryClause, indexed: Set[String]): Column = clause match {
-    case Filter(k, vs, op, _, false, false) if indexed.contains(k) =>
-      op match {
-        case Ops.EQ =>
-          vs.headOption.flatMap(valueFingerprints(k, _)) match {
-            case Some(fps) =>
-              // ALL trigrams of the value must be present
-              guarded(k,
-                fps.map(fp => array_contains(col("fingerprints"), fp))
-                  .reduce(_ && _))
-            case None => lit(true)
-          }
-        case Ops.REGEX | Ops.CONTAINS =>
-          // CONTAINS compiles to a REGEX with active metacharacters
-          // (reference BaseExpr.scala:500-501 regexp_matches '.*v.*'), so
-          // its value must go through the same trigram set algebra —
-          // treating "a.cde" as a literal would prune segments whose rows
-          // match via the wildcard
-          vs.headOption.map(v => reqColumn(k, requiredTrigrams(v)))
-            .getOrElse(lit(true))
-        case Ops.IN =>
-          // any of the values may match → union of per-value candidates
-          val per = vs.map(v => valueFingerprints(k, v) match {
-            case Some(fps) =>
-              guarded(k,
-                fps.map(fp => array_contains(col("fingerprints"), fp))
-                  .reduce(_ && _))
-            case None => lit(true)
-          })
-          if (per.isEmpty) lit(true) else per.reduce(_ || _)
-        case _ => lit(true) // negations/comparisons: no trigram help
-      }
-    case BinaryClause(q1, q2, "and") =>
-      candidate(q1, indexed) && candidate(q2, indexed)
-    case BinaryClause(q1, q2, "or") =>
-      candidate(q1, indexed) || candidate(q2, indexed)
-    case _ => lit(true)
-  }
-
   /** Prune the manifest to the files a query over [startMs, endMs) with
-    * `clause` could need. Runs on the manifest only — collects a file
-    * list, never touches segment data. */
+    * `clause` could need: segments overlapping the window whose manifest
+    * row passes [[ManifestFileIndex.mayMatch]] for every filter that
+    * scan planning would push for `clause` (see [[pushedFilters]]). So
+    * this list and a [[ManifestFileIndex]] relation's scan keep the same
+    * files for the same clause. Reads the manifest only, never segment
+    * data. */
   def prune(manifest: DataFrame, clause: Option[QueryClause],
       indexed: Set[String], startMs: Long, endMs: Long): Seq[String] = {
-    val timePred = col("max_ts") >= startMs && col("min_ts") < endMs
-    val pred = clause.map(c => timePred && candidate(c, indexed))
-      .getOrElse(timePred)
-    manifest.where(pred).select("file")
-      .collect().map(_.getString(0)).toSeq.sorted
+    val may = clause.toSeq
+      .flatMap(pushedFilters(manifest.sparkSession, _))
+      .map(ManifestFileIndex.mayMatch(_, indexed, time = None))
+    ManifestFileIndex.segmentsOf(manifest)
+      .filter(s => s.maxTs >= startMs && s.minTs < endMs && may.forall(_(s)))
+      .map(_.file).sorted
   }
 
-  /** Pruned scan: read only candidate segments, then apply the full
-    * filter. Result-identical to scanning everything (pruning is sound);
-    * IO-proportional to the candidate set. */
-  def scan(spark: SparkSession, manifest: DataFrame,
-      clause: Option[QueryClause], indexed: Set[String],
-      startMs: Long, endMs: Long, mergeSchema: Boolean = true): Option[DataFrame] = {
-    val files = prune(manifest, clause, indexed, startMs, endMs)
-    if (files.isEmpty) None
-    else Some(spark.read.option("mergeSchema", mergeSchema.toString)
-      .parquet(files: _*))
+  /** The filter Catalyst would push to [[ManifestFileIndex.listFiles]]
+    * for `clause`: compiled by [[FilterCompiler]] over string columns,
+    * then resolved and optimized as scan planning delivers it — a long IN
+    * arrives as `InSet`, double negations cancel. (A Column DSL tree
+    * before analysis holds unresolved nodes, not this shape.) Extracted
+    * and computed fields are not columns of the segment files: each gets
+    * a column of its own outside `indexed`, so it never prunes and the
+    * optimizer cannot fold it away. The empty frame is RDD-backed, so
+    * the optimizer cannot evaluate the filter away either. */
+  private def pushedFilters(spark: SparkSession,
+      clause: QueryClause): Seq[Expression] = {
+    def source(c: QueryClause): QueryClause = c match {
+      case f: Filter if f.extracted || f.computed =>
+        f.copy(k = s"\u0000${f.k}", extracted = false, computed = false)
+      case f: Filter => f
+      case BinaryClause(a, b, op) => BinaryClause(source(a), source(b), op)
+      case NotClause(q) => NotClause(source(q))
+    }
+    val src = source(clause)
+    val empty = spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+      StructType(src.fields.toSeq.sorted.map(StructField(_, StringType))))
+    empty.where(FilterCompiler.compile(src, src.fields))
+      .queryExecution.optimizedPlan.collectFirst {
+        case logical.Filter(cond, _) => cond
+      }.toSeq
   }
 }

@@ -277,6 +277,32 @@ class HttpApiSpec extends AnyFunSuite {
     }
   }
 
+  test("tag values of a non-string column stream as strings on both the " +
+    "batch and the replay path") {
+    val coded = (0 until 480).map { i =>
+      ((base + i * 6L * 60000L) * 1000000L, "click", i % 4, 1.0)
+    }.toDF("ts", "event_type", "code", "value")
+    val codedTel = Telemetry.nanos(coded, "ts", valueCol = col("value"))
+    val span = ReplaySequencer.SegmentSpan("s", base, base + 48 * hour)
+    for (segments <- Seq(Nil, Seq(span))) {
+      val api = new QueryHttpApi(_ => codedTel, segments = segments,
+        now = () => java.time.Instant.ofEpochMilli(base + 48 * hour))
+      val port = api.start(0)
+      try {
+        val (code, bodyText) = http(port, "POST",
+          s"/api/v1/tags/logs?tagName=code&s=$base&e=${base + 48 * hour}")
+        assert(code == 200, bodyText)
+        val evs = sseEvents(bodyText)
+        assert(!evs.exists(_.get("type").asText() == "error"), bodyText)
+        val vals = evs
+          .filter(n => Option(n.get("type")).exists(_.asText() == "data"))
+          .map(_.get("message").get("code").asText())
+        assert(vals.sorted == Seq("0", "1", "2", "3"),
+          s"segments=${segments.size}: $bodyText")
+      } finally api.stop()
+    }
+  }
+
   test("heartbeat frames keep the stream alive between replay-group " +
     "jobs and parsers skip them (T5)") {
     // 50 ms heartbeat + 144 single-interval replay groups in 8 waves:

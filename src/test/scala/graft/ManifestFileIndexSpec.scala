@@ -1,8 +1,8 @@
 package graft
 
 import org.apache.spark.sql.catalyst.expressions.{
-  And, Attribute, Contains, EqualTo, Expression, GreaterThanOrEqual, LessThan,
-  Literal, Or, StartsWith}
+  And, Attribute, Contains, EqualTo, Expression, GreaterThanOrEqual, InSet,
+  LessThan, Literal, Or, StartsWith}
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
@@ -102,21 +102,7 @@ class ManifestFileIndexSpec extends AnyFunSuite {
     assert(prunedFiles(Contains(attrs("service"), str("sv"))).size == 3)
   }
 
-  private def filesRead(df: org.apache.spark.sql.DataFrame): Long = {
-    df.collect()
-    // AQE wraps stages in QueryStageExec nodes with no children; descend
-    // through .plan / .executedPlan explicitly
-    def scans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
-      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
-      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-        scans(q.plan)
-      case f: FileSourceScanExec => Seq(f)
-      case other => other.children.flatMap(scans)
-    }
-    val all = scans(df.queryExecution.executedPlan)
-    assert(all.nonEmpty, "no FileSourceScanExec found")
-    all.map(_.metrics("numFiles").value).sum
-  }
+  import ManifestFileIndexSpec.filesRead
 
   test("end to end: pushed filters reach the index and skip segments") {
     val pruned = filesRead(relation()
@@ -127,6 +113,23 @@ class ManifestFileIndexSpec extends AnyFunSuite {
       .where(col("ts") >= lit(2100L * 1000000L))
       .select(col("ts")))
     assert(timePruned == 1L, s"expected 1 file read, got $timePruned")
+  }
+
+  test("end to end: a regex and an 11-value IN on an indexed dim skip " +
+    "segments through the relation") {
+    // the AST's regex spelling: FilterCompiler prefixes (?i)
+    val rel = relation()
+    val regex = graft.compile.FilterCompiler.compile(
+      graft.ast.Filter("service", List("alpha|charlie"), graft.ast.Ops.REGEX),
+      rel.columns.toSet)
+    assert(filesRead(rel.where(regex).select(col("ts"))) == 2L)
+    // past spark.sql.optimizer.inSetConversionThreshold (10) Catalyst
+    // pushes the IN as InSet
+    val in = relation().where(col("service").isin(
+      "svc-bravo" +: ('a' to 'j').map(c => s"nope-$c"): _*))
+    assert(in.queryExecution.optimizedPlan.flatMap(_.expressions)
+      .exists(_.exists(_.isInstanceOf[InSet])))
+    assert(filesRead(in.select(col("ts"))) == 1L)
   }
 
   test("relation results are identical to a plain scan + filter") {
@@ -187,5 +190,30 @@ class ManifestFileIndexSpec extends AnyFunSuite {
     val n = filesRead(df)
     assert(n >= 1 && n < 4,
       s"AST time range should skip files in the 4-file layout, read $n")
+  }
+}
+
+object ManifestFileIndexSpec {
+  /** Files the executed plan's parquet scans read (their numFiles
+    * metric), after running `df`. */
+  def filesRead(df: org.apache.spark.sql.DataFrame): Long = {
+    df.collect()
+    numFiles(df)
+  }
+
+  /** The numFiles metric of `df`'s parquet scans, once `df` has run. */
+  def numFiles(df: org.apache.spark.sql.DataFrame): Long = {
+    // AQE wraps stages in QueryStageExec nodes with no children; descend
+    // through .plan / .executedPlan explicitly
+    def scans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
+      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
+      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
+        scans(q.plan)
+      case f: FileSourceScanExec => Seq(f)
+      case other => other.children.flatMap(scans)
+    }
+    val all = scans(df.queryExecution.executedPlan)
+    require(all.nonEmpty, "no FileSourceScanExec found")
+    all.map(_.metrics("numFiles").value).sum
   }
 }

@@ -57,20 +57,73 @@ class SegmentIndexSpec extends AnyFunSuite {
     assert(files.exists(_.contains("seg1")) && files.exists(_.contains("seg3")))
   }
 
+  /** A one-file manifest over `values` of an indexed `event_type`. */
+  private def singleSegment(values: String*): org.apache.spark.sql.DataFrame = {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_seg1").toString
+    values.map(v => (1000L, v)).toDF("ts", "event_type")
+      .coalesce(1).write.parquet(s"$dir/seg")
+    SegmentIndex.build(spark, Seq(s"$dir/seg"), "ts", identity,
+      Seq("event_type"))
+  }
+
   test("contains treats metacharacters as regex, not literal (pruning soundness)") {
-    import graft.ast.{Filter, Ops}
     // "a.cde" as a CONTAINS value is a REGEX (reference regexp_matches):
     // a segment holding only "axcde" matches via the wildcard and must
     // NOT be pruned on the literal's trigrams ("a.c", ".cd")
-    val cand = SegmentIndex.candidate(
-      Filter("event_type", List("a.cde"), Ops.CONTAINS), Set("event_type"))
-    assert(cand != null) // compiles through the regex path, not literal
+    val seg = singleSegment("axcde")
+    val files = SegmentIndex.prune(seg,
+      Some(Filter("event_type", List("a.cde"), Ops.CONTAINS)),
+      Set("event_type"), 0L, 10000L)
+    assert(files.length == 1, files)
     // requiredTrigrams("a.cde") sees '.' as Free: the run "a" (< 3
     // chars) imposes no trigram and is dropped at flush; only "cde"
     // remains — so a segment holding only "axcde" survives pruning
     import graft.sources.SegmentIndex.TriReq
     val req = SegmentIndex.requiredTrigrams("a.cde")
     assert(req == TriReq.Lit("cde"))
+    // not vacuous: a value whose required run is absent prunes the file
+    assert(SegmentIndex.prune(seg,
+      Some(Filter("event_type", List("a.cdz"), Ops.CONTAINS)),
+      Set("event_type"), 0L, 10000L).isEmpty)
+  }
+
+  test("inline x/u/U flags never prune a matching segment") {
+    // (?x) makes "f o o" match "foo"; (?u) with the AST's (?i) makes the
+    // long s "ſ" match "s" — neither pattern's literal text is required
+    val seg = singleSegment("foo", "stop")
+    for ((re, v) <- Seq(("(?x)f o o", "foo"), ("(?u)ſtop", "stop"),
+        ("(?iu:ſtop)", "stop"), ("(?U)ſtop", "stop"))) {
+      assert(java.util.regex.Pattern.compile(s"(?i)$re").matcher(v).find(),
+        s"$re !~ $v")
+      val files = SegmentIndex.prune(seg,
+        Some(Filter("event_type", List(re), Ops.REGEX)),
+        Set("event_type"), 0L, 10000L)
+      assert(files.length == 1, s"$re pruned its matching segment")
+    }
+  }
+
+  test("a capital sigma never prunes a matching segment") {
+    // lower("ΟΔΟΣΑ") = "οδοσα" but lower("ΟΔΟΣ") = "οδος": the final
+    // sigma of a substring is not the stored text's
+    val seg = singleSegment("ΟΔΟΣΑ")
+    for (clause <- Seq(Filter("event_type", List("ΟΔΟΣ."), Ops.REGEX),
+        Filter("event_type", List("ΟΔΟΣ"), Ops.CONTAINS)))
+      assert(SegmentIndex.prune(seg, Some(clause), Set("event_type"),
+        0L, 10000L).length == 1, clause)
+  }
+
+  test("extracted and computed leaves never prune") {
+    // an extracted field may share an indexed column's name; its values
+    // come from the message, not the column's fingerprints
+    for (clause <- Seq(
+        Filter("service", List("nowhere-svc"), Ops.EQ, extracted = true),
+        Filter("service", List("nowhere-svc"), Ops.EQ, computed = true),
+        BinaryClause(Filter("service", List("payment-svc"), Ops.EQ),
+          NotClause(Filter("level", List("zzz"), Ops.EQ, extracted = true)),
+          "or")))
+      assert(SegmentIndex.prune(manifest, Some(clause), indexed, 0L, 10000L)
+        .length == 3, clause)
   }
 
   test("numeric-looking EQ values do not prune (coercing equality)") {
@@ -320,9 +373,9 @@ class SegmentIndexSpec extends AnyFunSuite {
   test("pruned scan result equals full scan result") {
     val (_, segs) = segDir
     val clause = Filter("service", List("payment-svc"), Ops.EQ)
-    val pruned = SegmentIndex
-      .scan(spark, manifest, Some(clause), indexed, 0L, 10000L).get
-      .where(col("service") === "payment-svc")
+    val pruned = graft.sources.ManifestFileIndex
+      .relation(spark, manifest, "ts", identity, indexed)
+      .where(graft.compile.FilterCompiler.compile(clause, Set("service")))
       .select("ts", "service", "level", "value").orderBy("ts").collect()
     val full = spark.read.parquet(segs: _*)
       .where(col("service") === "payment-svc")

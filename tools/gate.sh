@@ -8,7 +8,8 @@
 #   tools/gate.sh --serving  # compile + the serving-path specs only
 #                            # (replay waves, the driver-side merge,
 #                            # incremental delivery, HTTP/SSE,
-#                            # and the manifest build the set-up runs)
+#                            # the manifest build the set-up runs, and
+#                            # segment pruning with its regex planner)
 # Exit 0 = safe to snapshot; nonzero = DO NOT COMMIT the snapshot.
 set -euo pipefail
 cd "$(dirname "$0")/.."
@@ -19,7 +20,8 @@ if [ "${1:-}" = "--serving" ]; then
   echo "== gate: sbt Test/compile + serving specs =="
   sbt -batch Test/compile "testOnly graft.ReplayWaveSpec \
     graft.DriverMergeSpec graft.IncrementalDeliverySpec graft.HttpApiSpec \
-    graft.api.SseStallSpec graft.SegmentIndexSpec graft.ManifestFileIndexSpec"
+    graft.api.SseStallSpec graft.SegmentIndexSpec graft.ManifestFileIndexSpec \
+    graft.TrigramPropertySpec graft.SegmentPruningPropertySpec"
   echo "== gate: serving specs green (not a snapshot gate) =="
   exit 0
 fi
