@@ -244,15 +244,9 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.LocalTuning(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+    val spark = LocalTuning.session(32)
       .config("spark.sql.adaptive.enabled", sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     // Optional comma-separated subset for local iteration; the driver
     // leaves this unset and benches everything.
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")

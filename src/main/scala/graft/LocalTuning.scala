@@ -2,8 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Shuffle-writer tuning shared by every local harness session (Bench,
-  * Verify, TimeQ, ConcurrentBench, ...).
+/** The local harness session: [[session]] is the one recipe every main
+  * in `graft` builds its SparkSession from, and [[apply]] is its
+  * shuffle-writer tuning (perfbench's session applies it too).
   *
   * With <= 200 reduce partitions and no map-side combine, Spark's
   * default shuffle path is the bypass-merge writer: every map task
@@ -21,6 +22,28 @@ import org.apache.spark.sql.SparkSession
   * the same machinery it claims to predict.
   */
 object LocalTuning {
+  /** `apply`'s tuning on `local[$SPARK_GRAFT_CPUS]` (else
+    * `defaultCores`: 4 for the correctness runners, 32 for Bench and the
+    * timing tools) with one shuffle partition per core, UTC, no UI, and
+    * WARN logging once the session exists. Callers add their own lines
+    * (Bench its AQE switch, ConcurrentBench FAIR) and `getOrCreate()`. */
+  def session(defaultCores: Int): SparkSession.Builder = {
+    val cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCores.toString)
+    // the log level is a SparkContext setting, not a conf key
+    val b = new SparkSession.Builder {
+      override def getOrCreate(): SparkSession = {
+        val s = super.getOrCreate()
+        s.sparkContext.setLogLevel("WARN")
+        s
+      }
+    }
+    apply(b)
+      .master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+  }
+
   def apply(b: SparkSession.Builder): SparkSession.Builder = b
     .config("spark.shuffle.sort.bypassMergeThreshold", "1")
     .config("spark.shuffle.file.buffer", "1m")

@@ -435,6 +435,25 @@ final class QueryHttpApi(
     }
   }
 
+  /** The one filter context of a `/tags` or `/cardinality` body. The
+    * reference's routes parse a BARE BaseExpr only — ASTUtils.toBaseExpr
+    * (ASTUtils.scala:290) reads top-level id/dataset/filter and would
+    * reject a `baseExpressions` wrapper. Accepting the wrapper is a
+    * deliberate LENIENT EXTENSION (not parity): dashboards tend to
+    * re-POST the /graph payload verbatim, and rejecting it buys nothing.
+    * A wrapper is scoped to its expression with the lowest id — tag
+    * discovery and cardinality need ONE filter context, ids order
+    * deterministically, and silently merging several expressions'
+    * filters would answer a question nobody asked; the other
+    * expressions are intentionally ignored. An empty wrapper is an
+    * error. */
+  private def scopedBaseExpr(q: String): BaseExpr =
+    if (mapper.readTree(q).has("baseExpressions"))
+      AstJson.parseAstInput(q).baseExpressions.toList.sortBy(_._1)
+        .headOption.map(_._2).getOrElse(
+          throw new IllegalArgumentException("empty baseExpressions"))
+    else AstJson.parseBaseExpr(q)
+
   private def handleTags(ex: HttpExchange, tenant: Tenant, q: String,
       emit: String => Unit): Unit = {
     import scala.jdk.CollectionConverters._
@@ -442,26 +461,15 @@ final class QueryHttpApi(
     val (startMs, endMs) = timeRange(p)
     val dataset = ex.getRequestURI.getPath.stripPrefix("/api/v1/tags")
       .stripPrefix("/") match { case "" => "logs"; case d => d }
-    // The reference's tag route parses a BARE BaseExpr only —
-    // ASTUtils.toBaseExpr (ASTUtils.scala:290) reads top-level
-    // id/dataset/filter and would reject a `baseExpressions` wrapper.
-    // Accepting the wrapper here is a deliberate LENIENT EXTENSION (not
-    // parity): dashboards tend to re-POST the /graph payload verbatim,
-    // and rejecting it buys nothing. When a wrapper arrives we scope
-    // tags to its first expression by id — tag discovery needs ONE
-    // filter context, ids order deterministically, and silently merging
-    // several expressions' filters would answer a question nobody
-    // asked; the other expressions are intentionally ignored.
     val expr =
       if (q.trim.isEmpty)
         BaseExpr(id = "_", dataset = dataset,
           filter = Filter("event_type", Nil, Ops.EXISTS))
-      else if (mapper.readTree(q).has("baseExpressions"))
-        AstJson.parseAstInput(q).baseExpressions.toList.sortBy(_._1)
-          .headOption.map(_._2).getOrElse(
-            throw new IllegalArgumentException("empty baseExpressions"))
-      else AstJson.parseBaseExpr(q)
+      else scopedBaseExpr(q)
+    // checked once for every path; unchecked they disagree (limit(-1)
+    // fails analysis, take(-1) and the replay loop send nothing)
     val limit = p.get("limit").map(_.toInt).getOrElse(1000)
+    require(limit >= 0, s"limit must be >= 0, got $limit")
     val tel = tenant.tables(dataset)
     p.get("tagName") match {
       case Some(tag) if tenant.segments.nonEmpty =>
@@ -500,16 +508,7 @@ final class QueryHttpApi(
     val segments = tenant.segments
     val p = params(ex)
     val (startMs, endMs) = timeRange(p)
-    // Same LENIENT EXTENSION as the tags route (see handleTags): the
-    // reference accepts only a bare BaseExpr here; we additionally
-    // accept the /graph-style `baseExpressions` wrapper and scope to
-    // its first expression by id, ignoring the rest.
-    val expr =
-      if (mapper.readTree(q).has("baseExpressions"))
-        AstJson.parseAstInput(q).baseExpressions.toList.sortBy(_._1)
-          .headOption.map(_._2).getOrElse(
-            throw new IllegalArgumentException("empty baseExpressions"))
-      else AstJson.parseBaseExpr(q)
+    val expr = scopedBaseExpr(q)
     val groupBys = expr.chart.map(_.groupBys).getOrElse(Nil)
     val tel = tenant.tables(expr.dataset)
     if (segments.nonEmpty) {

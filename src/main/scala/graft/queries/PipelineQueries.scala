@@ -2314,10 +2314,8 @@ object PipelineQueries {
   // minor-edit duplicate class where token-set measures (d2/d4) stay
   // high but byte-exact d1 misses. Quadratic lev(a, b) can never run
   // all-pairs at corpus scale, so candidates are BLOCKED on
-  // (lang, length-bucket, aligned PassJoin segment): content blocking
-  // (see d14Pairs) composed with the |Δn| ≤ 24 length constraint keyed
-  // in (probe side on floor(n/50), seg side on the 1–2 buckets covering
-  // n ± 24 — exact coverage, r16). The distance
+  // (lang, aligned PassJoin segment) — content blocking, see d14Pairs —
+  // and filtered by the |Δn| ≤ 24 length constraint. The distance
   // runs on fixed 40-char prefixes with Spark's THRESHOLDED
   // levenshtein(l, r, k): the banded O(len·k) computation short-circuits
   // to -1 past k=10, which cut the sf0.1 bench from 44 s to ~1 s versus
@@ -2347,40 +2345,39 @@ object PipelineQueries {
       .orderBy("id_a", "id_b")
   }
 
+  /** Default per-key member cap for [[d14Pairs]]' blocking join: a
+    * single (lang, segment) key shared by N documents contributes
+    * O(N²) candidate pairs — super-linear on boilerplate-heavy corpora
+    * — so a key past 1000 members is dropped WHOLE from the probe side
+    * of the join, with the drop LOUD (capDroppedLast / stderr, the
+    * hamming-cap contract; see [[Dedup.capKeyMembers]] for why
+    * whole-key). Headroom, measured with the cap's `max_bucket_seen`
+    * observation: the most popular probe key has 58 members at sf0.01
+    * (500 documents, 17× under the cap) and 409 at sf0.1 (5000
+    * documents, 2.4× under). Membership grows with the corpus, about
+    * 7× per 10× documents, so a natural corpus a few times sf0.1's
+    * size reaches the cap. The sf1/sf10 soak generators remap each
+    * copy's letters, so their keys do not merge across copies. The cap
+    * is a skew guard, not a recall ceiling, at every scale measured —
+    * and when it does fire, the counter says so. */
+  private[graft] val D14MaxKeyMembers = 1000
+
   /** d14's candidate funnel up to (but not including) the banded
     * levenshtein verify: PassJoin segment blocking → prefix attach.
     * Duplicate pairs (a pair can share several aligned segments) are
     * NOT collapsed here — the entry dedups after verify, where the
-    * stream is thousands of rows instead of tens of millions. Exposed
-    * for tools.D14Probe, which counts the funnel stages: measured r13
-    * at sf10, candidates = 74M distinct pairs vs 7.9k verified, so the
-    * expensive part is generating/moving candidates, not verifying
+    * stream is thousands of rows instead of tens of millions. Measured
+    * r13 at sf10, candidates = 74M distinct pairs vs 7.9k verified, so
+    * the expensive part is generating/moving candidates, not verifying
     * them — a q-gram count prefilter between blocking and verify was
-    * measured SLOWER (146 → 228 s) and rejected; the wins were cutting
+    * measured SLOWER (146 → 228 s) and rejected (PLANS.md "d14 fuzzy
+    * join: the prefilter hypothesis was WRONG"); the wins were cutting
     * candidate volume (probe window ±K/2) and candidate movement
     * (no pre-verify distinct, gate-broadcast attach). */
-  /** Default per-key member cap for [[d14Pairs]]' blocking join: a
-    * single (lang, segment) key shared by N documents contributes
-    * O(N²) candidate pairs — super-linear on boilerplate-heavy corpora
-    * (D14Probe's a·c + b·c² fit: ~55% collision pairs at 100 copies) —
-    * so a key past 1000 members is dropped WHOLE from the seg side of
-    * the join, with the drop LOUD (capDroppedLast / stderr, the
-    * hamming-cap contract; see [[Dedup.capKeyMembers]] for why
-    * whole-key). Normal corpora (including the sf10 soak, whose
-    * densest planted clique is ~100 copies) never reach it, so the cap
-    * is a skew guard, not a recall ceiling — and when it does fire,
-    * the counter says so. */
-  private[graft] val D14MaxKeyMembers = 1000
-
   private[graft] def d14Pairs(s: SparkSession, dir: String,
-      maxKeyMembers: Int = D14MaxKeyMembers,
-      lenBucketKey: Boolean = false): DataFrame = {
+      maxKeyMembers: Int = D14MaxKeyMembers): DataFrame = {
     val base = docs(s, dir).select(col("doc_id"), col("lang"),
         col("n_chars"), substring(col("text"), 1, 40).as("prefix"))
-      // distinct 3-gram hash set per prefix, computed ONCE per document
-      // (not per candidate pair) — feeds D14Probe's count prefilter
-      .withColumn("g", graft.functions.SketchExpressions
-        .charNgramHashes(col("prefix"), 3))
     // PassJoin segment blocking (Li/Deng/Feng, VLDB'11) over the
     // equal-length 40-char prefixes: ed(a,b) <= K with K+1 segments of b
     // leaves at least one segment untouched by any edit, so it occurs
@@ -2427,35 +2424,13 @@ object PipelineQueries {
       struct(lit(i).as("i"),
         substring(col("prefix"), st + 1, ln).as("s"))
     }: _*)
-    // lenBucketKey composes the |Δn| <= 24 length constraint into the
-    // blocking key (probe side on floor(n_y/50), seg side on the 1–2
-    // buckets covering n_x ± 24 — coverage exact, candidate multiset
-    // within the length band identical). Measured r16 at sf10 in an
-    // interleaved same-session A/B (tools/D14BucketAb): bucket_key
-    // 38.25 s vs flat_key 35.25 s median — the 2× seg-stream blowup
-    // (sort/build) costs MORE than the rejected pairs' condition evals
-    // saved (a rejected pair never materializes a row; it is one
-    // join-condition evaluation). Default stays FLAT; the toggle and
-    // the proof stay for the receipt. The real sf10 wall is the probe
-    // explode→distinct→cap pipeline (667 core-s, 1.9 GB shuffled,
-    // StageProfile r16) — attacked by the map-side array_distinct
-    // dedup below (the full distinct exchange was within-document
-    // dedup in disguise).
-    def lenBucket(n: org.apache.spark.sql.Column) =
-      floor(n / 50.0).cast("long")
-    val segs0 = long.select(col("doc_id").as("id_x"),
+    // The key stays flat: composing the |Δn| <= 24 length bucket into
+    // it was measured 8% slower at sf10 and rejected
+    // (OPTIMIZATION_r16.md §4, hypothesis A).
+    val segs = long.select(col("doc_id").as("id_x"),
         col("n_chars").as("n_x"), col("lang"),
         explode(segExprs).as("seg"))
-    val segs =
-      if (lenBucketKey) segs0
-        .select(col("id_x"), col("n_x"), col("lang"), col("seg"),
-          explode(array_distinct(array(
-            lenBucket(col("n_x") - 24), lenBucket(col("n_x") + 24))))
-            .as("bkt"))
-        .select(col("id_x"), col("n_x"),
-          xxhash64(col("lang"), col("bkt"), col("seg.i"), col("seg.s"))
-            .as("k"))
-      else segs0.select(col("id_x"), col("n_x"),
+      .select(col("id_x"), col("n_x"),
         xxhash64(col("lang"), col("seg.i"), col("seg.s")).as("k"))
     // The probe-window dedup is WITHIN-document by construction (the
     // old distinct key was (id_y, n_y, k) and id_y differs across
@@ -2465,7 +2440,7 @@ object PipelineQueries {
     // paid a full distinct shuffle of the exploded stream for exactly
     // this dedup: 501 core-s of partial hashmaps + an 835 MB exchange
     // at sf10 (StageProfile r16), the entry's #2 stage. Keys are
-    // bit-identical (same xxhash64 over (lang[, bucket], i, s)), so
+    // bit-identical (same xxhash64 over (lang, i, s)), so
     // the downstream cap/join sees the identical row multiset.
     // (A seg-key Bloom prefilter here was measured and REJECTED, like
     // r13's q-gram idea: 3–4-char segments are dense in content space
@@ -2477,12 +2452,8 @@ object PipelineQueries {
       o <- -S to S
       p = st + o
       if p >= 0 && p + ln <= L
-    } yield {
-      val s = substring(col("prefix"), p + 1, ln)
-      if (lenBucketKey)
-        xxhash64(col("lang"), lenBucket(col("n_chars")), lit(i), s)
-      else xxhash64(col("lang"), lit(i), s)
-    }): _*)
+    } yield xxhash64(col("lang"), lit(i),
+      substring(col("prefix"), p + 1, ln))): _*)
     val probes = long.select(col("doc_id").as("id_y"),
       col("n_chars").as("n_y"),
       explode(array_distinct(probeHashExprs)).as("k"))
@@ -2520,15 +2491,15 @@ object PipelineQueries {
     // into the verify. Past the gate (a 100 TB documents table) the
     // attaches become ordinary shuffled joins keyed by id, the shape
     // the old code always paid.
-    def attach(idAlias: String, pfxAlias: String, gAlias: String) = {
+    def attach(idAlias: String, pfxAlias: String) = {
       val sel = base.select(col("doc_id").as(idAlias),
-        col("prefix").as(pfxAlias), col("g").as(gAlias))
+        col("prefix").as(pfxAlias))
       if (Dedup.statsBytes(base).exists(_ < (512L << 20))) broadcast(sel)
       else sel
     }
     cands
-      .join(attach("id_a", "pfx_a", "g_a"), "id_a")
-      .join(attach("id_b", "pfx_b", "g_b"), "id_b")
+      .join(attach("id_a", "pfx_a"), "id_a")
+      .join(attach("id_b", "pfx_b"), "id_b")
   }
 
   // s25: late-interaction (MaxSim) retrieval — ColBERT-style scoring

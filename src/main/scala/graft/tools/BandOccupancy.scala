@@ -1,5 +1,4 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Bucket-occupancy probe for the banded-hamming join: per band of the
@@ -11,12 +10,7 @@ object BandOccupancy {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val maxBucket = args.drop(1).headOption.map(_.toInt).getOrElse(1000)
-    val spark = graft.LocalTuning(SparkSession.builder())
-      .appName("graft-bandoccupancy")
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalTuning.session(32).getOrCreate()
     val e = graft.Tables.load(spark, sfDir, "embeddings")
     val n = e.count()
     val (w, h) = graft.operators.Dedup.autoSrpParams(n)

@@ -1,7 +1,6 @@
 package graft.tools
 
 import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
-import org.apache.spark.sql.SparkSession
 
 /** Concurrent-query posture bench: the reference coordinator serves many
   * dashboard queries simultaneously (one Akka stream per request); the
@@ -90,19 +89,9 @@ object ConcurrentBench {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val threads = args.drop(1).headOption.map(_.toInt).getOrElse(8)
     val names = if (args.length > 2) args.drop(2).toSeq else DefaultSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.LocalTuning(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+    val spark = graft.LocalTuning.session(32)
       .config("spark.scheduler.mode", "FAIR")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // A/B knob for the broadcast-build contention experiment (static
-      // SQL conf, must be set before the context exists)
-      .config("spark.sql.broadcastExchange.maxThreadThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BCAST_THREADS", "128"))
       .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     graft.Tables.names.foreach { n =>
       try graft.Tables.load(spark, sfDir, n).count()
       catch { case _: Throwable => }

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump `explain formatted` of selected SparkEntry queries to
   * stdout for plan review (pushdown, pruning, codegen spans). Usage:
   * runMain graft.tools.ExplainDump <sfDir> [queryName ...]
@@ -10,12 +8,7 @@ object ExplainDump {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val wanted = args.drop(1).toSet
-    val spark = graft.LocalTuning(SparkSession.builder())
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.LocalTuning.session(4).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     graft.SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => wanted.isEmpty || wanted.contains(n) }

@@ -1,5 +1,4 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 
 /** Assignment-floor attribution (r11 verdict task 6): time the
   * ASSIGNMENT subplan of each linear-slope entry (s33/s34/s37) against
@@ -12,13 +11,7 @@ import org.apache.spark.sql.SparkSession
 object FloorProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val spark = graft.LocalTuning(SparkSession.builder())
-      .appName("graft-floorprofile")
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.driver.memory", "24g")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalTuning.session(32).getOrCreate()
     val iters = sys.env.getOrElse("SPARK_GRAFT_TIMEQ_ITERS", "3").toInt
     graft.queries.PipelineQueries.floorProbes(spark, sfDir).foreach {
       case (name, mk) =>

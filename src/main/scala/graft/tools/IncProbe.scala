@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev probe: driver-side build cost vs execution cost of the
   * ast_incremental_* family (VERDICT r16 item 8). Each entry's wall
   * splits into (a) `fn(s, dir)` — evaluateIncremental + the
@@ -20,15 +18,7 @@ object IncProbe {
       else Seq("ast_incremental_chart", "ast_incremental_reverse",
         "ast_incremental_formula", "ast_incremental_tags",
         "ast_incremental_exemplars", "ast_incremental_cardinality")
-    val spark = graft.LocalTuning(SparkSession.builder())
-      .appName("graft-incprobe")
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory", "24g")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalTuning.session(32).getOrCreate()
     val iters = sys.env.getOrElse("SPARK_GRAFT_TIMEQ_ITERS", "3").toInt
     names.foreach { n =>
       val fn = graft.SparkEntry.queries(n)

@@ -78,13 +78,7 @@ object MediaSoak {
     .where(col("n_matches") >= 2)
 
   def main(args: Array[String]): Unit = {
-    val spark = graft.LocalTuning(SparkSession.builder())
-      .appName("graft-mediasoak")
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.driver.memory", "24g")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalTuning.session(32).getOrCreate()
     val iters = sys.env.getOrElse("SPARK_GRAFT_TIMEQ_ITERS", "2").toInt
 
     def timeRuns(run: () => (Long, Long)): (Double, Long, Long) = {

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev probe: component timings for the exact-quantile selection shape
@@ -9,12 +8,7 @@ import org.apache.spark.sql.functions._
 object QProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val spark = graft.LocalTuning(SparkSession.builder()).appName("graft-qprobe")
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.driver.memory", "24g")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalTuning.session(32).getOrCreate()
     def narrow = spark.read.parquet(s"$sfDir/lineitem.parquet")
       .select(col("l_returnflag").cast("string").as("_g"),
         col("l_extendedprice").cast("double").as("_v"))

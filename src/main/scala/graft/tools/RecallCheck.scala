@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.Dedup
 import graft.functions.SketchExpressions
@@ -18,19 +17,13 @@ object RecallCheck {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val threshold = if (args.length > 1) args(1).toDouble else 0.8
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.LocalTuning(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalTuning.session(32).getOrCreate()
     val docs = graft.Tables.load(spark, sfDir, "documents")
     val sets = docs.select(col("doc_id").as("id"),
       SketchExpressions.wordShingleHashes(
         Dedup.tokens(col("text")), 3).as("sh"))
     val a = sets.select(col("id").as("id_a"), col("sh").as("sh_a"))
-      .repartition(cpus.toInt, col("id_a"))
+      .repartition(spark.sparkContext.defaultParallelism, col("id_a"))
     val b = broadcast(sets.select(col("id").as("id_b"), col("sh").as("sh_b")))
     val exact = a.join(b, col("id_a") < col("id_b"))
       .where(SketchExpressions.jaccardSorted(col("sh_a"), col("sh_b"))

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Targeted verification runner: like graft.Verify but for a named subset
@@ -15,14 +14,7 @@ object RunOne {
     val sfDir = args(0)
     val outDir = args(1)
     val names = args.drop(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.LocalTuning(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalTuning.session(4).getOrCreate()
     new java.io.File(outDir).mkdirs()
     names.foreach { name =>
       val fn = graft.SparkEntry.queries.getOrElse(

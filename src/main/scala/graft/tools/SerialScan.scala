@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 import scala.collection.mutable.ArrayBuffer
 
 /** Dev sweep: run EVERY SparkEntry query once (warm) and flag entries
@@ -16,12 +15,7 @@ object SerialScan {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val minMs = args.drop(1).headOption.map(_.toLong).getOrElse(250L)
-    val spark = graft.LocalTuning(SparkSession.builder())
-      .appName("graft-serialscan")
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.driver.memory", "24g")
-      .getOrCreate()
+    val spark = graft.LocalTuning.session(32).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     graft.Tables.names.foreach { n =>
       try graft.Tables.load(spark, sfDir, n).count()

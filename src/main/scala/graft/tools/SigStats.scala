@@ -1,5 +1,4 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Signature-duplication probe: how much of the banded-hamming candidate
@@ -9,12 +8,7 @@ import org.apache.spark.sql.functions._
 object SigStats {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val spark = graft.LocalTuning(SparkSession.builder())
-      .appName("graft-sigstats")
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalTuning.session(32).getOrCreate()
     val e = graft.Tables.load(spark, sfDir, "embeddings")
     val n = e.count()
     val (w, h) = graft.operators.Dedup.autoSrpParams(n)

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 import scala.collection.mutable.ArrayBuffer
 
 /** Dev tool: run a named SparkEntry query warm and print per-stage wall
@@ -13,12 +12,7 @@ object StageProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val names = args.drop(1)
-    val spark = graft.LocalTuning(SparkSession.builder()).appName("graft-stageprofile")
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.driver.memory", "24g")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalTuning.session(32).getOrCreate()
     case class St(job: Int, stage: Int, name: String, subMs: Long, ms: Long,
       tasks: Int, runMs: Long, deserMs: Long,
       shuffleReadMB: Double, shuffleWriteMB: Double)

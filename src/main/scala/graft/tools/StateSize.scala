@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** State-store size measurement for the stateful streaming entries —
@@ -20,14 +19,7 @@ object StateSize {
       else Seq("st13_stream_outer_join", "st14_dedup_bounded_state",
         "st24_dedup_rocksdb_state", "st16_rocksdb_state",
         "st19_timer_sessions", "st20_map_state")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.LocalTuning(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalTuning.session(32).getOrCreate()
 
     val last = new scala.collection.concurrent.TrieMap[
       String, (Long, Long, Long, Long)]() // rows, memB, rocksSstB, batches

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** Dev probe for the streaming family's per-trigger floor (VERDICT r15
@@ -22,15 +21,7 @@ object StreamProfile {
       if (args.length > 1) args.drop(1).toSet
       else Set("st1_stream_window", "st2_running_stats",
         "st13_stream_outer_join", "st19_timer_sessions")
-    val spark = graft.LocalTuning(SparkSession.builder())
-      .appName("graft-streamprofile")
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory", "24g")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalTuning.session(32).getOrCreate()
     // A/B toggle for the r16 checksum-manager hypothesis: Spark 4.1's
     // ChecksumCheckpointFileManager awaits an async checksum-file write
     // on EVERY checkpoint-file close (state deltas, offsets, commits) —

@@ -1,14 +1,8 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 object TimeQ {
   def main(args: Array[String]): Unit = {
     val (sfDir, names) = (args(0), args.drop(1).toSeq)
-    val spark = graft.LocalTuning(SparkSession.builder()).appName("graft-timeq")
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.driver.memory", "24g")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalTuning.session(32).getOrCreate()
     val iters = sys.env.getOrElse("SPARK_GRAFT_TIMEQ_ITERS", "3").toInt
     names.foreach { n =>
       val fn = graft.SparkEntry.queries(n)

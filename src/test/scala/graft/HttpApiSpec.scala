@@ -277,6 +277,53 @@ class HttpApiSpec extends AnyFunSuite {
     }
   }
 
+  test("a negative /tags limit answers 400 on the batch value, the " +
+    "tag-name and the replay path") {
+    val span = ReplaySequencer.SegmentSpan("s", base, base + 48 * hour)
+    val window = s"s=$base&e=${base + 48 * hour}"
+    for ((segments, query) <- Seq(
+        (Nil, s"tagName=event_type&limit=-1&$window"), // batch values
+        (Nil, s"limit=-1&$window"), // tag names
+        (Seq(span), s"tagName=event_type&limit=-1&$window"))) // replay
+      withApi(segments) { port =>
+        val (code, text) = http(port, "POST", s"/api/v1/tags/logs?$query")
+        assert(code == 400, s"segments=${segments.size} $query: $text")
+      }
+  }
+
+  test("/tags and /cardinality scope a baseExpressions wrapper to its " +
+    "lowest id, and answer 400 to an empty wrapper") {
+    // only "a", the lowest id and last in the body, filters to clicks
+    def expr(filter: String) =
+      s"""{"dataset": "logs", "filter": $filter,
+         |  "chart": {"aggregation": "sum", "groupBys": ["event_type"]}}"""
+        .stripMargin
+    val all = expr("""{"k": "event_type", "v": [], "op": "exists"}""")
+    val wrapper = Seq("e" -> all, "d" -> all, "c" -> all, "b" -> all,
+        "a" -> expr("""{"k": "event_type", "v": ["click"], "op": "in"}"""))
+      .map { case (id, e) => s""""$id": $e""" }
+      .mkString("""{"baseExpressions": {""", ", ", "}}")
+    val tagsPath =
+      s"/api/v1/tags/logs?tagName=event_type&s=$base&e=${base + 48 * hour}"
+    val cardPath = s"/api/v1/cardinality?s=$base&e=${base + 48 * hour}"
+    withApi() { port =>
+      val (code, tags) = http(port, "POST", tagsPath, wrapper)
+      assert(code == 200, tags)
+      assert(sseEvents(tags)
+        .filter(n => Option(n.get("type")).exists(_.asText() == "data"))
+        .map(_.get("message").get("event_type").asText()) == Seq("click"))
+      val (cardCode, card) = http(port, "POST", cardPath, wrapper)
+      assert(cardCode == 200, card)
+      assert(sseEvents(card).filter(_.has("message"))
+        .map(_.get("message").asLong()) == Seq(1L))
+      for (path <- Seq(tagsPath, cardPath)) {
+        val (empty, text) =
+          http(port, "POST", path, """{"baseExpressions": {}}""")
+        assert(empty == 400, s"$path: $text")
+      }
+    }
+  }
+
   test("tag values of a non-string column stream as strings on both the " +
     "batch and the replay path") {
     val coded = (0 until 480).map { i =>

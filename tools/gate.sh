@@ -10,6 +10,8 @@
 #                            # incremental delivery, HTTP/SSE,
 #                            # the manifest build the set-up runs, and
 #                            # segment pruning with its regex planner)
+# Every mode but --serving first checks that no main builds its own
+# SparkSession (LocalTuning.session is the one recipe).
 # Exit 0 = safe to snapshot; nonzero = DO NOT COMMIT the snapshot.
 set -euo pipefail
 cd "$(dirname "$0")/.."
@@ -42,6 +44,18 @@ if [ "${1:-}" != "--quick" ] && [ "${1:-}" != "--full" ]; then
     echo "GATE FAIL: source changed after the last test run:"; echo "$stale"
     echo "run tools/gate.sh --full to regenerate reports"; exit 1
   fi
+fi
+
+# one harness session recipe: every main builds its SparkSession from
+# LocalTuning.session, so a hand-rolled builder (whose conf drifts from
+# Bench's) fails the gate
+echo "== gate: SparkSession.builder() only in LocalTuning.scala =="
+builders=$(grep -rn --include='*.scala' 'SparkSession\.builder()' src/main/scala \
+  | grep -v '^src/main/scala/graft/LocalTuning\.scala:' \
+  | grep -Ev '^[^:]+:[0-9]+:[[:space:]]*(//|\*|/\*)' || true)
+if [ -n "$builders" ]; then
+  echo "GATE FAIL: build sessions with graft.LocalTuning.session:"
+  echo "$builders"; exit 1
 fi
 
 echo "== gate: sbt Test/compile =="
