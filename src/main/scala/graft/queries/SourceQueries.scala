@@ -12,60 +12,66 @@ import graft.sources.{ManifestFileIndex, SegmentIndex}
   * asserted in SegmentIndexSpec on segments with disjoint contents. */
 object SourceQueries {
 
-  // keyed by (CONTEXT, dir) like Tables.load: newSession() requests (the
-  // FAIR multi-tenant posture) share the context and must reuse the
-  // cached manifest instead of rebuilding it inside their timed window;
-  // keying by dir alone would hand a later context a plan on a
-  // possibly-stopped predecessor
-  private val manifests = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.SparkContext, String), DataFrame]()
-
   /** Pre-build the segment dirs + manifests (ingest-time artifacts). */
   private[graft] def prepare(s: SparkSession, dir: String): Unit = {
-    manifest(s, dir).count()
-    docManifest(s, dir).count()
+    manifest(s, dir)
+    docManifest(s, dir)
     zorderLayout(s, dir)
     regionRoots(s, dir)
   }
 
-  /** Build-or-load a manifest as a DISK artifact. A `.cache()`d manifest
-    * is a recompute-on-eviction trap: the fingerprint extraction costs a
-    * full corpus scan, and once the corpus outgrows storage memory the
-    * cached blocks evict and EVERY pruned query silently re-derives the
-    * index (measured at the sf10 soak: s15's timed runs paid ~140 s of
-    * manifest recompute on top of a ~40 s scan). The reference persists
-    * its segment index in a store for the same reason — an index you
-    * can lose to memory pressure is not an index. The artifact is tiny
-    * (one row per segment); the read-back is cached for plan reuse. */
+  /** Build-or-load a manifest as a DISK artifact. A rebuild costs a full
+    * corpus scan (the fingerprint extraction: ~140 s at the sf10 soak for
+    * s15's corpus), so the manifest is persisted once per source file set
+    * and outlives the process — the reference keeps its segment index in
+    * a store for the same reason. The artifact is tiny (one row per
+    * segment); its read-back is the same driver-resident local frame
+    * [[SegmentIndex.build]] returns, schema metadata included. */
   private def manifestArtifact(s: SparkSession, prefix: String, d: String,
       files: Seq[String], build: () => DataFrame): DataFrame = {
-    // artifact dir keyed by a (name, size, mtime) signature of the
-    // source segments: regenerated testdata or rewritten segment dirs
-    // must NEVER be served a stale index (pruning with wrong
-    // fingerprints silently drops rows). The signature is a 128-bit
-    // SHA-256 prefix, not String.hashCode — a 32-bit collision's failure
-    // mode is exactly the silent-stale-index hazard the key exists to
-    // prevent.
-    val sig = artifactSignature(files)
-    val out = graft.Tables.tmpDirFor(s"${prefix}_$sig", d)
-    manifestBuildLock.synchronized {
-      if (!new java.io.File(out, "_SUCCESS").exists()) {
-        build().write.mode("overwrite").parquet(out)
-        // superseded signatures (regenerated testdata between rounds)
-        // otherwise accumulate one orphan dir per rewrite, forever
-        dropSupersededArtifacts(prefix, out)
+    val out = manifestDir(prefix, d, files)
+    manifests.computeIfAbsent((s.sparkContext, out), { _ =>
+      manifestBuildLock.synchronized {
+        if (!new java.io.File(out, "_SUCCESS").exists()) {
+          build().write.mode("overwrite").parquet(out)
+          // superseded signatures (regenerated testdata between rounds)
+          // otherwise accumulate one orphan dir per rewrite, forever
+          dropSupersededArtifacts(prefix, out)
+        }
       }
-    }
-    s.read.parquet(out).cache()
+      SegmentIndex.onDriver(s.read.parquet(out))
+    })
   }
   private val manifestBuildLock = new Object
+  // read-backs keyed by (CONTEXT, artifact dir) like Tables.load:
+  // newSession() requests (the FAIR multi-tenant posture) share the
+  // context and must reuse the manifest instead of re-reading it inside
+  // their timed window; the dir embeds the source signature, so
+  // rewritten segments key a fresh entry
+  private val manifests = new java.util.concurrent.ConcurrentHashMap[
+    (org.apache.spark.SparkContext, String), DataFrame]()
 
-  /** 128-bit (name, size, mtime) signature of a segment file set. */
-  private[graft] def artifactSignature(files: Seq[String]): String = {
+  /** Artifact dir of the `prefix` manifest over `files` of sf dir `d`,
+    * keyed by the files' [[artifactSignature]]: regenerated testdata or
+    * rewritten segment dirs must NEVER be served a stale index (pruning
+    * with wrong fingerprints silently drops rows). The signature folds
+    * in the manifest format ([[SegmentIndex.SchemaKey]]), so an artifact
+    * of an older format never matches and is reaped as a superseded
+    * sibling. */
+  private[graft] def manifestDir(prefix: String, d: String,
+      files: Seq[String]): String = graft.Tables.tmpDirFor(
+    s"${prefix}_${artifactSignature(files, SegmentIndex.SchemaKey)}", d)
+
+  /** 128-bit (name, size, mtime) signature of a file set, with `format`
+    * appended to what is hashed. A 128-bit SHA-256 prefix, not
+    * String.hashCode: a 32-bit collision's failure mode is exactly the
+    * silent-stale-artifact hazard the key exists to prevent. */
+  private[graft] def artifactSignature(files: Seq[String],
+      format: String = ""): String = {
     val src = files.sorted.map { f =>
       val x = new java.io.File(f)
       s"$f:${x.length}:${x.lastModified}"
-    }.mkString("|")
+    }.mkString("|") + format
     java.security.MessageDigest.getInstance("SHA-256")
       .digest(src.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       .take(16).map(b => f"$b%02x").mkString
@@ -108,16 +114,16 @@ object SourceQueries {
     f.delete(): Unit
   }
 
-  private def manifest(s: SparkSession, dir: String): DataFrame =
-    manifests.computeIfAbsent((s.sparkContext, dir), { case (_, d) =>
-      val sess = s
-      val segDir = StreamingQueries.streamDir(sess, d)
-      val files = new java.io.File(segDir).listFiles()
-        .filter(_.getName.endsWith(".parquet")).map(_.getAbsolutePath).toSeq
-      manifestArtifact(sess, "graft_evmanifest", d, files, () =>
-        SegmentIndex.build(sess, files, "ts",
-          ts => expr("ts div 1000000"), Seq("event_type")))
-    })
+  private def manifest(s: SparkSession, dir: String): DataFrame = {
+    val files = parquetIn(StreamingQueries.streamDir(s, dir))
+    manifestArtifact(s, "graft_evmanifest", dir, files, () =>
+      SegmentIndex.build(s, files, "ts",
+        ts => expr("ts div 1000000"), Seq("event_type")))
+  }
+
+  private def parquetIn(dir: String): Seq[String] =
+    new java.io.File(dir).listFiles()
+      .filter(_.getName.endsWith(".parquet")).map(_.getAbsolutePath).toSeq
 
   /** The events segment dir as a [[ManifestFileIndex]] relation: the
     * filters of a query over it prune segment files at plan time. A
@@ -266,13 +272,13 @@ object SourceQueries {
 
   // ------------------------------------------------- multi-region fan-out
 
-  /** Per-(session, sf dir) regional roots: events sharded into three
+  /** Per-(context, sf dir) regional manifests: events sharded into three
     * "regions" (user_id mod 3 — the reference shards a customer's
     * telemetry across regional collectors), each region a separate
     * segment dir with its OWN trigram/time manifest. Ingest-time
     * artifact, built once. */
   private val regionRootsCache = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.SparkContext, String), Seq[(String, DataFrame)]]()
+    (org.apache.spark.SparkContext, String), Seq[DataFrame]]()
 
   // the DISK artifact builds once per sf dir (marker + lock): the cache
   // above is per-CONTEXT for plan reuse (newSession() requests share it —
@@ -282,8 +288,7 @@ object SourceQueries {
   // another session is mid-read on
   private val regionBuildLock = new Object
 
-  private def regionRoots(s: SparkSession, dir: String)
-      : Seq[(String, DataFrame)] =
+  private def regionRoots(s: SparkSession, dir: String): Seq[DataFrame] =
     regionRootsCache.computeIfAbsent((s.sparkContext, dir), { case (_, d) =>
       val sess = s
       val base = graft.Tables.tmpDirFor("graft_regions", d)
@@ -302,15 +307,10 @@ object SourceQueries {
         }
       }
       (0 until 3).map { r =>
-        val root = s"$base/region$r"
-        val files = new java.io.File(root).listFiles()
-          .filter(_.getName.endsWith(".parquet"))
-          .map(_.getAbsolutePath).toSeq
-        val mf = manifestArtifact(sess, s"graft_regmanifest$r", d, files, () =>
+        val files = parquetIn(s"$base/region$r")
+        manifestArtifact(sess, s"graft_regmanifest$r", d, files, () =>
           SegmentIndex.build(sess, files, "ts",
             ts => expr("ts div 1000000"), Seq("event_type")))
-        mf.count()
-        (root, mf)
       }
     })
 
@@ -332,7 +332,7 @@ object SourceQueries {
         |  "filter": {"k": "event_type", "v": ["click", "view"], "op": "in"},
         |  "chart": {"aggregation": "sum", "groupBys": ["event_type"]}
         |}}}""".stripMargin)
-    val regional = regionRoots(s, dir).map { case (_, mf) =>
+    val regional = regionRoots(s, dir).map { mf =>
       ManifestFileIndex.relation(s, mf, "ts", _ / 1000000L, Set("event_type"))
     }
     val unioned = regional.reduce(_ unionByName _)
@@ -352,18 +352,11 @@ object SourceQueries {
     * grep (contamination hunting, PII audits, targeted re-filters at
     * 100 TB) should open only segments whose fingerprint set can match.
     * doc_id stands in for the time axis (id-range bounds prune too). */
-  private val docManifests = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.SparkContext, String), DataFrame]()
-
-  private def docManifest(s: SparkSession, dir: String): DataFrame =
-    docManifests.computeIfAbsent((s.sparkContext, dir), { case (_, d) =>
-      val sess = s
-      val segDir = StreamingQueries.docStreamDir(sess, d)
-      val files = new java.io.File(segDir).listFiles()
-        .filter(_.getName.endsWith(".parquet")).map(_.getAbsolutePath).toSeq
-      manifestArtifact(sess, "graft_docmanifest", d, files, () =>
-        SegmentIndex.build(sess, files, "doc_id", identity, Seq("text")))
-    })
+  private def docManifest(s: SparkSession, dir: String): DataFrame = {
+    val files = parquetIn(StreamingQueries.docStreamDir(s, dir))
+    manifestArtifact(s, "graft_docmanifest", dir, files, () =>
+      SegmentIndex.build(s, files, "doc_id", identity, Seq("text")))
+  }
 
   /** S4 over the corpus: contains() search through the trigram index,
     * then the exact predicate. Pruning is sound → oracle vs the full

@@ -290,8 +290,7 @@ object StreamingQueries {
   // (the policy pass ends by publishing the manifest the next planner
   // reads), so neither belongs in the per-query path
   private val policyLayouts =
-    new java.util.concurrent.ConcurrentHashMap[String,
-      (graft.operators.Compaction.PolicyResult, DataFrame)]()
+    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
 
   /** st23: the full ingest → threshold → compact → pruned-query loop —
     * compaction wired in as POLICY, not a one-shot job. The streaming
@@ -309,32 +308,27 @@ object StreamingQueries {
   def st23_compaction_policy(s: SparkSession, dir: String): DataFrame = {
     val base = rollupSegmentsBase(s, dir)
     val segFiles = listParquet(new java.io.File(s"$base/segments")).sorted
-    def typedOut = s.createDataFrame(
+    if (segFiles.isEmpty) return s.createDataFrame(
       new java.util.ArrayList[org.apache.spark.sql.Row](),
       StructType(Seq(
         StructField("event_type", StringType),
         StructField("n_windows", LongType),
         StructField("n_events", LongType),
         StructField("total", DoubleType))))
-    if (segFiles.isEmpty) return typedOut
     val dayOf = (f: String) => {
       val m = "date_int=(\\d+)".r.findFirstMatchIn(f)
       m.map(_.group(1)).getOrElse("unpartitioned")
     }
-    val (_, manifest) = policyLayouts.computeIfAbsent(base, { _ =>
+    val manifest = policyLayouts.computeIfAbsent(base, { _ =>
       val layout = graft.operators.Compaction.applyPolicy(s, segFiles,
         s"$base/policy", maxFilesPerKey = 23, targetBytes = 4L << 20,
         keyOf = dayOf)
       // the post-policy manifest: the layout the NEXT query planner sees
-      val mf = graft.sources.SegmentIndex.build(s, layout.files,
-        "ts", identity, Seq("event_type"), mergeSchema = false).cache()
-      mf.count()
-      (layout, mf)
+      graft.sources.SegmentIndex.build(s, layout.files,
+        "ts", identity, Seq("event_type"), mergeSchema = false)
     })
-    val listed = graft.sources.SegmentIndex
-      .prune(manifest, None, Set.empty, st11Start, st11End)
-    if (listed.isEmpty) return typedOut
-    s.read.parquet(listed: _*)
+    graft.sources.ManifestFileIndex
+      .relation(s, manifest, "ts", identity, Set.empty)
       .where(col("ts") >= st11Start && col("ts") < st11End)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_windows"),

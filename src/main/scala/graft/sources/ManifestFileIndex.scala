@@ -10,7 +10,7 @@ import org.apache.spark.sql.catalyst.expressions.{
 import org.apache.spark.sql.execution.datasources.{
   FileIndex, HadoopFsRelation, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Catalyst-integrated segment skipping: a [[FileIndex]] whose
@@ -195,10 +195,10 @@ object ManifestFileIndex {
     }
   }
 
-  /** Load manifest rows from the DataFrame shape [[SegmentIndex.build]]
-    * produces. Driver-side by design: the manifest is planning metadata
-    * (KBs/segment-thousand), exactly what the reference fetches from its
-    * `*_seg` tables before touching data. */
+  /** The manifest rows of a [[SegmentIndex.build]] result: planning
+    * metadata (KBs per thousand segments), exactly what the reference
+    * fetches from its `*_seg` tables before touching data. Over the local
+    * frame `build` returns this runs no Spark job. */
   def segmentsOf(manifest: DataFrame): Seq[Segment] =
     manifest.select("file", "row_count", "min_ts", "max_ts", "fingerprints")
       .collect()
@@ -208,25 +208,29 @@ object ManifestFileIndex {
       }.toSeq
 
   /** DataFrame over the manifest's segments with plan-time pruning wired
-    * into the scan. `dataSchema` defaults to the first segment's parquet
+    * into the scan. Its schema is the data schema the build inferred (the
+    * merged one under `mergeSchema`), read from the manifest's `file`
+    * column metadata: no footer is read and no Spark job runs. A manifest
+    * without segments (every file empty) gives an empty frame of that
     * schema. */
   def relation(spark: SparkSession, manifest: DataFrame, tsCol: String,
-      tsToMillis: Long => Long, indexed: Set[String],
-      dataSchema: Option[StructType] = None): DataFrame = {
-    val segs = segmentsOf(manifest)
-    require(segs.nonEmpty, "empty manifest")
-    val schema = dataSchema.getOrElse(
-      spark.read.parquet(segs.head.file).schema)
+      tsToMillis: Long => Long, indexed: Set[String]): DataFrame = {
+    val meta = manifest.schema("file").metadata
+    require(meta.contains(SegmentIndex.SchemaKey),
+      "the manifest carries no data schema; build it with SegmentIndex.build")
     frameOver(spark,
-      new ManifestFileIndex(spark, segs, tsCol, tsToMillis, indexed), schema)
+      new ManifestFileIndex(spark, segmentsOf(manifest), tsCol, tsToMillis,
+        indexed),
+      DataType.fromJson(meta.getString(SegmentIndex.SchemaKey))
+        .asInstanceOf[StructType])
   }
 
   /** DataFrame over the data files of `paths` (files or Spark output
     * directories), listed by [[listPaths]] — no Spark listing job, which
     * `spark.read.parquet` launches (one task per path) past 32 paths —
     * with the schema inferred from their footers, merged across files
-    * when `mergeSchema` (else the first file's), as `spark.read.parquet`
-    * does. */
+    * when `mergeSchema` (else the first file's) and made nullable, as
+    * `spark.read.parquet` does. */
   private[sources] def scanOf(spark: SparkSession, paths: Seq[String],
       mergeSchema: Boolean): DataFrame = {
     val files = listPaths(spark, paths).flatMap(_._2).distinctBy(_.getPath)
@@ -234,7 +238,7 @@ object ManifestFileIndex {
       Map("mergeSchema" -> mergeSchema.toString), files)
     require(schema.isDefined,
       s"no parquet data files under ${paths.take(3).mkString(", ")}")
-    frameOver(spark, new Listed(files), schema.get)
+    frameOver(spark, new Listed(files), GraftColumnBridge.nullable(schema.get))
   }
 
   private def frameOver(spark: SparkSession, index: FileIndex,

@@ -15,11 +15,13 @@ import graft.compile.FilterCompiler
   * QueryEngineV2.scala:700-951, set algebra NLPUtils.scala:155-187).
   *
   * Design (scale-first):
-  *  - The manifest is itself a small DataFrame/parquet table: one row per
+  *  - The manifest is driver-resident planning input: one row per
   *    segment file with (file, row_count, min/max of the time column,
-  *    fingerprint set). It is built once at ingest by a distributed scan
-  *    and consulted at plan time — the 100 TB scan is replaced by a
-  *    manifest read of a few MB per million segments.
+  *    fingerprint set), held as a local frame (a `LocalRelation`) whose
+  *    `file` column metadata carries the segments' data schema. It is
+  *    built once at ingest by a distributed scan, collected once, and
+  *    consulted at plan time with no Spark job — the 100 TB scan is
+  *    replaced by a few MB of rows per million segments.
   *  - Fingerprints are 64-bit hashes of (column, trigram-of-value). A
   *    predicate value's trigrams must ALL be present in a segment for the
   *    segment to possibly match eq/contains on an indexed column —
@@ -39,6 +41,12 @@ import graft.compile.FilterCompiler
   * (`dateInt=/hour=`) remain complementary (Catalyst partition pruning).
   */
 object SegmentIndex {
+
+  /** Metadata key, on the manifest's `file` column, of the segments' data
+    * schema (JSON). It also names the manifest format: a persisted
+    * manifest folds it into its artifact key, so one written before the
+    * schema rode along is never read back. */
+  private[graft] val SchemaKey = "graft.manifest.dataSchema"
 
   /** Marker fingerprint recording "column c WAS fingerprinted when this
     * manifest was built". Pruning on column c is sound only when this
@@ -89,8 +97,12 @@ object SegmentIndex {
     * `collect_set` of raw values would be faster still, but it holds a
     * file's whole free-text column in one aggregation buffer.
     *
-    * A zero-row file yields no manifest row: it holds nothing to scan, so
-    * it can be pruned always. `files` must be non-empty.
+    * The rows are collected once and returned as a local frame carrying
+    * the data schema [[ManifestFileIndex.relation]] reads (see
+    * [[SchemaKey]]); do not `.cache()` it, a cached local frame runs jobs
+    * where the plain one runs none. A zero-row file yields no manifest
+    * row: it holds nothing to scan, so it can be pruned always. `files`
+    * must be non-empty.
     */
   def build(spark: SparkSession, files: Seq[String], tsCol: String,
       tsToMillis: Column => Column, indexed: Seq[String],
@@ -104,7 +116,8 @@ object SegmentIndex {
     val idx = indexed.filter(present.contains)
     val file = input_file_name().as("file")
     val ts = tsToMillis(col(s"`$tsCol`")).as("_ts_ms")
-    if (idx.isEmpty) // bounds-only manifest: empty fingerprint sets
+    // bounds-only manifest without indexed columns: empty fingerprint sets
+    val rows = if (idx.isEmpty)
       df.select(file, ts).groupBy(col("file")).agg(
           count(lit(1)).as("row_count"),
           min(col("_ts_ms")).as("min_ts"),
@@ -130,7 +143,20 @@ object SegmentIndex {
           max(col("_hi")).as("max_ts"),
           collect_set(col("fp")).as("fingerprints"))
     }
+    val meta = new org.apache.spark.sql.types.MetadataBuilder()
+      .putString(SchemaKey, df.schema.json).build()
+    onDriver(rows.withMetadata("file", meta))
   }
+
+  /** `m`'s rows, collected, as a local frame of `m`'s schema. Encoded
+    * through the row encoder, the frame holds unsafe rows: a fingerprint
+    * costs 8 bytes, not the boxed Long `createDataFrame(rows, schema)`
+    * keeps per array element. The encoder drops column metadata; the
+    * select puts it back. */
+  private[graft] def onDriver(m: DataFrame): DataFrame =
+    m.sparkSession.createDataset(m.collect().toSeq)(
+        org.apache.spark.sql.Encoders.row(m.schema))
+      .select(m.schema.map(f => col(f.name).as(f.name, f.metadata)): _*)
 
   // ---------------------------------------------------------- plan pruning
 

@@ -21,6 +21,11 @@ object GraftColumnBridge {
       spark.asInstanceOf[classic.SparkSession],
       execution.datasources.LogicalRelation(relation, isStreaming = false))
 
+  /** `s` with every field, nested ones included, nullable — the schema
+    * `spark.read.parquet` reports for files that declare required columns
+    * (`StructType.asNullable` is private[spark]). */
+  def nullable(s: types.StructType): types.StructType = s.asNullable
+
   /** Formatted plan text of a DataFrame without executing it —
     * `queryExecution`/`ExplainMode` live behind the classic API. */
   def explainString(df: DataFrame, mode: String = "formatted"): String =

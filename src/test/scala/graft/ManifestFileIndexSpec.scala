@@ -182,6 +182,29 @@ class ManifestFileIndexSpec extends AnyFunSuite {
       .toSeq == Seq(("svc-match", 200L)))
   }
 
+  test("relation and prune over a build result run no Spark job, and " +
+    "a warm s4 call runs at most 3") {
+    val sc = spark.sparkContext
+    manifest // built outside the logs
+    val relJobs = JobLog.during(sc) { log =>
+      relation(); log.all
+    }
+    assert(relJobs.isEmpty, relJobs.mkString("\n"))
+    val pruneJobs = JobLog.during(sc) { log =>
+      SegmentIndex.prune(manifest,
+        Some(graft.ast.Filter("service", List("svc-bravo"), graft.ast.Ops.EQ)),
+        Set("service"), 0L, 3000L)
+      log.all
+    }
+    assert(pruneJobs.isEmpty, pruneJobs.mkString("\n"))
+    val s4 = graft.queries.SourceQueries.queries("s4_pruned_scan")
+    s4(spark, SparkTestSession.sfDir).collect() // builds the artifacts
+    val s4Jobs = JobLog.during(sc) { log =>
+      s4(spark, SparkTestSession.sfDir).collect(); log.all
+    }
+    assert(s4Jobs.size <= 3, s4Jobs.mkString("\n"))
+  }
+
   test("the JSON-AST path over the FileIndex relation skips segments") {
     // the AST entry's own time range must reach the scan through the
     // whole QueryEngine pipeline and prune the 4-file events layout

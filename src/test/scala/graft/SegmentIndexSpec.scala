@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ast._
-import graft.sources.SegmentIndex
+import graft.queries.SourceQueries
+import graft.sources.{ManifestFileIndex, SegmentIndex}
 
 class SegmentIndexSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -30,7 +31,6 @@ class SegmentIndexSpec extends AnyFunSuite {
   private lazy val manifest = {
     val (_, segs) = segDir
     SegmentIndex.build(spark, segs, "ts", identity, Seq("service", "level"))
-      .cache()
   }
   private val indexed = Set("service", "level")
 
@@ -473,25 +473,106 @@ class SegmentIndexSpec extends AnyFunSuite {
       .repartition(40).write.parquet(dir)
     val files = parquetFiles(dir)
     assert(files.size == 40)
-    val (m, jobs) = JobLog.during(spark.sparkContext) { log =>
-      val m = SegmentIndex.build(spark, files, "ts", identity, Seq("service"))
-      m.collect()
-      (m, log.all)
-    }
-    assert(jobs.nonEmpty && jobs.forall(_.tasks < files.size),
-      jobs.mkString("\n"))
+    // build returns a local frame: the scan is in the plans it executes
     import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.{
       AdaptiveSparkPlanExec, QueryStageExec}
+    val executed = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        executed.add(qe.executedPlan)
+      override def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val (m, jobs) = try JobLog.during(spark.sparkContext) { log =>
+      val m = SegmentIndex.build(spark, files, "ts", identity, Seq("service"))
+      (m, log.all)
+    } finally spark.listenerManager.unregister(listener)
+    assert(jobs.nonEmpty && jobs.forall(_.tasks < files.size),
+      jobs.mkString("\n"))
     def scans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
       case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
       case q: QueryStageExec => scans(q.plan)
       case f: FileSourceScanExec => Seq(f)
       case other => other.children.flatMap(scans)
     }
-    assert(scans(m.queryExecution.executedPlan).size == 1,
-      m.queryExecution.executedPlan)
+    import scala.jdk.CollectionConverters._
+    assert(executed.asScala.toSeq.flatMap(scans).size == 1,
+      executed.asScala.mkString("\n"))
     assert(rowsOf(m).map(_._2).sum == 400L)
+  }
+
+  test("relation refuses a manifest without the data schema metadata") {
+    val (_, segs) = segDir
+    val dir = tempDir("graft_seg_nometa") + "/m"
+    perRowManifest(segs, Seq("service")).write.parquet(dir)
+    val e = intercept[IllegalArgumentException](ManifestFileIndex.relation(
+      spark, spark.read.parquet(dir), "ts", identity, Set("service")))
+    assert(e.getMessage.contains("SegmentIndex.build"), e.getMessage)
+  }
+
+  test("a manifest artifact of an older format never matches its key " +
+    "and is reaped as a superseded sibling") {
+    val (_, segs) = segDir
+    val d = tempDir("graft_seg_fmt") // stands in for an sf dir
+    val live = SourceQueries.manifestDir("graft_evmanifest", d, segs)
+    // the key an artifact without the schema metadata was written under
+    val old = Tables.tmpDirFor(
+      s"graft_evmanifest_${SourceQueries.artifactSignature(segs)}", d)
+    assert(live != old)
+    try {
+      Seq(live, old).foreach(new java.io.File(_).mkdirs())
+      new java.io.File(old).setLastModified(
+        System.currentTimeMillis() - SourceQueries.supersededGraceMs - 1000)
+      SourceQueries.dropSupersededArtifacts("graft_evmanifest", live)
+      assert(!new java.io.File(old).exists(), "stale artifact not reaped")
+      assert(new java.io.File(live).exists())
+    } finally Seq(live, old).foreach(p => new java.io.File(p).delete())
+  }
+
+  test("a manifest over only zero-row files gives an empty relation " +
+    "of their schema") {
+    import spark.implicits._
+    val dir = tempDir("graft_seg_allempty")
+    Seq("a", "b").foreach(n => Seq.empty[(Long, String, Double)]
+      .toDF("ts", "service", "value").coalesce(1).write.parquet(s"$dir/$n"))
+    val files = parquetFiles(s"$dir/a") ++ parquetFiles(s"$dir/b")
+    assert(files.size == 2)
+    val m = SegmentIndex.build(spark, files, "ts", identity, Seq("service"))
+    assert(m.collect().isEmpty)
+    val rel = ManifestFileIndex.relation(spark, m, "ts", identity,
+      Set("service"))
+    assert(rel.schema == spark.read.parquet(files: _*).schema, rel.schema)
+    assert(rel.where(col("service") === "svc").collect().isEmpty)
+    assert(rel.count() == 0L)
+  }
+
+  test("schema drift: a merged-schema manifest's relation exposes a " +
+    "column only the second segment has, in any manifest row order") {
+    import spark.implicits._
+    val dir = tempDir("graft_seg_drift")
+    Seq((1000L, "svc-a")).toDF("ts", "service")
+      .coalesce(1).write.parquet(s"$dir/old")
+    Seq((2000L, "svc-b", "host-1")).toDF("ts", "service", "host")
+      .coalesce(1).write.parquet(s"$dir/new")
+    val files = parquetFiles(s"$dir/old") ++ parquetFiles(s"$dir/new")
+    val m = SegmentIndex.build(spark, files, "ts", identity, Seq("service"))
+    val rows = m.collect().toSeq
+    assert(rows.size == 2)
+    import scala.jdk.CollectionConverters._
+    for (order <- Seq(rows, rows.reverse)) {
+      val rel = ManifestFileIndex.relation(spark,
+        spark.createDataFrame(order.asJava, m.schema), "ts", identity,
+        Set("service"))
+      assert(rel.schema ==
+        spark.read.option("mergeSchema", "true").parquet(files: _*).schema)
+      assert(rel.select("ts", "host").orderBy("ts").collect()
+        .map(r => (r.getLong(0), Option(r.getString(1)))).toSeq ==
+        Seq((1000L, None), (2000L, Some("host-1"))))
+    }
   }
 
   test("manifest artifact signature rotates on a one-byte file change") {

@@ -116,7 +116,7 @@ class SegmentPruningPropertySpec extends AnyFunSuite {
       }
       val manifest = SegmentIndex.build(spark,
           (0 until segments).map(seg => s"$dir/seg$seg"), "ts",
-          ts => expr("ts div 1000000"), built).cache()
+          ts => expr("ts div 1000000"), built)
       val files = manifest.select("file").as[String].collect().toSeq
       def segOf(file: String): Int =
         (0 until segments).find(seg => file.contains(s"/seg$seg/")).get
@@ -167,7 +167,6 @@ class SegmentPruningPropertySpec extends AnyFunSuite {
         checked += 1
         skipped += files.size - kept.size
       }
-      manifest.unpersist()
     }
     assert(checked == 72)
     assert(skipped > 0, "no case pruned a file: the property is vacuous")

@@ -10,6 +10,7 @@
 #                            # incremental delivery, HTTP/SSE,
 #                            # the manifest build the set-up runs, and
 #                            # segment pruning with its regex planner)
+#                            # + perfbench's Test/compile
 # Every mode but --serving first checks that no main builds its own
 # SparkSession (LocalTuning.session is the one recipe).
 # Exit 0 = safe to snapshot; nonzero = DO NOT COMMIT the snapshot.
@@ -24,6 +25,10 @@ if [ "${1:-}" = "--serving" ]; then
     graft.DriverMergeSpec graft.IncrementalDeliverySpec graft.HttpApiSpec \
     graft.api.SseStallSpec graft.SegmentIndexSpec graft.ManifestFileIndexSpec \
     graft.TrigramPropertySpec graft.SegmentPruningPropertySpec"
+  # perfbench compiles against the manifest API (SegmentIndex.build,
+  # ManifestFileIndex.segmentsOf/relation, SegmentIndex.prune)
+  echo "== gate: perfbench Test/compile =="
+  (cd perfbench && sbt --batch Test/compile)
   echo "== gate: serving specs green (not a snapshot gate) =="
   exit 0
 fi
