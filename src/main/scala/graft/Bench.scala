@@ -27,8 +27,9 @@ import org.apache.spark.sql.SparkSession
   * automatically re-run 5 more times and report the median over all
   * samples; `iters_per_query` records the per-entry total so every
   * number cited in round docs lives in a committed artifact.
-  * Query builders are idempotent (ingest-time artifacts are memoized per
-  * process via prepare()), so re-running measures the read-side plan.
+  * Query builders are idempotent (ingest-time artifacts are built once
+  * per SparkContext, most of them by prepare(); see Tables.artifact), so
+  * re-running measures the read-side plan.
   *
   * Scale slope (the 100×-claim check, judge ask r6 #4): when a smaller
   * scale factor of the same testdata exists (auto-derived sibling

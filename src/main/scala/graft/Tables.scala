@@ -18,14 +18,33 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Collision-free per-dataset tmp path: the sanitized name alone is
-    * ambiguous ("/data/sf0.1" and "/data/sf0_1" both sanitize to
-    * "_data_sf0_1" — one dataset's artifacts would silently serve the
-    * other), so the full path's spec-fixed String.hashCode rides along. */
-  private[graft] def tmpDirFor(prefix: String, dir: String): String =
-    new java.io.File(sys.props("java.io.tmpdir"),
-      s"${prefix}_${dir.replaceAll("[^a-zA-Z0-9]", "_")}_" +
-        Integer.toHexString(dir.hashCode)).getAbsolutePath
+  /** Derived data (stream segment dirs, rollups, manifests, layouts,
+    * trained codebooks) built once per (context, `name`, sf dir): the
+    * first request runs `build` with a path of its own, every later one
+    * of the context, from any session, gets the value. Keyed by
+    * SparkContext like [[load]], so an artifact is never older than the
+    * tables its entry and its oracle read. The path, not yet created,
+    * lies under the context's driver temp dir
+    * (`SparkFiles.getRootDirectory`), which Spark deletes when the
+    * context stops and at JVM exit: no process reads another's files.
+    * Builds may request other artifacts; each key holds a lazy value,
+    * so a build runs outside the map's lock, and concurrent requests of
+    * one key wait for the one build. A failed build is retried by the
+    * next request. */
+  private[graft] def artifact[V](s: SparkSession, name: String,
+      sfDir: String)(build: String => V): V =
+    artifacts.computeIfAbsent((s.sparkContext, name, sfDir),
+      _ => new Once(() => build(scratchDir(name)))).value.asInstanceOf[V]
+
+  /** A fresh path, not yet created, under the context's driver temp dir. */
+  private[graft] def scratchDir(name: String): String =
+    new java.io.File(org.apache.spark.SparkFiles.getRootDirectory(),
+      s"${name}_${scratchSeq.incrementAndGet()}").getAbsolutePath
+
+  private final class Once[V](make: () => V) { lazy val value: V = make() }
+  private val artifacts = new java.util.concurrent.ConcurrentHashMap[
+    (org.apache.spark.SparkContext, String, String), Once[_]]()
+  private val scratchSeq = new java.util.concurrent.atomic.AtomicLong()
 
   // DataFrames are immutable logical plans — memoize per (CONTEXT, path)
   // so repeated loads reuse one relation (no re-listing / schema

@@ -212,15 +212,11 @@ object EngineQueries {
 
   // A2: metrics dataset — pre-rolled per-minute rollup_* columns
   // re-aggregated at query step. The derived metrics table is built once
-  // per sf dir (the shape metric segments have in the reference:
+  // per context and sf dir (the shape metric segments have in the reference:
   // BaseExpr.scala:376-395).
-  private val metricsDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def metricsDir(s: SparkSession, sfDir: String): String =
-    metricsDirs.computeIfAbsent(sfDir, { dir =>
-      val out = Tables.tmpDirFor("graft_metrics", dir)
-      Tables.load(s, dir, "events")
+    Tables.artifact(s, "metrics", sfDir) { out =>
+      Tables.load(s, sfDir, "events")
         .groupBy(
           (expr("ts div 1000000") - expr("ts div 1000000") % 60000L).as("ts"),
           col("event_type"))
@@ -239,9 +235,9 @@ object EngineQueries {
             .dsHllSketch(col("user_id")).as("sketch_hll"))
         .withColumn("rollup_avg", col("rollup_sum") / col("rollup_count"))
         .withColumn("name", lit("events.value"))
-        .write.mode("overwrite").parquet(out)
+        .write.parquet(out)
       out
-    })
+    }
 
   private[graft] def prepare(s: SparkSession, dir: String): Unit =
     metricsDir(s, dir)
@@ -251,14 +247,10 @@ object EngineQueries {
   // through min/max, and the sketch columns merge BYTE-WISE (DDSketch
   // proto bin addition, HLL union) — the property that lets a metrics
   // lake keep only coarse rollups for old data without losing
-  // percentiles or cardinality. Built once per sf dir.
-  private val hourDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def hourMetricsDir(s: SparkSession, sfDir: String): String =
-    hourDirs.computeIfAbsent(sfDir, { dir =>
-      val out = Tables.tmpDirFor("graft_metrics_hour", dir)
-      s.read.parquet(metricsDir(s, dir))
+  // percentiles or cardinality. Built once per context and sf dir.
+  private[graft] def hourMetricsDir(s: SparkSession, sfDir: String): String =
+    Tables.artifact(s, "metrics_hour", sfDir) { out =>
+      s.read.parquet(metricsDir(s, sfDir))
         .groupBy((col("ts") - col("ts") % 3600000L).as("ts"),
           col("event_type"))
         .agg(
@@ -273,9 +265,9 @@ object EngineQueries {
             .dsHllUnion(col("sketch_hll")).as("sketch_hll"))
         .withColumn("rollup_avg", col("rollup_sum") / col("rollup_count"))
         .withColumn("name", lit("events.value"))
-        .write.mode("overwrite").parquet(out)
+        .write.parquet(out)
       out
-    })
+    }
 
   /** Day-step query answered from the HOUR cascade (minute → hour →
     * query): the oracle recomputes the same two-level decimal

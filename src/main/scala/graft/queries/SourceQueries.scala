@@ -20,106 +20,17 @@ object SourceQueries {
     regionRoots(s, dir)
   }
 
-  /** Build-or-load a manifest as a DISK artifact. A rebuild costs a full
-    * corpus scan (the fingerprint extraction: ~140 s at the sf10 soak for
-    * s15's corpus), so the manifest is persisted once per source file set
-    * and outlives the process — the reference keeps its segment index in
-    * a store for the same reason. The artifact is tiny (one row per
-    * segment); its read-back is the same driver-resident local frame
-    * [[SegmentIndex.build]] returns, schema metadata included. */
-  private def manifestArtifact(s: SparkSession, prefix: String, d: String,
-      files: Seq[String], build: () => DataFrame): DataFrame = {
-    val out = manifestDir(prefix, d, files)
-    manifests.computeIfAbsent((s.sparkContext, out), { _ =>
-      manifestBuildLock.synchronized {
-        if (!new java.io.File(out, "_SUCCESS").exists()) {
-          build().write.mode("overwrite").parquet(out)
-          // superseded signatures (regenerated testdata between rounds)
-          // otherwise accumulate one orphan dir per rewrite, forever
-          dropSupersededArtifacts(prefix, out)
-        }
-      }
-      SegmentIndex.onDriver(s.read.parquet(out))
-    })
-  }
-  private val manifestBuildLock = new Object
-  // read-backs keyed by (CONTEXT, artifact dir) like Tables.load:
-  // newSession() requests (the FAIR multi-tenant posture) share the
-  // context and must reuse the manifest instead of re-reading it inside
-  // their timed window; the dir embeds the source signature, so
-  // rewritten segments key a fresh entry
-  private val manifests = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.SparkContext, String), DataFrame]()
+  /** The events segment dir's manifest, built once per context like
+    * every ingest artifact ([[graft.Tables.artifact]]): a build costs a
+    * corpus scan, a reuse runs no Spark job. */
+  private[graft] def manifest(s: SparkSession, dir: String): DataFrame =
+    graft.Tables.artifact(s, "evmanifest", dir) { _ =>
+      eventsManifest(s, parquetIn(StreamingQueries.streamDir(s, dir)))
+    }
 
-  /** Artifact dir of the `prefix` manifest over `files` of sf dir `d`,
-    * keyed by the files' [[artifactSignature]]: regenerated testdata or
-    * rewritten segment dirs must NEVER be served a stale index (pruning
-    * with wrong fingerprints silently drops rows). The signature folds
-    * in the manifest format ([[SegmentIndex.SchemaKey]]), so an artifact
-    * of an older format never matches and is reaped as a superseded
-    * sibling. */
-  private[graft] def manifestDir(prefix: String, d: String,
-      files: Seq[String]): String = graft.Tables.tmpDirFor(
-    s"${prefix}_${artifactSignature(files, SegmentIndex.SchemaKey)}", d)
-
-  /** 128-bit (name, size, mtime) signature of a file set, with `format`
-    * appended to what is hashed. A 128-bit SHA-256 prefix, not
-    * String.hashCode: a 32-bit collision's failure mode is exactly the
-    * silent-stale-artifact hazard the key exists to prevent. */
-  private[graft] def artifactSignature(files: Seq[String],
-      format: String = ""): String = {
-    val src = files.sorted.map { f =>
-      val x = new java.io.File(f)
-      s"$f:${x.length}:${x.lastModified}"
-    }.mkString("|") + format
-    java.security.MessageDigest.getInstance("SHA-256")
-      .digest(src.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .take(16).map(b => f"$b%02x").mkString
-  }
-
-  /** Delete sibling artifact dirs for the same (prefix, source dir) whose
-    * signature differs from the live one. Sibling names share the live
-    * dir's `<prefix>_` head and `_<sanitized-dir>_<dirhash>` tail with a
-    * different signature in between.
-    *
-    * Only siblings UNTOUCHED for [[supersededGraceMs]] are dropped: the
-    * artifact parent is the shared java.io.tmpdir, and the in-process
-    * build lock does not cover a second JVM (a concurrent test and bench
-    * run) that observed a different (size, mtime) snapshot of the same
-    * source dir — deleting its freshly-built index while one of its
-    * cached DataFrames is still lazily reading it causes transient read
-    * failures. A genuinely superseded signature means the source dir was
-    * rewritten, which happens between rounds (hours apart), so the grace
-    * window loses nothing; anything younger is plausibly live in another
-    * process and is left for that process's own next rewrite to reap. */
-  private[graft] def dropSupersededArtifacts(prefix: String,
-      liveDir: String): Unit = {
-    val live = new java.io.File(liveDir)
-    val name = live.getName
-    // tail = everything after "<prefix>_<32-hex-sig>"
-    val head = s"${prefix}_"
-    if (!name.startsWith(head) || name.length < head.length + 32) return
-    val tail = name.substring(head.length + 32)
-    val cutoff = System.currentTimeMillis() - supersededGraceMs
-    Option(live.getParentFile.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName != name &&
-        f.getName.startsWith(head) && f.getName.endsWith(tail) &&
-        f.getName.length == name.length &&
-        f.lastModified() < cutoff)
-      .foreach(deleteRecursively)
-  }
-  private[graft] val supersededGraceMs: Long = 60L * 60 * 1000
-  private def deleteRecursively(f: java.io.File): Unit = {
-    Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursively)
-    f.delete(): Unit
-  }
-
-  private def manifest(s: SparkSession, dir: String): DataFrame = {
-    val files = parquetIn(StreamingQueries.streamDir(s, dir))
-    manifestArtifact(s, "graft_evmanifest", dir, files, () =>
-      SegmentIndex.build(s, files, "ts",
-        ts => expr("ts div 1000000"), Seq("event_type")))
-  }
+  private def eventsManifest(s: SparkSession, files: Seq[String]) =
+    SegmentIndex.build(s, files, "ts", ts => expr("ts div 1000000"),
+      Seq("event_type"))
 
   private def parquetIn(dir: String): Seq[String] =
     new java.io.File(dir).listFiles()
@@ -272,47 +183,22 @@ object SourceQueries {
 
   // ------------------------------------------------- multi-region fan-out
 
-  /** Per-(context, sf dir) regional manifests: events sharded into three
-    * "regions" (user_id mod 3 — the reference shards a customer's
-    * telemetry across regional collectors), each region a separate
-    * segment dir with its OWN trigram/time manifest. Ingest-time
-    * artifact, built once. */
-  private val regionRootsCache = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.SparkContext, String), Seq[DataFrame]]()
-
-  // the DISK artifact builds once per sf dir (marker + lock): the cache
-  // above is per-CONTEXT for plan reuse (newSession() requests share it —
-  // rebuilding three regional manifests inside a concurrent request's
-  // timed window was the r9 ast_multi_region 5x task-inflation), and
-  // concurrent sessions must never overwrite the shared region files
-  // another session is mid-read on
-  private val regionBuildLock = new Object
-
+  /** Regional manifests: events sharded into three "regions" (user_id
+    * mod 3 — the reference shards a customer's telemetry across regional
+    * collectors), each region a separate segment dir with its OWN
+    * trigram/time manifest. Ingest-time artifact, built once per context:
+    * newSession() requests share it (rebuilding three regional manifests
+    * inside a concurrent request's timed window was the r9
+    * ast_multi_region 5x task-inflation). */
   private def regionRoots(s: SparkSession, dir: String): Seq[DataFrame] =
-    regionRootsCache.computeIfAbsent((s.sparkContext, dir), { case (_, d) =>
-      val sess = s
-      val base = graft.Tables.tmpDirFor("graft_regions", d)
-      regionBuildLock.synchronized {
-        val marker = new java.io.File(base, "_built")
-        if (!marker.exists()) {
-          org.apache.commons.io.FileUtils.deleteQuietly(
-            new java.io.File(base))
-          val ev = graft.Tables.load(sess, d, "events")
-          (0 until 3).foreach { r =>
-            ev.where(pmod(col("user_id"), lit(3)) === r)
-              .repartition(2)
-              .write.mode("overwrite").parquet(s"$base/region$r")
-          }
-          marker.createNewFile()
-        }
-      }
+    graft.Tables.artifact(s, "regions", dir) { base =>
+      val ev = graft.Tables.load(s, dir, "events")
       (0 until 3).map { r =>
-        val files = parquetIn(s"$base/region$r")
-        manifestArtifact(sess, s"graft_regmanifest$r", d, files, () =>
-          SegmentIndex.build(sess, files, "ts",
-            ts => expr("ts div 1000000"), Seq("event_type")))
+        ev.where(pmod(col("user_id"), lit(3)) === r)
+          .repartition(2).write.parquet(s"$base/region$r")
+        eventsManifest(s, parquetIn(s"$base/region$r"))
       }
-    })
+    }
 
   /** The reference's multi-region fan-out (QueryApi.scala:311-349:
     * makeRegionalCall POSTs the same query to every regional endpoint
@@ -352,11 +238,11 @@ object SourceQueries {
     * grep (contamination hunting, PII audits, targeted re-filters at
     * 100 TB) should open only segments whose fingerprint set can match.
     * doc_id stands in for the time axis (id-range bounds prune too). */
-  private def docManifest(s: SparkSession, dir: String): DataFrame = {
-    val files = parquetIn(StreamingQueries.docStreamDir(s, dir))
-    manifestArtifact(s, "graft_docmanifest", dir, files, () =>
-      SegmentIndex.build(s, files, "doc_id", identity, Seq("text")))
-  }
+  private def docManifest(s: SparkSession, dir: String): DataFrame =
+    graft.Tables.artifact(s, "docmanifest", dir) { _ =>
+      SegmentIndex.build(s, parquetIn(StreamingQueries.docStreamDir(s, dir)),
+        "doc_id", identity, Seq("text"))
+    }
 
   /** S4 over the corpus: contains() search through the trigram index,
     * then the exact predicate. Pruning is sound → oracle vs the full
@@ -378,26 +264,22 @@ object SourceQueries {
   // ------------------------------------------------------- z-order layout
 
   /** Z-ordered copy of events clustered on (user_id, value) + the two
-    * dimension domains — built once per sf dir (an ingest-time layout
-    * decision, like the stream segment dirs). 3 bits per dim → up to 64
-    * z-bucket partition directories. */
-  private val zLayouts = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, Array[Double])]()
-
+    * dimension domains — built once per context and sf dir (an
+    * ingest-time layout decision, like the stream segment dirs). 3 bits
+    * per dim → up to 64 z-bucket partition directories. */
   private def zorderLayout(s: SparkSession, dir: String): (String, Array[Double]) =
-    zLayouts.computeIfAbsent(dir, { d =>
-      val ev = graft.Tables.load(s, d, "events")
+    graft.Tables.artifact(s, "zorder", dir) { out =>
+      val ev = graft.Tables.load(s, dir, "events")
         .select(col("event_id"), col("event_type"), col("user_id"), col("value"))
       val mm = ev.agg(min(col("user_id")), max(col("user_id")),
         min(col("value")), max(col("value"))).head()
       val dom = Array(mm.getLong(0).toDouble, mm.getLong(1).toDouble,
         mm.getDouble(2), mm.getDouble(3))
-      val out = graft.Tables.tmpDirFor("graft_zorder", d)
       graft.operators.Layout.zorderWrite(ev,
         col("user_id"), dom(0), dom(1), col("value"), dom(2), dom(3),
         bits = 3, out)
       (out, dom)
-    })
+    }
 
   /** S17 (beyond the reference): 2-D range query over the z-ordered
     * layout. The box [30%,60%] of each dimension's domain becomes a

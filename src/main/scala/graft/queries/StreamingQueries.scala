@@ -19,17 +19,13 @@ object StreamingQueries {
   /** The sf events table re-written once as a 4-file directory so the file
     * stream source produces multiple micro-batches (maxFilesPerTrigger=2).
     * Range-partitioned by event_id → deterministic file contents. */
-  private val streamDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private[queries] def streamDir(s: SparkSession, sfDir: String): String =
-    streamDirs.computeIfAbsent(sfDir, { dir =>
-      val out = Tables.tmpDirFor("graft_stream", dir)
-      Tables.load(s, dir, "events")
+    Tables.artifact(s, "stream", sfDir) { out =>
+      Tables.load(s, sfDir, "events")
         .repartitionByRange(4, col("event_id"))
-        .write.mode("overwrite").parquet(out)
+        .write.parquet(out)
       out
-    })
+    }
 
   private val eventsSchema = StructType(Seq(
     StructField("event_id", LongType),
@@ -129,34 +125,6 @@ object StreamingQueries {
       .orderBy("ts", "event_type")
   }
 
-  /** A2-ingest, production shape: append-mode + watermark. Each minute
-    * window emits EXACTLY ONCE when the watermark (max event time − 1 h)
-    * passes its end, and lands as parquet segment files; a manifest
-    * (file, row_count, min/max ts, fingerprints) is then built over the
-    * written files — the same two artifacts the reference's collector
-    * produces per closed rollup block (segment + `metric_seg` row). The
-    * complete-mode memory-sink twin `st3` stays verification-only; this
-    * is the real ingest loop shape.
-    *
-    * The output is read back THROUGH the manifest's file list, so the
-    * oracle hash also proves the manifest covers every written segment.
-    * Closed-window set = windows with end <= max event time − 1 h:
-    * deterministic because the file stream source orders files
-    * deterministically and AvailableNow runs a final no-data batch to
-    * flush watermark-closed windows (the reason it exists vs Once).
-    */
-  /** Streaming segment build shared by st4/st6: built once per (process,
-    * sf dir) — both entries read the same artifacts, so the bench charges
-    * the stream once, the way a real ingest loop amortizes across every
-    * query that reads its segments. Segments carry the rollup_* columns
-    * AND mergeable sketch columns in the reference byte formats
-    * (sketch_dd — DDSketch proto of the values; sketch_hll —
-    * DataSketches HLL image of user_id): TypedImperativeAggregate
-    * buffers serialize into streaming state like any other aggregate,
-    * so sketch-building rides the same watermarked window aggregation. */
-  private val segmentBases =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** dateInt (yyyyMMdd) / hour partition values from an epoch-ms column —
     * pure integer arithmetic + DateType (both timezone-free), matching the
     * reference's time-partitioned object layout
@@ -167,17 +135,27 @@ object StreamingQueries {
     (year(d) * 10000 + month(d) * 100 + dayofmonth(d)).as("date_int")
   }
 
-  private[graft] def rollupSegmentsBase(s: SparkSession, dir: String): String =
-    segmentBases.computeIfAbsent(dir, { d =>
+  /** Streaming segment build shared by st4/st6: built once per (context,
+    * sf dir) — both entries read the same artifacts, so the bench charges
+    * the stream once, the way a real ingest loop amortizes across every
+    * query that reads its segments. Segments carry the rollup_* columns
+    * AND mergeable sketch columns in the reference byte formats
+    * (sketch_dd — DDSketch proto of the values; sketch_hll —
+    * DataSketches HLL image of user_id): TypedImperativeAggregate
+    * buffers serialize into streaming state like any other aggregate,
+    * so sketch-building rides the same watermarked window aggregation.
+    * Returns the base dir and the manifest over its segment files, None
+    * when the watermark sealed no window (a data span under the
+    * watermark delay). */
+  private[graft] def rollupSegmentsBase(s: SparkSession,
+      dir: String): (String, Option[DataFrame]) =
+    Tables.artifact(s, "st4", dir) { base =>
       s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val base = Tables.tmpDirFor("graft_st4", d)
-      // fresh run dir: the build is idempotent and its output deterministic
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
       val segDir = s"$base/segments"
       val src = s.readStream
         .schema(eventsSchema)
         .option("maxFilesPerTrigger", "2")
-        .parquet(streamDir(s, d))
+        .parquet(streamDir(s, dir))
       val plan = src
         .withColumn("ts_t", timestamp_micros(expr("ts div 1000")))
         .withWatermark("ts_t", "1 hour")
@@ -221,41 +199,39 @@ object StreamingQueries {
       // watermark closed ZERO windows (a data-span < watermark fixture)
       // where s.read.parquet(segDir) would fail schema inference
       val segFiles = listParquet(new java.io.File(segDir)).sorted
-      val manifest =
-        if (segFiles.isEmpty)
-          s.createDataFrame(
-            new java.util.ArrayList[org.apache.spark.sql.Row](),
-            StructType(Seq(
-              StructField("file", StringType),
-              StructField("row_count", LongType),
-              StructField("min_ts", LongType),
-              StructField("max_ts", LongType),
-              StructField("fingerprints",
-                ArrayType(LongType, containsNull = false)))))
-        else graft.sources.SegmentIndex
-          .build(s, segFiles, "ts", identity, Seq("event_type"),
-            mergeSchema = false)
-      manifest.write.mode("overwrite").parquet(s"$base/manifest")
-      base
-    })
+      (base, Option.when(segFiles.nonEmpty)(graft.sources.SegmentIndex
+        .build(s, segFiles, "ts", identity, Seq("event_type"),
+          mergeSchema = false)))
+    }
 
-  def st4_rollup_segments(s: SparkSession, dir: String): DataFrame = {
-    val base = rollupSegmentsBase(s, dir)
-    val listed = s.read.parquet(s"$base/manifest")
-      .select("file").collect().map(_.getString(0)).toSeq
-    if (listed.isEmpty) return emptyRollup(s).orderBy("ts", "event_type")
-    s.read.parquet(listed: _*)
-      .select(col("ts"), col("event_type"), col("rollup_sum"),
-        col("rollup_count"), col("rollup_min"), col("rollup_max"),
-        col("rollup_avg"))
-      .orderBy("ts", "event_type")
-  }
+  /** st4's sealed segments, read through their manifest. */
+  private def sealedRollup(s: SparkSession, dir: String): DataFrame =
+    rollupSegmentsBase(s, dir)._2.fold(emptyRollup(s))(m =>
+      graft.sources.ManifestFileIndex.relation(s, m, "ts", identity, Set.empty)
+        .select(rollupCols.map(col): _*))
+
+  /** A2-ingest, production shape: append-mode + watermark. Each minute
+    * window emits EXACTLY ONCE when the watermark (max event time − 1 h)
+    * passes its end, and lands as parquet segment files; a manifest
+    * (file, row_count, min/max ts, fingerprints) is then built over the
+    * written files — the same two artifacts the reference's collector
+    * produces per closed rollup block (segment + `metric_seg` row). The
+    * complete-mode memory-sink twin `st3` stays verification-only; this
+    * is the real ingest loop shape.
+    *
+    * The output is read back THROUGH the manifest (a ManifestFileIndex
+    * relation, as st23 reads), so the oracle hash also proves the
+    * manifest covers every written segment.
+    * Closed-window set = windows with end <= max event time − 1 h:
+    * deterministic because the file stream source orders files
+    * deterministically and AvailableNow runs a final no-data batch to
+    * flush watermark-closed windows (the reason it exists vs Once).
+    */
+  def st4_rollup_segments(s: SparkSession, dir: String): DataFrame =
+    sealedRollup(s, dir).orderBy("ts", "event_type")
 
   private val rollupCols = Seq("ts", "event_type", "rollup_sum",
     "rollup_count", "rollup_min", "rollup_max", "rollup_avg")
-
-  private val compactedDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, Int]()
 
   /** st22: compaction EXECUTION over st4's streaming segment landscape —
     * the st4 drift investigation showed the read side is footer-IO-bound
@@ -266,18 +242,21 @@ object StreamingQueries {
     * compaction that drops/duplicates/reorders data hash-mismatches.
     * File-count shrinkage itself is pinned in CompactionSpec. */
   def st22_compacted_rollup(s: SparkSession, dir: String): DataFrame = {
-    val base = rollupSegmentsBase(s, dir)
-    val segFiles = listParquet(new java.io.File(s"$base/segments")).sorted
+    val segFiles = st4SegmentFiles(s, dir)
     if (segFiles.isEmpty) return emptyRollup(s).orderBy("ts", "event_type")
-    val outDir = s"$base/compacted"
-    compactedDirs.computeIfAbsent(outDir, { _ =>
-      graft.operators.Compaction.compact(s, segFiles, outDir,
+    val outDir = Tables.artifact(s, "st22", dir) { out =>
+      graft.operators.Compaction.compact(s, segFiles, out,
         targetBytes = 4L << 20)
-    })
+      out
+    }
     s.read.parquet(outDir)
       .select(rollupCols.map(col): _*)
       .orderBy("ts", "event_type")
   }
+
+  private def st4SegmentFiles(s: SparkSession, dir: String): Seq[String] =
+    listParquet(new java.io.File(s"${rollupSegmentsBase(s, dir)._1}/segments"))
+      .sorted
 
   private def listParquet(dir: java.io.File): Seq[String] = {
     val fs = Option(dir.listFiles()).map(_.toSeq).getOrElse(Nil)
@@ -285,12 +264,6 @@ object StreamingQueries {
       fs.filter(f => f.isFile && f.getName.endsWith(".parquet"))
         .map(_.getAbsolutePath)
   }
-
-  // post-policy layout AND its manifest: both are ingest-time artifacts
-  // (the policy pass ends by publishing the manifest the next planner
-  // reads), so neither belongs in the per-query path
-  private val policyLayouts =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
 
   /** st23: the full ingest → threshold → compact → pruned-query loop —
     * compaction wired in as POLICY, not a one-shot job. The streaming
@@ -306,8 +279,7 @@ object StreamingQueries {
     * manifest pruning hash-mismatches. Read-latency before/after is
     * recorded in PLANS.md (st22 measured 11× on the same layout). */
   def st23_compaction_policy(s: SparkSession, dir: String): DataFrame = {
-    val base = rollupSegmentsBase(s, dir)
-    val segFiles = listParquet(new java.io.File(s"$base/segments")).sorted
+    val segFiles = st4SegmentFiles(s, dir)
     if (segFiles.isEmpty) return s.createDataFrame(
       new java.util.ArrayList[org.apache.spark.sql.Row](),
       StructType(Seq(
@@ -319,14 +291,16 @@ object StreamingQueries {
       val m = "date_int=(\\d+)".r.findFirstMatchIn(f)
       m.map(_.group(1)).getOrElse("unpartitioned")
     }
-    val manifest = policyLayouts.computeIfAbsent(base, { _ =>
+    // post-policy layout AND its manifest: both are ingest-time artifacts
+    // (the policy pass ends by publishing the manifest the next planner
+    // reads), so neither belongs in the per-query path
+    val manifest = Tables.artifact(s, "st23", dir) { out =>
       val layout = graft.operators.Compaction.applyPolicy(s, segFiles,
-        s"$base/policy", maxFilesPerKey = 23, targetBytes = 4L << 20,
-        keyOf = dayOf)
+        out, maxFilesPerKey = 23, targetBytes = 4L << 20, keyOf = dayOf)
       // the post-policy manifest: the layout the NEXT query planner sees
       graft.sources.SegmentIndex.build(s, layout.files,
         "ts", identity, Seq("event_type"), mergeSchema = false)
-    })
+    }
     graft.sources.ManifestFileIndex
       .relation(s, manifest, "ts", identity, Set.empty)
       .where(col("ts") >= st11Start && col("ts") < st11End)
@@ -366,13 +340,9 @@ object StreamingQueries {
     * stronger guarantee than closed-window containment: any overlap or
     * gap at the seal boundary diverges). */
   def st10_live_sealed_union(s: SparkSession, dir: String): DataFrame = {
-    val base = rollupSegmentsBase(s, dir)
-    val listed = s.read.parquet(s"$base/manifest")
-      .select("file").collect().map(_.getString(0)).toSeq
-    val sealedHalf =
-      if (listed.isEmpty) emptyRollup(s)
-      else s.read.parquet(listed: _*).select(rollupCols.map(col): _*)
-    val liveHalf = s.read.format("statestore").load(s"$base/ckpt")
+    val sealedHalf = sealedRollup(s, dir)
+    val liveHalf = s.read.format("statestore")
+      .load(s"${rollupSegmentsBase(s, dir)._1}/ckpt")
       .select(
         expr("unix_millis(key.window.start)").as("ts"),
         col("key.event_type").as("event_type"),
@@ -402,10 +372,9 @@ object StreamingQueries {
     * six pruned hours per type — all windows there are watermark-sealed
     * (the range sits weeks before max event time − 1 h at every sf). */
   def st11_partition_pruned(s: SparkSession, dir: String): DataFrame = {
-    val base = rollupSegmentsBase(s, dir)
-    val manifest = s.read.parquet(s"$base/manifest")
-    val listed = graft.sources.SegmentIndex
-      .prune(manifest, None, Set.empty, st11Start, st11End)
+    val (base, manifest) = rollupSegmentsBase(s, dir)
+    val listed = manifest.toSeq.flatMap(graft.sources.SegmentIndex
+      .prune(_, None, Set.empty, st11Start, st11End))
     if (listed.isEmpty)
       // typed empty result, not a schema-less one: an empty candidate
       // set is a legal answer for a fixture with no data in the window
@@ -437,7 +406,7 @@ object StreamingQueries {
     * subset of raw events (window end <= max event time − 1 h). */
   def st6_sketch_segments(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.{SketchInteropFunctions => SI}
-    val base = rollupSegmentsBase(s, dir)
+    val (base, _) = rollupSegmentsBase(s, dir)
     // ONE DDSketch merge per group; count and p90 are scalar readers
     // over the merged payload — two independent merge aggregates would
     // deserialize and merge every segment sketch twice
@@ -774,16 +743,10 @@ object StreamingQueries {
     * micro-batch. This is the bounded-replay analogue of the reference's
     * ingest heartbeat that seals idle segments
     * (collector PushDownAggregatorStage flush-on-idle). */
-  private val sentinelDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private[queries] def sentinelStreamDir(s: SparkSession, sfDir: String): String =
-    sentinelDirs.computeIfAbsent(sfDir, { dir =>
-      val out = Tables.tmpDirFor("graft_stream_wm", dir)
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
-      val ev = Tables.load(s, dir, "events")
-      ev.repartitionByRange(4, col("event_id"))
-        .write.mode("overwrite").parquet(out)
+    Tables.artifact(s, "stream_wm", sfDir) { out =>
+      val ev = Tables.load(s, sfDir, "events")
+      ev.repartitionByRange(4, col("event_id")).write.parquet(out)
       val mainFiles = listParquet(new java.io.File(out))
       val maxTs = ev.agg(max(col("ts"))).collect()(0).getLong(0)
       // THREE sentinel files: the watermark computed from batch N's data
@@ -812,7 +775,7 @@ object StreamingQueries {
       val now = System.currentTimeMillis()
       mainFiles.foreach(f => new java.io.File(f).setLastModified(now - 120000))
       out
-    })
+    }
 
   /** T-outer: watermarked stream-stream LEFT OUTER interval join — the
     * st12 click→purchase attribution with the complement emitted: a click
@@ -877,17 +840,13 @@ object StreamingQueries {
 
   /** The documents table re-written once as a 4-file directory so the
     * batch side of st9 arrives in multiple micro-batches. */
-  private val docStreamDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private[queries] def docStreamDir(s: SparkSession, sfDir: String): String =
-    docStreamDirs.computeIfAbsent(sfDir, { dir =>
-      val out = Tables.tmpDirFor("graft_docstream", dir)
-      Tables.load(s, dir, "documents")
+    Tables.artifact(s, "docstream", sfDir) { out =>
+      Tables.load(s, sfDir, "documents")
         .repartitionByRange(4, col("doc_id"))
-        .write.mode("overwrite").parquet(out)
+        .write.parquet(out)
       out
-    })
+    }
 
   private val docsSchema = StructType(Seq(
     StructField("doc_id", LongType),
@@ -1233,13 +1192,12 @@ object StreamingQueries {
     * yet the final complete-mode table equals the batch answer over ALL
     * files (st1's oracle). A double-count (offset log ignored) or a
     * zero-count (state lost) both hash-mismatch, so the checkpoint
-    * contract is what this entry verifies. The staging dir is rebuilt
-    * per invocation so every run exercises a fresh recovery.
+    * contract is what this entry verifies. Every invocation stages in a
+    * fresh dir, so every run exercises a fresh recovery.
     */
   def st21_checkpoint_restart(s: SparkSession, dir: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val base = new java.io.File(Tables.tmpDirFor("graft_restart", dir))
-    org.apache.commons.io.FileUtils.deleteQuietly(base)
+    val base = new java.io.File(Tables.scratchDir("st21"))
     val dataDir = new java.io.File(base, "data"); dataDir.mkdirs()
     val ckpt = new java.io.File(base, "ckpt").getAbsolutePath
     val srcFiles = listParquet(new java.io.File(streamDir(s, dir)))
@@ -1273,6 +1231,8 @@ object StreamingQueries {
     run("st21_phase_a") // drains phase A, commits offsets + state, stops
     land(phaseB)
     run("st21_checkpoint_restart") // recovers, reads ONLY the new files
+    // the answer lives in the memory sink; the staging dir is spent
+    org.apache.commons.io.FileUtils.deleteQuietly(base)
     s.table("st21_checkpoint_restart")
       .select(
         expr("unix_millis(window.start)").as("step_ts"),

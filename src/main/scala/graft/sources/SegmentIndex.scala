@@ -43,9 +43,7 @@ import graft.compile.FilterCompiler
 object SegmentIndex {
 
   /** Metadata key, on the manifest's `file` column, of the segments' data
-    * schema (JSON). It also names the manifest format: a persisted
-    * manifest folds it into its artifact key, so one written before the
-    * schema rode along is never read back. */
+    * schema (JSON). */
   private[graft] val SchemaKey = "graft.manifest.dataSchema"
 
   /** Marker fingerprint recording "column c WAS fingerprinted when this

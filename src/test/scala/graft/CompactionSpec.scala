@@ -9,7 +9,7 @@ import graft.operators.Compaction
   * rule, the rewrite emits exactly one file per bin, and the compacted
   * data is row-identical to the source (the property st22's shared
   * oracle also enforces end-to-end). */
-class CompactionSpec extends AnyFunSuite {
+class CompactionSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
@@ -26,7 +26,7 @@ class CompactionSpec extends AnyFunSuite {
   }
 
   test("plan assigns each file the bin of its cumulative start offset") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_cpl").toString
+    val dir = tempDir("graft_cpl")
     val files = mkFiles(dir, 6)
     val sizes = files.sorted.map(f => new java.io.File(f).length())
     val target = sizes.head * 2 + 1 // ~2 files per bin
@@ -41,7 +41,7 @@ class CompactionSpec extends AnyFunSuite {
   }
 
   test("compact writes one file per bin and preserves every row") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_cex").toString
+    val dir = tempDir("graft_cex")
     val files = mkFiles(dir, 7)
     val sizes = files.sorted.map(f => new java.io.File(f).length())
     val target = sizes.sum / 3 + 1 // ~3 bins
@@ -67,7 +67,7 @@ class CompactionSpec extends AnyFunSuite {
 
   test("bins are byte-bounded: each bin's total stays under target + " +
     "one file (the greedy start-offset guarantee)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_cbb").toString
+    val dir = tempDir("graft_cbb")
     val files = mkFiles(dir, 9)
     val sizes = files.sorted.map(f => f -> new java.io.File(f).length()).toMap
     val target = sizes.values.min * 3 / 2
@@ -82,7 +82,7 @@ class CompactionSpec extends AnyFunSuite {
 
   test("a file larger than target skips bin indices; compact still " +
     "writes one file per ASSIGNED bin and reports that count") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_cbig").toString
+    val dir = tempDir("graft_cbig")
     // one fat segment (400 rows) then small ones: the fat file's size
     // exceeds target, so cumulative offsets skip bin indices
     Seq.tabulate(400)(j => (j.toLong, s"fat-$j")).toDF("id", "payload")
@@ -121,7 +121,7 @@ class CompactionSpec extends AnyFunSuite {
   }
 
   test("compact joins by URI-encoded path (spaces survive)") {
-    val base = java.nio.file.Files.createTempDirectory("graft_csp").toString
+    val base = tempDir("graft_csp")
     val dir = s"$base/with space"
     Seq.tabulate(20)(j => (j.toLong, s"s-$j")).toDF("id", "payload")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/seg0")
@@ -135,7 +135,7 @@ class CompactionSpec extends AnyFunSuite {
 
   test("applyPolicy compacts only keys over the threshold, keeps the " +
     "rest, preserves rows, and is idempotent at the layout level") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_cpol").toString
+    val dir = tempDir("graft_cpol")
     // "day A": 5 landed files (dense); "day B": 2 files (sparse)
     (0 until 5).foreach { i =>
       Seq.tabulate(30)(j => (i.toLong * 100 + j, s"a$i-$j"))
@@ -183,7 +183,7 @@ class CompactionSpec extends AnyFunSuite {
 
   test("applyPolicy keeps distinct raw keys in distinct output dirs even " +
     "when sanitization collides ('2024/01' vs '2024_01')") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ccol").toString
+    val dir = tempDir("graft_ccol")
     // two DENSE keys whose sanitized names collapse to the same string;
     // without disambiguation the second compact() overwrites the first
     // key's dir — silent row loss in the post-policy layout
@@ -218,7 +218,7 @@ class CompactionSpec extends AnyFunSuite {
   }
 
   test("compact handles a single bin and empty input") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_c1").toString
+    val dir = tempDir("graft_c1")
     val files = mkFiles(dir, 2)
     assert(Compaction.compact(spark, files, s"$dir/one", Long.MaxValue) == 1)
     assert(Compaction.compact(spark, Nil, s"$dir/none", 1024) == 0)

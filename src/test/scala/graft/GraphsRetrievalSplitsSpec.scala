@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.operators.{Graphs, Retrieval, Splits}
 
-class GraphsRetrievalSplitsSpec extends AnyFunSuite {
+class GraphsRetrievalSplitsSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
@@ -169,7 +169,7 @@ class GraphsRetrievalSplitsSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted
     val prLocal = Graphs.pageRank(nodes, edges, iterations = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
+    val dir = tempDir("graft_ckpt")
     spark.conf.set(graft.operators.Lineage.CheckpointDirKey, dir)
     try {
       val bfsDurable = Graphs.bfsHops(edges, src, maxHops = 9)

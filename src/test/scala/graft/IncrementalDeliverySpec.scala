@@ -13,7 +13,7 @@ import graft.engine.ReplaySequencer.{ReplayGroup, SegmentSpan}
   * reference's ordering contract (sealed before unsealed, steps monotone
   * in replay order) while concatenating EXACTLY to the batch result.
   */
-class IncrementalDeliverySpec extends AnyFunSuite {
+class IncrementalDeliverySpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
@@ -290,8 +290,7 @@ class IncrementalDeliverySpec extends AnyFunSuite {
     // segment landscape: the sf0.001 events split into 6 time-ranged
     // files (the ingest shape); spans come from the SegmentIndex
     // manifest rows — the same (file, min_ts, max_ts) the planner uses
-    val segBase = java.nio.file.Files
-      .createTempDirectory("graft_inc_segs").toString
+    val segBase = tempDir("graft_inc_segs")
     val ev = Tables.load(spark, SparkTestSession.sfDir, "events")
     ev.repartitionByRange(6, col("ts"))
       .write.mode("overwrite").parquet(segBase)

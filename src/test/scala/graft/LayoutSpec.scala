@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Layout
 
-class LayoutSpec extends AnyFunSuite {
+class LayoutSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestSession.spark
 
   private def refZ(bx: Int, by: Int): Long = {
@@ -65,8 +65,7 @@ class LayoutSpec extends AnyFunSuite {
     val df = (0 until 4000).map { i =>
       (i.toLong, (i % 64).toDouble * 10, ((i * 37) % 101).toDouble)
     }.toDF("id", "x", "y")
-    val path = java.nio.file.Files
-      .createTempDirectory("layout_spec").toString
+    val path = tempDir("layout_spec")
     Layout.zorderWrite(df, $"x", 0.0, 630.0, $"y", 0.0, 100.0, bits, path)
     // quarter box in each dimension
     val cover = Layout.zCover(100.0, 250.0, 0.0, 630.0,

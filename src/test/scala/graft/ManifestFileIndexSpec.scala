@@ -15,13 +15,13 @@ import graft.sources.{ManifestFileIndex, SegmentIndex}
   * produces unresolved function nodes and is NOT what scan planning
   * passes); the end-to-end tests prove the real pushed filters arrive in
   * that shape by reading the scan's numFiles metric after execution. */
-class ManifestFileIndexSpec extends AnyFunSuite {
+class ManifestFileIndexSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestSession.spark
 
   // three segments with disjoint time ranges and distinct service values
   private lazy val (segDir, manifest) = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_mfi").toString
+    val dir = tempDir("graft_mfi")
     Seq(
       ("svc-alpha", 0L, 1000L),
       ("svc-bravo", 1000L, 2000L),
@@ -156,7 +156,7 @@ class ManifestFileIndexSpec extends AnyFunSuite {
     "manifest, and the federated result equals the single-root scan") {
     import spark.implicits._
     // two "regions", each with a matching and a non-matching segment
-    val dir = java.nio.file.Files.createTempDirectory("graft_mreg").toString
+    val dir = tempDir("graft_mreg")
     val mfs = (0 until 2).map { r =>
       Seq("svc-match", "svc-other").zipWithIndex.foreach { case (svc, i) =>
         (0 until 100).map(t =>

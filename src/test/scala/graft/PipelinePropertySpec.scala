@@ -11,7 +11,7 @@ import graft.operators.{Dedup, Sampling}
   * reference evaluation on randomized corpora (fixed ScalaCheck seeds —
   * reproducible failures).
   */
-class PipelinePropertySpec extends AnyFunSuite {
+class PipelinePropertySpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
@@ -234,8 +234,7 @@ class PipelinePropertySpec extends AnyFunSuite {
     // segment) blocking key is shared by all docs, so the uncapped
     // join would emit O(n²) candidates per key — the silent
     // quadratification class the cap exists for
-    val dir = java.nio.file.Files.createTempDirectory("graft_d14cap")
-      .toFile.getAbsolutePath
+    val dir = tempDir("graft_d14cap")
     val pfx = "the quick brown fox jumps over the lazy " // exactly 40
     assert(pfx.length === 40)
     val rows = (0 until 30).map { i =>
@@ -258,8 +257,7 @@ class PipelinePropertySpec extends AnyFunSuite {
     // and a benign corpus (distinct prefixes) must not fire the cap
     // or change the candidate stream at all — fresh dir: overwriting
     // the first one would race the session's cached file listing
-    val dir2 = java.nio.file.Files.createTempDirectory("graft_d14cap2")
-      .toFile.getAbsolutePath
+    val dir2 = tempDir("graft_d14cap2")
     org.apache.spark.GraftListenerBridge.flushListeners(spark.sparkContext)
     Dedup.resetCapDropped(spark)
     // doc pairs (2i, 2i+1) share a per-pair unique character: every

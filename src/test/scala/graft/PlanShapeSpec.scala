@@ -433,9 +433,9 @@ class PlanShapeSpec extends AnyFunSuite {
   test("st11: Catalyst partition pruning composes with manifest pruning") {
     import graft.queries.StreamingQueries
     import org.apache.spark.sql.execution.FileSourceScanExec
-    val base = StreamingQueries.rollupSegmentsBase(spark, dir)
+    val (base, built) = StreamingQueries.rollupSegmentsBase(spark, dir)
     // manifest pruning: the candidate file list is a strict subset
-    val manifest = spark.read.parquet(s"$base/manifest")
+    val manifest = built.getOrElse(fail("st4 sealed no segment"))
     val t0 = 19737L * 86400000L + 6L * 3600000L
     val listed = graft.sources.SegmentIndex
       .prune(manifest, None, Set.empty, t0, t0 + 6L * 3600000L)

@@ -3,16 +3,15 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ast._
-import graft.queries.SourceQueries
 import graft.sources.{ManifestFileIndex, SegmentIndex}
 
-class SegmentIndexSpec extends AnyFunSuite {
+class SegmentIndexSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestSession.spark
 
   // three "segments": distinct services and time ranges
   private lazy val segDir = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_segs").toString
+    val dir = tempDir("graft_segs")
     def write(name: String, rows: Seq[(Long, String, String, Double)]): String = {
       val p = s"$dir/$name"
       rows.toDF("ts", "service", "level", "value")
@@ -60,7 +59,7 @@ class SegmentIndexSpec extends AnyFunSuite {
   /** A one-file manifest over `values` of an indexed `event_type`. */
   private def singleSegment(values: String*): org.apache.spark.sql.DataFrame = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_seg1").toString
+    val dir = tempDir("graft_seg1")
     values.map(v => (1000L, v)).toDF("ts", "event_type")
       .coalesce(1).write.parquet(s"$dir/seg")
     SegmentIndex.build(spark, Seq(s"$dir/seg"), "ts", identity,
@@ -338,7 +337,7 @@ class SegmentIndexSpec extends AnyFunSuite {
     // emptyDataFrame would break downstream select/where and the oracle
     // schema compare.
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_zero_sf").toString
+    val dir = tempDir("graft_zero_sf")
     val ts2023 = java.time.Instant.parse("2023-06-01T00:00:00Z")
       .toEpochMilli * 1000000L
     Seq((1L, ts2023, 10L, "view", 1.5, "{}"),
@@ -382,9 +381,6 @@ class SegmentIndexSpec extends AnyFunSuite {
       .select("ts", "service", "level", "value").orderBy("ts").collect()
     assert(pruned.sameElements(full))
   }
-
-  private def tempDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
 
   private def parquetFiles(dir: String): Seq[String] =
     new java.io.File(dir).listFiles.filter(_.getName.endsWith(".parquet"))
@@ -514,25 +510,6 @@ class SegmentIndexSpec extends AnyFunSuite {
     assert(e.getMessage.contains("SegmentIndex.build"), e.getMessage)
   }
 
-  test("a manifest artifact of an older format never matches its key " +
-    "and is reaped as a superseded sibling") {
-    val (_, segs) = segDir
-    val d = tempDir("graft_seg_fmt") // stands in for an sf dir
-    val live = SourceQueries.manifestDir("graft_evmanifest", d, segs)
-    // the key an artifact without the schema metadata was written under
-    val old = Tables.tmpDirFor(
-      s"graft_evmanifest_${SourceQueries.artifactSignature(segs)}", d)
-    assert(live != old)
-    try {
-      Seq(live, old).foreach(new java.io.File(_).mkdirs())
-      new java.io.File(old).setLastModified(
-        System.currentTimeMillis() - SourceQueries.supersededGraceMs - 1000)
-      SourceQueries.dropSupersededArtifacts("graft_evmanifest", live)
-      assert(!new java.io.File(old).exists(), "stale artifact not reaped")
-      assert(new java.io.File(live).exists())
-    } finally Seq(live, old).foreach(p => new java.io.File(p).delete())
-  }
-
   test("a manifest over only zero-row files gives an empty relation " +
     "of their schema") {
     import spark.implicits._
@@ -573,23 +550,5 @@ class SegmentIndexSpec extends AnyFunSuite {
         .map(r => (r.getLong(0), Option(r.getString(1)))).toSeq ==
         Seq((1000L, None), (2000L, Some("host-1"))))
     }
-  }
-
-  test("manifest artifact signature rotates on a one-byte file change") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sig").toFile
-    val f = new java.io.File(dir, "seg.parquet")
-    java.nio.file.Files.write(f.toPath, "abc".getBytes)
-    val sig1 = graft.queries.SourceQueries.artifactSignature(Seq(f.getPath))
-    assert(sig1.length == 32 && sig1.matches("[0-9a-f]{32}"),
-      s"128-bit hex signature expected, got $sig1")
-    // same length, different mtime (a rewrite normally bumps mtime)
-    java.nio.file.Files.write(f.toPath, "abd".getBytes)
-    f.setLastModified(f.lastModified + 1000)
-    val sig2 = graft.queries.SourceQueries.artifactSignature(Seq(f.getPath))
-    assert(sig1 != sig2, "signature must rotate when a source file changes")
-    // one-byte length change alone also rotates
-    java.nio.file.Files.write(f.toPath, "abcd".getBytes)
-    val sig3 = graft.queries.SourceQueries.artifactSignature(Seq(f.getPath))
-    assert(sig3 != sig2 && sig3 != sig1)
   }
 }

@@ -21,7 +21,7 @@ import graft.sources.{ManifestFileIndex, SegmentIndex}
   * `region` is indexed at query time but was never fingerprinted, so
   * pruning on it must keep every segment (the column marker guard).
   */
-class SegmentPruningPropertySpec extends AnyFunSuite {
+class SegmentPruningPropertySpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestSession.spark
 
   private val built = Seq("service", "pod") // fingerprinted at build time
@@ -107,7 +107,7 @@ class SegmentPruningPropertySpec extends AnyFunSuite {
     var checked, skipped = 0
     for (seed <- 0L until 6L) {
       val (data, cases) = scenario(seed)
-      val dir = java.nio.file.Files.createTempDirectory("graft_prune").toString
+      val dir = tempDir("graft_prune")
       (0 until segments).foreach { seg =>
         data.filter(_._1 == seg)
           .map { case (_, ms, s, p, r, l) => (ms * 1000000L, s, p, r, l) }

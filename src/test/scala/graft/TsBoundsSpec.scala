@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * agree bit-for-bit on every fixture — the emit_seq day grid derives
   * from these values, and any divergence renumbers every replay group
   * and fails the oracle. */
-class TsBoundsSpec extends AnyFunSuite {
+class TsBoundsSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestSession.spark
 
   for (sf <- Seq("sf0.001", "sf0.01", "sf0.1")) {
@@ -54,12 +54,9 @@ class TsBoundsSpec extends AnyFunSuite {
     } finally spark.conf.set(conf, prev)
   }
 
-  private def tempRoot(): String =
-    java.nio.file.Files.createTempDirectory("graft_tsbounds").toString
-
   test("files that disagree on the ts annotation yield None; each " +
     "annotation alone still matches the aggregate") {
-    val micros = tempRoot()
+    val micros = tempDir("graft_tsbounds")
     writeTs(s"$micros/events.parquet", 0, 10, Some("TIMESTAMP_MICROS"))
     writeTs(s"$micros/events.parquet", 10, 10, Some("TIMESTAMP_MICROS"))
     val b = Tables.load(spark, micros, "events")
@@ -68,7 +65,7 @@ class TsBoundsSpec extends AnyFunSuite {
       Some((b.getLong(0), b.getLong(1))))
     assert(b.getLong(0) === t0 * 1000000L)
 
-    val mixed = tempRoot()
+    val mixed = tempDir("graft_tsbounds")
     writeTs(s"$mixed/events.parquet", 0, 10, Some("TIMESTAMP_MICROS"))
     writeTs(s"$mixed/events.parquet", 10, 10, None)
     assert(Tables.tsBoundsNanos(spark, mixed, "events").isEmpty)
@@ -76,7 +73,7 @@ class TsBoundsSpec extends AnyFunSuite {
 
   test("a TIMESTAMP(MILLIS) file yields None, so the aggregate " +
     "fallback runs") {
-    val root = tempRoot()
+    val root = tempDir("graft_tsbounds")
     writeTs(s"$root/events.parquet", 0, 10, Some("TIMESTAMP_MILLIS"))
     assert(Tables.tsBoundsNanos(spark, root, "events").isEmpty)
   }

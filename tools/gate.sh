@@ -12,7 +12,8 @@
 #                            # segment pruning with its regex planner)
 #                            # + perfbench's Test/compile
 # Every mode but --serving first checks that no main builds its own
-# SparkSession (LocalTuning.session is the one recipe).
+# SparkSession (LocalTuning.session is the one recipe) and that no main
+# builds a path in java.io.tmpdir (Tables.artifact is the one mechanism).
 # Exit 0 = safe to snapshot; nonzero = DO NOT COMMIT the snapshot.
 set -euo pipefail
 cd "$(dirname "$0")/.."
@@ -61,6 +62,19 @@ builders=$(grep -rn --include='*.scala' 'SparkSession\.builder()' src/main/scala
 if [ -n "$builders" ]; then
   echo "GATE FAIL: build sessions with graft.LocalTuning.session:"
   echo "$builders"; exit 1
+fi
+
+# one ingest-artifact mechanism: derived dirs come from Tables.artifact /
+# Tables.scratchDir under the context's Spark temp dir, so a path built
+# from java.io.tmpdir (shared by every process, never cleaned) fails the
+# gate
+echo "== gate: temp paths only in Tables.scala =="
+tmppaths=$(grep -rnE --include='*.scala' 'java\.io\.tmpdir|createTempDirectory|tmpDirFor' src/main/scala \
+  | grep -v '^src/main/scala/graft/Tables\.scala:' \
+  | grep -Ev '^[^:]+:[0-9]+:[[:space:]]*(//|\*|/\*)' || true)
+if [ -n "$tmppaths" ]; then
+  echo "GATE FAIL: build derived dirs with graft.Tables.artifact or scratchDir:"
+  echo "$tmppaths"; exit 1
 fi
 
 echo "== gate: sbt Test/compile =="
