@@ -26,6 +26,7 @@ import graft.functions.TimeRange
   *    stream in replay order through [[QueryEngine.evaluateIncremental]]
   *    (one query per wave of 1, 2, 4, … groups; wave 0 alone, then every
   *    later wave at once), flushed per event — the SSE half of O4/T6.
+  *    A re-poll of sealed data is served from [[resultCache]]: see below.
   *  - `POST /api/v1/tags/{dataset}?tagName=&s=&e=&limit=` — SSE of tag
   *    payloads (`message = {tag: value}` / name→count for the name
   *    query), default limit 1000 (QueryApi.scala:99-175).
@@ -50,6 +51,18 @@ import graft.functions.TimeRange
   * tenant's data. Missing/unknown credentials → 401 before any stream
   * starts. With `tenants` empty the shell is single-tenant (no auth),
   * the embedded-test posture.
+  *
+  * Sealed-interval result cache: the shell owns one [[ResultCache]] of
+  * [[ResultCache.DefaultBytes]] (LRU, measured with `SizeEstimator`),
+  * scoped per [[QueryHttpApi.Tenant]] instance. `/graph` and
+  * `/cardinality` over registered segments store the chart rows or HLL
+  * sketch of every whole step interval inside the window that a
+  * registered segment overlaps, keyed by the parsed AST (or BaseExpr
+  * and groupBys), the step, the interval and the overlapping spans. A
+  * replay group whose intervals are all stored is emitted with no Spark
+  * job; a group holding a gap interval or a window-clipped edge always
+  * runs. Tags, exemplars and the batch path are not cached: a group's
+  * top K cannot be rebuilt from its intervals' top K.
   */
 final class QueryHttpApi(
     tables: String => Telemetry,
@@ -66,6 +79,10 @@ final class QueryHttpApi(
   import QueryHttpApi.{Tenant, Unauthorized}
 
   private val mapper = new ObjectMapper()
+  /** The sealed-interval result cache; its counters are the hit view. */
+  val resultCache = new graft.engine.ResultCache(
+    graft.engine.ResultCache.DefaultBytes)
+  private val singleTenant = Tenant(tables, segments)
   private var server: HttpServer = _
   private val heartbeater =
     java.util.concurrent.Executors.newSingleThreadScheduledExecutor(r => {
@@ -88,7 +105,7 @@ final class QueryHttpApi(
     * JWT-validation twin (AuthToken.scala:17-40), so expiry and forged
     * signatures reject before the tenant lookup. */
   private def scope(ex: HttpExchange): Tenant =
-    if (tenants.isEmpty) Tenant(tables, segments)
+    if (tenants.isEmpty) singleTenant
     else authenticate(ex).flatMap(verifier).flatMap(tenants.get)
       .getOrElse(throw new Unauthorized)
 
@@ -357,28 +374,30 @@ final class QueryHttpApi(
       emit(payload("_", "timeseries", m))
     }
 
+    val cache = resultCache.scope(tenant)
     def replay() = QueryEngine.evaluateIncremental(
-      tables, ast, startMs, endMs, stepMs, segments, minGroupSize)
+      tables, ast, startMs, endMs, stepMs, segments, minGroupSize,
+      cache = cache)
 
     if (p.get("explain").exists(_.toBoolean)) {
       // plan-only mode: one "explain" event with the formatted physical
       // plan of the frame this route runs — wave 0's on the incremental
       // path (later waves differ only in their time hull), none when no
-      // replay group overlaps the window — and the replay-group and
-      // wave counts (one query per wave). Nothing executes, so this
-      // answers in planning time even when the window covers months of
-      // segments
+      // replay group overlaps the window or the cache serves them all —
+      // the replay-group and wave counts (one query per wave) and the
+      // groups the cache would serve. Nothing executes, so this answers
+      // in planning time even when the window covers months of segments
       val m = new java.util.LinkedHashMap[String, AnyRef]()
       m.put("stepMs", Long.box(stepMs))
       val df =
         if (segments.isEmpty)
           Some(QueryEngine.evaluateRuns(tables, ast, startMs, endMs, stepMs))
         else {
-          val groups = ReplaySequencer.sequence(
-            segments, startMs, endMs, stepMs, minGroupSize)
-          m.put("replayGroups", Int.box(groups.size))
-          m.put("replayWaves", Int.box(ReplaySequencer.waves(groups).size))
-          replay().nextOption().map(_.df)
+          val batches = replay().toList
+          m.put("replayGroups", Int.box(batches.map(_.seqs.size).sum))
+          m.put("replayWaves", Int.box(batches.count(_.frame.isDefined)))
+          m.put("cachedGroups", Int.box(batches.map(_.served.size).sum))
+          batches.flatMap(_.frame).headOption
         }
       df.foreach(d => m.put("plan",
         org.apache.spark.sql.GraftColumnBridge.explainString(d)))
@@ -516,7 +535,8 @@ final class QueryHttpApi(
       // cardinality stream (QueryEngineV2.scala:599-668)
       drain(QueryEngine.cardinalityIncremental(tel, expr, groupBys,
           startMs, endMs, TimeRange.autoStepMillis(startMs, endMs),
-          segments, minGroupSize)) { case (_, est) =>
+          segments, minGroupSize, resultCache.scope(tenant))) {
+          case (_, est) =>
         emit(s"""{"message": ${math.rint(est).toLong}}""")
       }
     } else {

@@ -10,6 +10,11 @@ package graft.ast
   */
 object FormulaParser {
 
+  /** Deepest paren nesting a formula may have. The parser recurses once
+    * per level, so an unbounded depth ends in a StackOverflowError — an
+    * Error, which the HTTP shell's 400 path never sees. */
+  val MaxDepth = 256
+
   def parse(formula: String, baseExprs: Map[String, BaseExpr]): AstNode = {
     val p = new Parser(tokenize(formula), baseExprs)
     val ast = p.parseExpr(0)
@@ -76,6 +81,7 @@ object FormulaParser {
   }
 
   private class Parser(var toks: List[Tok], baseExprs: Map[String, BaseExpr]) {
+    private var depth = 0
 
     def parseExpr(minPrec: Int): AstNode = {
       var lhs = parseAtom()
@@ -95,7 +101,11 @@ object FormulaParser {
     private def parseAtom(): AstNode = toks match {
       case LParen :: rest =>
         toks = rest
+        depth += 1
+        if (depth > MaxDepth) throw new IllegalArgumentException(
+          s"formula nests parentheses deeper than $MaxDepth")
         val inner = parseExpr(0)
+        depth -= 1
         toks match {
           case RParen :: r2 => toks = r2; inner
           case _ => throw new IllegalArgumentException("unbalanced parentheses in formula")

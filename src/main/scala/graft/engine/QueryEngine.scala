@@ -1087,19 +1087,60 @@ object QueryEngine {
     * the last sealed group). */
   val REPLAY_SEQ = "replay_seq"
 
-  /** One incrementally-delivered result batch: the chart rows of ONE
-    * replay wave ([[ReplaySequencer.waves]]) — groups `firstSeq` until
-    * `firstSeq + groups.size` in replay order — evaluated as a single
-    * query. `df` holds [[evaluate]]'s rows plus [[REPLAY_SEQ]], so
-    * selecting one seq yields exactly that group's rows. It is sorted
-    * WITHIN each partition by [[ReplayOrder]], not globally: the emit
-    * order comes from [[streamRows]], which merges the partitions on the
-    * driver. `sealedBatch` = false only for the trailing live (unsealed)
-    * batch: one group covering the whole window. */
-  case class ReplayBatch(firstSeq: Int,
+  /** One incrementally-delivered result batch, in replay order: the
+    * chart rows of ONE replay wave ([[ReplaySequencer.waves]]) evaluated
+    * as a single query (`frame`), and of the groups the result cache
+    * serves (`served`, their rows by seq). `seqs` and `groups` list every
+    * group the batch emits, in replay order; a batch the cache serves
+    * whole has no frame and runs no job. `frame` holds [[evaluate]]'s
+    * rows plus [[REPLAY_SEQ]], so selecting one seq yields exactly that
+    * group's rows. It is sorted WITHIN each partition by
+    * [[ReplayOrder]], not globally: the emit order comes from
+    * [[streamRows]], which merges the partitions on the driver and then
+    * calls `store` with the merged rows. `sealedBatch` = false only for
+    * the trailing live (unsealed) batch: one group covering the whole
+    * window. */
+  case class ReplayBatch(seqs: Seq[Int],
       groups: Seq[ReplaySequencer.ReplayGroup], sealedBatch: Boolean,
-      df: DataFrame) {
-    def seqs: Range = firstSeq until firstSeq + groups.size
+      frame: Option[DataFrame], served: Map[Int, Seq[Row]] = Map.empty)(
+      private[engine] val store: Array[Row] => Unit = _ => ()) {
+    def firstSeq: Int = seqs.head
+    /** The wave's query; a batch the cache serves whole has none. */
+    def df: DataFrame = frame.getOrElse(throw new NoSuchElementException(
+      s"replay groups $seqs are served from the result cache: no query"))
+  }
+
+  /** A replay's groups cut into steps, in replay order: `wave` holds
+    * groups `lookup` cannot serve (waves of 1, 2, 4, … over those groups
+    * alone); `all` also holds the served groups whose seqs lie inside
+    * the wave's range or, when `wave` is empty, between two waves. */
+  private case class Cut[V](all: Seq[(ReplaySequencer.ReplayGroup, Int)],
+      wave: Seq[(ReplaySequencer.ReplayGroup, Int)], served: Map[Int, V])
+
+  private def cuts[V](groups: List[ReplaySequencer.ReplayGroup],
+      lookup: ReplaySequencer.ReplayGroup => Option[V]): List[Cut[V]] = {
+    val indexed = groups.zipWithIndex.toIndexedSeq
+    val hits = indexed.flatMap { case (g, i) => lookup(g).map(i -> _) }.toMap
+    val out = List.newBuilder[Cut[V]]
+    var next = 0
+    def upTo(end: Int, wave: Seq[(ReplaySequencer.ReplayGroup, Int)])
+        : Unit = if (end > next) {
+      val all = indexed.slice(next, end)
+      out += Cut(all, wave, all.flatMap(x => hits.get(x._2).map(x._2 -> _)).toMap)
+      next = end
+    }
+    ReplaySequencer.waves(indexed.filterNot(x => hits.contains(x._2)))
+      .foreach { w => upTo(w.head._2, Nil); upTo(w.last._2 + 1, w) }
+    upTo(indexed.size, Nil)
+    out.result()
+  }
+
+  /** `r` with its [[REPLAY_SEQ]] set to `seq`. */
+  private def withSeq(r: Row, seq: Int): Row = {
+    val v = r.toSeq.toArray
+    v(r.fieldIndex(REPLAY_SEQ)) = seq
+    new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
+      v, r.schema)
   }
 
   /** The time hull [min start, max end) of a wave of (group, seq); it
@@ -1179,33 +1220,59 @@ object QueryEngine {
     * the log-tail view); the live batch, when `liveTables` is given,
     * emits LAST regardless of its time range. [[streamRows]] emits rows
     * in [[ReplayOrder]], so per-step delivery order matches the
-    * reference's per-group mergeSorted emission. */
+    * reference's per-group mergeSorted emission.
+    *
+    * Result cache: a sealed group whose every interval `cache` holds
+    * ([[ResultCache]]: keyed by the AST, the step, the interval and the
+    * spans of the segments overlapping it; whole, covered intervals
+    * only, never one clipped by the window or a gap) is emitted from
+    * the cache with no job, in its place in replay order. The waves are
+    * cut over the other groups alone, and each wave stores its
+    * intervals' rows once merged. The live batch is never cached. The
+    * default [[ResultCache.Off]] stores nothing, so every group runs. */
   def evaluateIncremental(tables: String => Telemetry, ast: ASTInput,
       startMs: Long, endMs: Long, stepMs: Long,
       segments: Seq[ReplaySequencer.SegmentSpan],
       minGroupSize: Int = 1, reverse: Boolean = false,
-      liveTables: Option[String => Telemetry] = None)
+      liveTables: Option[String => Telemetry] = None,
+      cache: ResultCache.Scope = ResultCache.Off)
       : Iterator[ReplayBatch] = {
     val groups = ReplaySequencer.sequence(
       segments, startMs, endMs, stepMs, minGroupSize, reverse)
+    // the plan flags in scope ([[withExactPercentiles]], …) change the
+    // rows, so they are part of the key
+    val intervals = cache.intervals((ast, flagScope.value), segments,
+      startMs, endMs, stepMs)
     def runs(df: DataFrame, seq: Column): DataFrame =
       df.withColumn(REPLAY_SEQ, seq).where(col(REPLAY_SEQ).isNotNull)
         .sortWithinPartitions(ReplayOrder.map(col): _*)
-    val sealedIt = ReplaySequencer.waves(groups.zipWithIndex).iterator
-      .map { wave =>
-        val (lo, hi) = hull(wave)
-        ReplayBatch(wave.head._2, wave.map(_._1), sealedBatch = true,
-          runs(chartRows(tables, ast, lo, hi, stepMs),
-            bucketSeq(col(STEP_TS), stepMs, wave)))
+    val sealedIt = cuts(groups, intervals.lookup).iterator
+      .map { c =>
+        val frame = if (c.wave.isEmpty) None else {
+          val (lo, hi) = hull(c.wave)
+          Some(runs(chartRows(tables, ast, lo, hi, stepMs),
+            bucketSeq(col(STEP_TS), stepMs, c.wave)))
+        }
+        ReplayBatch(c.all.map(_._2), c.all.map(_._1), sealedBatch = true,
+          // a served group's rows: its intervals' rows, oldest first
+          frame, c.served.map { case (i, vs) =>
+            i -> vs.flatMap(_.asInstanceOf[Array[Row]]).map(withSeq(_, i))
+          }) { rows =>
+          // one entry per interval: its rows share its step_ts
+          val byStep = rows.groupBy(_.getAs[Long](STEP_TS))
+          c.wave.foreach { case (g, _) => intervals.starts(g).foreach(t =>
+            intervals.store(t, byStep.getOrElse(t, Array.empty[Row])))
+          }
+        }
       }
     liveTables match {
       case None => sealedIt
       case Some(live) => sealedIt ++ Iterator.single(
-        ReplayBatch(groups.size,
+        ReplayBatch(Seq(groups.size),
           Seq(ReplaySequencer.ReplayGroup(startMs, endMs, Nil)),
           sealedBatch = false,
-          runs(chartRows(live, ast, startMs, endMs, stepMs),
-            lit(groups.size))))
+          Some(runs(chartRows(live, ast, startMs, endMs, stepMs),
+            lit(groups.size))))())
     }
   }
 
@@ -1225,34 +1292,57 @@ object QueryEngine {
     * the sketch registers alone. The HIP estimate (`getResult
     * .getEstimate`) also depends on the order coupons reach the union,
     * which follows the partition layout of each group's scan: the same
-    * rows repartitioned moved it by a whole unit. */
+    * rows repartitioned moved it by a whole unit.
+    *
+    * A wave aggregates one sketch per (group, step interval), and the
+    * union takes a group's interval sketches oldest first; the composite
+    * estimate is the same as from one sketch per group. `cache` holds
+    * each whole, covered interval's sketch, so a group whose intervals
+    * it all holds is unioned from the cache with no job, as in
+    * [[evaluateIncremental]]. */
   def cardinalityIncremental(tel: Telemetry, e: BaseExpr,
       groupBys: Seq[String], startMs: Long, endMs: Long, stepMs: Long,
-      segments: Seq[ReplaySequencer.SegmentSpan], minGroupSize: Int = 1)
+      segments: Seq[ReplaySequencer.SegmentSpan], minGroupSize: Int = 1,
+      cache: ResultCache.Scope = ResultCache.Off)
       : WaveScheduler.Replay[(Int, Double)] = {
     import org.apache.datasketches.hll.HllSketch
     val groups = ReplaySequencer.sequence(
       segments, startMs, endMs, stepMs, minGroupSize)
+    val intervals = cache.intervals(("cardinality", e, groupBys), segments,
+      startMs, endMs, stepMs)
     val union = new org.apache.datasketches.hll.Union(12)
-    val waves = ReplaySequencer.waves(groups.zipWithIndex).iterator
-      .map { wave =>
-        val (lo, hi) = hull(wave)
+    // each step yields its groups' interval sketches by seq, oldest first
+    // (an interval without rows has none)
+    val steps = cuts(groups, intervals.lookup).iterator.map { c =>
+      val served = c.served.map { case (i, vs) =>
+        i -> vs.flatMap(_.asInstanceOf[Option[Array[Byte]]]) }
+      if (c.wave.isEmpty) WaveScheduler.Ready((c, served))
+      else {
+        val (lo, hi) = hull(c.wave)
         val base = prepared(tel, e, lo, hi)
         val keys = groupBys.filter(base.columns.toSet.contains)
           .map(FilterCompiler.fieldCol)
         WaveScheduler.Wave(base
-          .select(replaySeq(tel.tsMillis, wave).as(REPLAY_SEQ),
-            tupleKey(keys).as("_k"))
+          .select(replaySeq(tel.tsMillis, c.wave).as(REPLAY_SEQ),
+            stepTsCol(tel.tsMillis, stepMs), tupleKey(keys).as("_k"))
           .where(col(REPLAY_SEQ).isNotNull)
-          .groupBy(REPLAY_SEQ)
+          .groupBy(REPLAY_SEQ, STEP_TS)
           .agg(graft.functions.SketchInteropFunctions.dsHllSketch(col("_k"))),
-          (df: DataFrame) => (wave, df.collect()))
+          (df: DataFrame) => {
+            val sketch = df.collect().map(r =>
+              (r.getInt(0), r.getLong(1)) -> r.getAs[Array[Byte]](2)).toMap
+            (c, served ++ c.wave.map { case (g, i) =>
+              i -> intervals.starts(g).flatMap { t =>
+                intervals.store(t, sketch.get((i, t)))
+                sketch.get((i, t))
+              }
+            })
+          })
       }
-    WaveScheduler.inReplayOrder(waves) { case (wave, rows) =>
-      val sketches = rows.map(r => r.getInt(0) -> r.getAs[Array[Byte]](1))
-        .toMap
-      wave.iterator.map { case (_, i) =>
-        sketches.get(i).foreach(b => union.update(HllSketch.heapify(b)))
+    }
+    WaveScheduler.inReplayOrder(steps) { case (c, sketches) =>
+      c.all.iterator.map { case (_, i) =>
+        sketches(i).foreach(b => union.update(HllSketch.heapify(b)))
         (i, union.getCompositeEstimate)
       }
     }
@@ -1374,10 +1464,17 @@ object QueryEngine {
     * wave's rows on the driver while it emits them (see [[mergeRuns]]). */
   def streamRows(batches: Iterator[ReplayBatch])
       : WaveScheduler.Replay[(Int, Boolean, Row)] =
-    WaveScheduler.inReplayOrder(batches.map(b =>
-      WaveScheduler.Wave(b.df,
-        (df: DataFrame) => (b, mergeRuns(df, ReplayOrder))))) {
-      case (b, rows) => rows.iterator
+    WaveScheduler.inReplayOrder(batches.map(b => b.frame match {
+      case Some(df) => WaveScheduler.Wave(df, (d: DataFrame) => {
+        val rows = mergeRuns(d, ReplayOrder)
+        b.store(rows)
+        (b, rows)
+      })
+      case None => WaveScheduler.Ready((b, Array.empty[Row]))
+    })) { case (b, rows) =>
+      val bySeq = rows.groupBy(r => r.getInt(r.fieldIndex(REPLAY_SEQ)))
+      b.seqs.iterator.flatMap(i => b.served.getOrElse(i,
+          bySeq.getOrElse(i, Array.empty[Row]).toSeq))
         .map(r => (r.getInt(r.fieldIndex(REPLAY_SEQ)), b.sealedBatch, r))
     }
 

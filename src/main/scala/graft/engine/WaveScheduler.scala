@@ -16,7 +16,9 @@ import org.apache.spark.sql.{DataFrame, GraftColumnBridge}
   * consumer has taken everything wave 0 yielded, every later wave starts
   * at once on one shared daemon pool. A request's wall is then group 0 +
   * the slowest later wave, not group 0 + the sum of the later waves: the
-  * same jobs run, overlapped instead of back to back.
+  * same jobs run, overlapped instead of back to back. A [[Ready]] step
+  * (groups the [[ResultCache]] serves) runs nothing: before wave 0 it is
+  * emitted at once, after it in its place in the order.
   *
   * Each pool task runs under `SQLExecution.withThreadLocalCaptured`, so
   * its jobs carry the caller's job group, FAIR pool and active session —
@@ -34,11 +36,18 @@ import org.apache.spark.sql.{DataFrame, GraftColumnBridge}
   * completion. */
 object WaveScheduler {
 
+  /** One step of a replay, in replay order. */
+  sealed trait Step[+A]
+
   /** One wave's Spark work: `run` executes `df`'s jobs (wave 0 on the
     * caller, later waves on the pool, under `df`'s session) and returns
     * what the consumer needs from it. Build `df` on the consumer, so
     * plan-time scopes such as [[QueryEngine.withExactPercentiles]] apply. */
   final case class Wave[A](df: DataFrame, run: DataFrame => A)
+      extends Step[A]
+
+  /** A result already in hand: no job runs for it. */
+  final case class Ready[A](result: A) extends Step[A]
 
   /** Prefix of the job tag every pool task adds; the rest is unique per
     * request, so one request's failure cancels only its own waves. */
@@ -60,12 +69,13 @@ object WaveScheduler {
     * after the cancel (HttpApiSpec's tags-limit case caught two). */
   trait Replay[+B] extends Iterator[B] with AutoCloseable
 
-  /** The concatenation of `emit(wave result)` over `waves`, in order. */
-  def inReplayOrder[A, B](waves: Iterator[Wave[A]])(emit: A => Iterator[B])
+  /** The concatenation of `emit(step result)` over `waves`, in order. */
+  def inReplayOrder[A, B](waves: Iterator[Step[A]])(emit: A => Iterator[B])
       : Replay[B] = new Replay[B] {
     private val tag = JobTagPrefix +
       java.util.UUID.randomUUID().toString.substring(0, 8)
     private var cur: Iterator[B] = Iterator.empty
+    // true until wave 0 (the first Wave step) has run on the caller
     private var first = true
     // later waves, launched once wave 0 is consumed; null until then
     private var launched: List[CompletableFuture[A]] = null
@@ -84,10 +94,9 @@ object WaveScheduler {
       else { launch(); launched.nonEmpty }
 
     private def nextWave(): A =
-      if (first) {
-        first = false
-        val w = waves.next()
-        w.run(w.df)
+      if (first) waves.next() match {
+        case Ready(a) => a
+        case Wave(df, run) => first = false; run(df)
       } else {
         val f = launched.head
         launched = launched.tail
@@ -99,13 +108,15 @@ object WaveScheduler {
     /** Submit every later wave, each as soon as its plan is built. */
     private def launch(): Unit = if (launched == null) {
       val buf = List.newBuilder[CompletableFuture[A]]
-      try waves.foreach { w =>
-        sc = w.df.sparkSession.sparkContext
-        buf += GraftColumnBridge.withThreadLocalCaptured(
-            w.df.sparkSession, pool) {
-          sc.addJobTag(tag)
-          w.run(w.df)
-        }
+      try waves.foreach {
+        case Ready(a) => buf += CompletableFuture.completedFuture(a)
+        case Wave(df, run) =>
+          sc = df.sparkSession.sparkContext
+          buf += GraftColumnBridge.withThreadLocalCaptured(
+              df.sparkSession, pool) {
+            sc.addJobTag(tag)
+            run(df)
+          }
       } finally launched = buf.result()
     }
 

@@ -149,6 +149,21 @@ class AstSpec extends AnyFunSuite {
     assert(bad.getMessage.contains("malformed number"))
   }
 
+  test("formula paren nesting past MaxDepth is an IllegalArgumentException, " +
+    "not a StackOverflowError") {
+    import graft.ast.{FormulaParser, BaseExpr, Filter, Ops}
+    val base = Map("a" -> BaseExpr(id = "a",
+      filter = Filter(k = "x", op = Ops.EXISTS)))
+    def nested(n: Int) = "(" * n + "a" + ")" * n
+    assert(FormulaParser.parse(nested(FormulaParser.MaxDepth), base) ===
+      FormulaParser.parse("a", base))
+    for (n <- Seq(FormulaParser.MaxDepth + 1, 20000)) {
+      val e = intercept[IllegalArgumentException](
+        FormulaParser.parse(nested(n), base))
+      assert(e.getMessage.contains("deeper than"), n)
+    }
+  }
+
   test("time range resolution") {
     val now = java.time.Instant.parse("2024-01-31T00:00:00Z")
     val (s1, e1) = TimeRange.resolve("e-1h", "now", now)

@@ -704,4 +704,110 @@ class HttpApiSpec extends AnyFunSuite {
       assert(bad == 400)
     }
   }
+
+  // ------------------------------------------------ sealed-interval cache
+
+  private def dataLines(text: String): Seq[String] =
+    text.split("\r\n\r\n").toSeq.filter(_.startsWith("data: "))
+      .filterNot(_.contains("\"heartbeat\""))
+
+  test("a re-poll of a sealed chart window answers byte-identical SSE " +
+    "data lines and runs no Spark job") {
+    val span = ReplaySequencer.SegmentSpan("s", base, base + 48 * hour)
+    withApi(Seq(span)) { port =>
+      val path =
+        s"/api/v1/graph?s=$base&e=${base + 48 * hour}&timeseriesOnly=true"
+      val (c1, first) = http(port, "POST", path, chartAst)
+      assert(c1 == 200)
+      val (c2, again, jobs) = JobLog.during(spark.sparkContext) { log =>
+        val (c, t) = http(port, "POST", path, chartAst)
+        (c, t, log.all.filter(j =>
+          Option(j.group).exists(_.startsWith("graft-sse-"))))
+      }
+      assert(c2 == 200)
+      assert(dataLines(first).count(_.contains("timeseries")) > 0)
+      assert(dataLines(again) == dataLines(first))
+      assert(jobs.isEmpty, jobs.mkString("\n"))
+    }
+  }
+
+  test("explain=true reports cachedGroups: 0 on a fresh server, every " +
+    "replay group after one completed poll of the same AST and window") {
+    val span = ReplaySequencer.SegmentSpan("s", base, base + 48 * hour)
+    withApi(Seq(span)) { port =>
+      val window = s"s=$base&e=${base + 48 * hour}"
+      def explain(): JsonNode = {
+        val (code, text) = http(port, "POST",
+          s"/api/v1/graph?$window&explain=true", chartAst)
+        assert(code == 200, text)
+        sseEvents(text).head.get("message")
+      }
+      val cold = explain()
+      assert(cold.get("cachedGroups").asInt() == 0)
+      assert(cold.get("replayGroups").asInt() > 0)
+      assert(http(port, "POST", s"/api/v1/graph?$window&timeseriesOnly=true",
+        chartAst)._1 == 200)
+      val warm = explain()
+      assert(warm.get("cachedGroups").asInt() ==
+        warm.get("replayGroups").asInt())
+      assert(warm.get("replayWaves").asInt() == 0)
+      assert(!warm.has("plan"))
+    }
+  }
+
+  test("multi-tenant: tenants with identical segment ids and AST but " +
+    "different tables never get each other's cached rows") {
+    def telOf(v: Double) = Telemetry.nanos((0 until 48).map(i =>
+        ((base + i * hour) * 1000000L, "click", v))
+      .toDF("ts", "event_type", "value"), "ts", valueCol = col("value"))
+    val span = ReplaySequencer.SegmentSpan("seg", base, base + 48 * hour)
+    val api = new QueryHttpApi(_ => tel,
+      tenants = Map(
+        "cust-a" -> QueryHttpApi.Tenant(_ => telOf(1.0), Seq(span)),
+        "cust-b" -> QueryHttpApi.Tenant(_ => telOf(2.0), Seq(span))),
+      now = () => java.time.Instant.ofEpochMilli(base + 48 * hour))
+    val port = api.start(0)
+    def values(key: String, path: String): Seq[Double] = {
+      val conn = new URI(s"http://127.0.0.1:$port$path").toURL
+        .openConnection().asInstanceOf[HttpURLConnection]
+      conn.setRequestMethod("POST")
+      conn.setRequestProperty("Authorization", s"Bearer $key")
+      conn.setDoOutput(true)
+      conn.getOutputStream.write(chartAst.getBytes(StandardCharsets.UTF_8))
+      assert(conn.getResponseCode == 200)
+      sseEvents(new String(conn.getInputStream.readAllBytes(),
+          StandardCharsets.UTF_8))
+        .filter(n => Option(n.get("type")).exists(_.asText() == "timeseries"))
+        .map(_.get("message").get("value").asDouble())
+    }
+    try {
+      val path =
+        s"/api/v1/graph?s=$base&e=${base + 48 * hour}&timeseriesOnly=true"
+      for (_ <- 0 until 2) {
+        val a = values("cust-a", path)
+        val b = values("cust-b", path)
+        assert(a.nonEmpty && a.sum == 48.0, a)
+        assert(b.nonEmpty && b.sum == 96.0, b)
+      }
+      assert(api.resultCache.hits.get > 0)
+    } finally api.stop()
+  }
+
+  test("a formula nested 20,000 parens deep answers 400 with a message, " +
+    "not a dead request thread") {
+    val deep = "(" * 20000 + "a" + ")" * 20000
+    val body =
+      s"""{"baseExpressions": {"a": {"dataset": "logs", "returnResults": false,
+         |  "filter": {"k": "event_type", "v": ["click"], "op": "eq"},
+         |  "chart": {"aggregation": "sum", "groupBys": []}}},
+         |  "formulae": ["$deep"]}""".stripMargin
+    val span = ReplaySequencer.SegmentSpan("s", base, base + 48 * hour)
+    for (segments <- Seq(Nil, Seq(span)))
+      withApi(segments) { port =>
+        val (code, text) = http(port, "POST",
+          s"/api/v1/graph?s=$base&e=${base + 48 * hour}", body)
+        assert(code == 400, text.take(200))
+        assert(text.contains("deeper than"), text.take(200))
+      }
+  }
 }

@@ -7,7 +7,8 @@
 #                            # Verify+oracle at sf0.01
 #   tools/gate.sh --serving  # compile + the serving-path specs only
 #                            # (replay waves, the driver-side merge,
-#                            # incremental delivery, HTTP/SSE,
+#                            # incremental delivery, the result cache,
+#                            # HTTP/SSE,
 #                            # the manifest build the set-up runs, and
 #                            # segment pruning with its regex planner)
 #                            # + perfbench's Test/compile
@@ -23,7 +24,8 @@ if [ "${1:-}" = "--serving" ]; then
   # oracle), so it never ends in "gate: PASS"
   echo "== gate: sbt Test/compile + serving specs =="
   sbt -batch Test/compile "testOnly graft.ReplayWaveSpec \
-    graft.DriverMergeSpec graft.IncrementalDeliverySpec graft.HttpApiSpec \
+    graft.DriverMergeSpec graft.IncrementalDeliverySpec graft.ResultCacheSpec \
+    graft.HttpApiSpec \
     graft.api.SseStallSpec graft.SegmentIndexSpec graft.ManifestFileIndexSpec \
     graft.TrigramPropertySpec graft.SegmentPruningPropertySpec"
   # perfbench compiles against the manifest API (SegmentIndex.build,
