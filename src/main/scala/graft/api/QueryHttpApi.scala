@@ -3,6 +3,8 @@ package graft.api
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 
+import scala.util.control.NonFatal
+
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.Row
@@ -109,8 +111,19 @@ final class QueryHttpApi(
     else authenticate(ex).flatMap(verifier).flatMap(tenants.get)
       .getOrElse(throw new Unauthorized)
 
-  /** Start on `port` (0 = ephemeral); returns the bound port. */
+  /** Start on `port` (0 = ephemeral); returns the bound port.
+    *
+    * Every accepted socket runs with TCP_NODELAY. The JDK server flushes
+    * the response headers as one segment; without NODELAY, Nagle holds
+    * the next small write (an SSE event, a 400 or JSON body) until the
+    * client ACKs the headers, and a keep-alive client delays that ACK by
+    * Linux's 40 ms minimum, so every response paid ~44 ms. The JDK reads
+    * `sun.net.httpserver.nodelay` once, when the first `HttpServer` of
+    * the process is created, and ignores it later: it must be set before
+    * any other JDK `HttpServer` in the process exists. This class is the
+    * only one that creates one. */
   def start(port: Int = 0): Int = {
+    System.setProperty("sun.net.httpserver.nodelay", "true")
     server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
     server.createContext("/ready", exchange => {
       exchange.sendResponseHeaders(200, -1); exchange.close()
@@ -175,12 +188,29 @@ final class QueryHttpApi(
       ex.getResponseBody.write(bytes)
     } catch {
       case _: Unauthorized => ex.sendResponseHeaders(401, -1)
-      case e: Exception =>
-        val msg = String.valueOf(e.getMessage)
-          .getBytes(StandardCharsets.UTF_8)
-        ex.sendResponseHeaders(400, msg.length)
-        ex.getResponseBody.write(msg)
+      case Answerable(e) => badRequest(ex, e)
     } finally ex.close()
+  }
+
+  /** A handler failure that gets an answer: every `NonFatal` and a
+    * `StackOverflowError` (a too-deep request has unwound its own stack
+    * by the time it is caught; the JVM is fine). */
+  private object Answerable {
+    def unapply(t: Throwable): Option[Throwable] = t match {
+      case _: StackOverflowError | NonFatal(_) => Some(t)
+      case _ => None
+    }
+  }
+
+  /** 400 with the failure's message, or its class name when it has none.
+    * Callers catch [[Answerable]], not `Exception`: an `AssertionError`
+    * or a `StackOverflowError` from planning must answer a status too,
+    * not drop the connection and kill the pool thread. */
+  private def badRequest(ex: HttpExchange, e: Throwable): Unit = {
+    val msg = Option(e.getMessage).filter(_.nonEmpty)
+      .getOrElse(e.getClass.getName).getBytes(StandardCharsets.UTF_8)
+    ex.sendResponseHeaders(400, msg.length)
+    ex.getResponseBody.write(msg)
   }
 
   /** SSE endpoint shell: chunked text/event-stream, handler emits
@@ -189,7 +219,11 @@ final class QueryHttpApi(
     * missing/unknown credential a 401. The handler gets the request body
     * as a parameter: HttpExchange attributes live in the server's
     * per-CONTEXT map, so a body stored there could be overwritten by a
-    * concurrent POST to the same route before the handler reads it. */
+    * concurrent POST to the same route before the handler reads it.
+    * Each event is its own small flush; it leaves at once only because
+    * [[start]] turns Nagle off (TCP_NODELAY, set before the JDK reads it
+    * at the process's first `HttpServer`), else the first event after the
+    * headers waits for the client's delayed ACK. */
   private[api] def sse(
       f: (HttpExchange, Tenant, String, String => Unit) => Unit)
       : com.sun.net.httpserver.HttpHandler = { ex =>
@@ -294,12 +328,8 @@ final class QueryHttpApi(
     } catch {
       case _: Unauthorized =>
         ex.sendResponseHeaders(401, -1)
-      case e: Exception if !streaming =>
-        val msg = String.valueOf(e.getMessage)
-          .getBytes(StandardCharsets.UTF_8)
-        ex.sendResponseHeaders(400, msg.length)
-        ex.getResponseBody.write(msg)
-      case _: Exception =>
+      case Answerable(e) if !streaming => badRequest(ex, e)
+      case Answerable(_) =>
         // mid-stream: the truncated stream (no done sentinel) is the
         // error signal, as in SSE generally
         ()

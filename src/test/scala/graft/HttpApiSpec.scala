@@ -810,4 +810,63 @@ class HttpApiSpec extends AnyFunSuite {
         assert(text.contains("deeper than"), text.take(200))
       }
   }
+
+  // ------------------------------------------------------ TCP_NODELAY
+
+  /** Linux delays an ACK by at least 40 ms; a response whose small body
+    * write waited for the ACK of its headers (Nagle) cannot beat it. */
+  private val delayedAckFloorMs = 20.0
+
+  /** Wall ms of each of `n` calls, on the keep-alive connection the
+    * JDK client reuses for sequential requests to one port. */
+  private def timed(n: Int)(call: => (Int, String)): Seq[Double] =
+    (0 until n).map { _ =>
+      val t0 = System.nanoTime()
+      val (code, text) = call
+      assert(code < 500, text)
+      (System.nanoTime() - t0) / 1e6
+    }
+
+  private def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.size / 2)
+
+  test("21 re-polls of a served sealed chart on one keep-alive " +
+    "connection run no job and answer in a median under 20 ms") {
+    val span = ReplaySequencer.SegmentSpan("s", base, base + 48 * hour)
+    withApi(Seq(span)) { port =>
+      val path =
+        s"/api/v1/graph?s=$base&e=${base + 48 * hour}&timeseriesOnly=true"
+      assert(http(port, "POST", path, chartAst)._1 == 200)
+      val (ms, jobs) = JobLog.during(spark.sparkContext) { log =>
+        (timed(21)(http(port, "POST", path, chartAst)),
+          log.all.filter(j =>
+            Option(j.group).exists(_.startsWith("graft-sse-"))))
+      }
+      assert(jobs.isEmpty, jobs.mkString("\n"))
+      assert(median(ms) < delayedAckFloorMs, ms.mkString(", "))
+    }
+  }
+
+  test("a served /cardinality re-poll, a 400 and a plain-JSON answer " +
+    "each beat the delayed-ACK floor; start turns Nagle off") {
+    val span = ReplaySequencer.SegmentSpan("s", base, base + 48 * hour)
+    withApi(Seq(span)) { port =>
+      assert(System.getProperty("sun.net.httpserver.nodelay") == "true")
+      val card = s"/api/v1/cardinality?s=$base&e=${base + 48 * hour}"
+      val cardBody =
+        """{"dataset": "logs",
+          |  "filter": {"k": "event_type", "v": [], "op": "exists"}}"""
+          .stripMargin
+      assert(http(port, "POST", card, cardBody)._1 == 200)
+      val graph = s"/api/v1/graph?s=$base&e=${base + 48 * hour}"
+      for ((what, call) <- Seq[(String, () => (Int, String))](
+          "cardinality re-poll" -> (() => http(port, "POST", card, cardBody)),
+          "400" -> (() => http(port, "POST", graph, "{nope")),
+          "scopeTags" -> (() => http(port, "GET", "/api/v1/scopeTags")))) {
+        val (code, _) = call()
+        assert(code == (if (what == "400") 400 else 200), what)
+        val ms = timed(11)(call())
+        assert(median(ms) < delayedAckFloorMs, s"$what: ${ms.mkString(", ")}")
+      }
+    }
+  }
 }

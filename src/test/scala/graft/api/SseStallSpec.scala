@@ -1,10 +1,8 @@
 package graft.api
 
-import java.io.{ByteArrayInputStream, InputStream, OutputStream}
-import java.net.{InetSocketAddress, URI}
+import java.io.OutputStream
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 
-import com.sun.net.httpserver.{Headers, HttpContext, HttpExchange, HttpPrincipal}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.engine.Telemetry
@@ -23,13 +21,10 @@ class SseStallSpec extends AnyFunSuite {
   /** OutputStream that accepts `allow` writes, then blocks until the
     * exchange is closed (close -> the pending write throws, like a
     * kernel socket teardown). */
-  private class StallingExchange(allow: Int) extends HttpExchange {
+  private class StallingExchange(allow: Int) extends FakeExchange {
     val closed = new CountDownLatch(1)
     val writeBlocked = new CountDownLatch(1)
     private var writes = 0
-    private val reqHeaders = new Headers()
-    private val respHeaders = new Headers()
-    private val attrs = new java.util.HashMap[String, AnyRef]()
 
     private val out: OutputStream = new OutputStream {
       override def write(b: Int): Unit = write(Array(b.toByte), 0, 1)
@@ -46,27 +41,8 @@ class SseStallSpec extends AnyFunSuite {
         }
     }
 
-    override def getRequestHeaders: Headers = reqHeaders
-    override def getResponseHeaders: Headers = respHeaders
-    override def getRequestURI: URI = new URI("/api/v1/test")
-    override def getRequestMethod: String = "POST"
-    override def getHttpContext: HttpContext = null
     override def close(): Unit = closed.countDown()
-    override def getRequestBody: InputStream =
-      new ByteArrayInputStream(Array.emptyByteArray)
     override def getResponseBody: OutputStream = out
-    override def sendResponseHeaders(code: Int, len: Long): Unit = ()
-    override def getRemoteAddress: InetSocketAddress =
-      new InetSocketAddress("127.0.0.1", 1)
-    override def getResponseCode: Int = 200
-    override def getLocalAddress: InetSocketAddress =
-      new InetSocketAddress("127.0.0.1", 2)
-    override def getProtocol: String = "HTTP/1.1"
-    override def getAttribute(name: String): AnyRef = attrs.get(name)
-    override def setAttribute(name: String, value: AnyRef): Unit =
-      attrs.put(name, value)
-    override def setStreams(i: InputStream, o: OutputStream): Unit = ()
-    override def getPrincipal: HttpPrincipal = null
   }
 
   test("a stalled client's blocked write trips the deadline: the " +

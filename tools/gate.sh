@@ -26,7 +26,8 @@ if [ "${1:-}" = "--serving" ]; then
   sbt -batch Test/compile "testOnly graft.ReplayWaveSpec \
     graft.DriverMergeSpec graft.IncrementalDeliverySpec graft.ResultCacheSpec \
     graft.HttpApiSpec \
-    graft.api.SseStallSpec graft.SegmentIndexSpec graft.ManifestFileIndexSpec \
+    graft.api.SseStallSpec graft.api.SseErrorSpec graft.AstFuzzSpec \
+    graft.SegmentIndexSpec graft.ManifestFileIndexSpec \
     graft.TrigramPropertySpec graft.SegmentPruningPropertySpec"
   # perfbench compiles against the manifest API (SegmentIndex.build,
   # ManifestFileIndex.segmentsOf/relation, SegmentIndex.prune)
