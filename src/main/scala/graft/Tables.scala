@@ -156,7 +156,7 @@ private[graft] object TsEncoding {
   def footerTsBoundsNanos(s: SparkSession,
       path: String): Option[(Long, Long)] = {
     val conf = s.sessionState.newHadoopConf()
-    val perFile = footersOf(conf, parquetFiles(conf, path))
+    val perFile = parquetFiles(conf, path).map(footerTs(conf, _))
     if (perFile.isEmpty || perFile.contains(None)) return None
     val footers = perFile.flatten
     if (footers.map(_._1).distinct.size != 1) return None
@@ -172,23 +172,6 @@ private[graft] object TsEncoding {
     if (scales.size != 1) None
     else Some((withRows.map(_._2).min * scales.head,
       withRows.map(_._3).max * scales.head))
-  }
-
-  /** [[footerTs]] of every file, in `files`' order, read concurrently on
-    * a fixed pool (as `ManifestFileIndex.listPaths` lists): a table of
-    * many segment files pays one footer round trip, not one per file. */
-  private def footersOf(conf: Configuration,
-      files: Seq[Path]): Seq[Option[(Option[TimeUnit], Long, Long)]] = {
-    import scala.jdk.CollectionConverters._
-    import java.util.concurrent.{Callable, ExecutionException, Executors}
-    val pool = Executors.newFixedThreadPool(math.min(8, math.max(1, files.size)))
-    try pool.invokeAll(files.map(f => new Callable[
-          Option[(Option[TimeUnit], Long, Long)]] {
-        override def call() = footerTs(conf, f)
-      }).asJava).asScala.toSeq.map { r =>
-        try r.get() catch { case e: ExecutionException => throw e.getCause }
-      }
-    finally pool.shutdown()
   }
 
   /** `path` itself when it is a file, else its `.parquet` files by name. */

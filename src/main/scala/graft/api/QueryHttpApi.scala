@@ -181,6 +181,7 @@ final class QueryHttpApi(
 
   private def json(f: (HttpExchange, Tenant) => String)
       : com.sun.net.httpserver.HttpHandler = { ex =>
+    var interrupted = false
     try {
       val bytes = f(ex, scope(ex)).getBytes(StandardCharsets.UTF_8)
       ex.getResponseHeaders.add("Content-Type", "application/json")
@@ -188,16 +189,26 @@ final class QueryHttpApi(
       ex.getResponseBody.write(bytes)
     } catch {
       case _: Unauthorized => ex.sendResponseHeaders(401, -1)
-      case Answerable(e) => badRequest(ex, e)
-    } finally ex.close()
+      case Answerable(e) =>
+        interrupted = e.isInstanceOf[InterruptedException]
+        badRequest(ex, e)
+    } finally {
+      ex.close()
+      if (interrupted) Thread.currentThread().interrupt()
+    }
   }
 
-  /** A handler failure that gets an answer: every `NonFatal` and a
+  /** A handler failure that gets an answer: every `NonFatal`, a
     * `StackOverflowError` (a too-deep request has unwound its own stack
-    * by the time it is caught; the JVM is fine). */
+    * by the time it is caught; the JVM is fine) and an
+    * `InterruptedException`. The handler that catches an interrupt sets
+    * the thread's flag again only after `ex.close()`: the exchange writes
+    * through an interruptible channel, which a write on an interrupted
+    * thread closes, and the answer would be lost. */
   private object Answerable {
     def unapply(t: Throwable): Option[Throwable] = t match {
-      case _: StackOverflowError | NonFatal(_) => Some(t)
+      case _: StackOverflowError | _: InterruptedException | NonFatal(_) =>
+        Some(t)
       case _ => None
     }
   }
@@ -233,6 +244,8 @@ final class QueryHttpApi(
     // handler thread and read by the heartbeat scheduler — volatile so
     // the scheduler reliably observes the stream going live.
     @volatile var streaming = false
+    // an answered InterruptedException: the flag is set again at the end
+    var interrupted = false
     // heartbeat/handler share the socket; ReentrantLock (not
     // synchronized) so state stays inspectable from the scheduler
     val lock = new java.util.concurrent.locks.ReentrantLock()
@@ -328,11 +341,11 @@ final class QueryHttpApi(
     } catch {
       case _: Unauthorized =>
         ex.sendResponseHeaders(401, -1)
-      case Answerable(e) if !streaming => badRequest(ex, e)
-      case Answerable(_) =>
-        // mid-stream: the truncated stream (no done sentinel) is the
-        // error signal, as in SSE generally
-        ()
+      case Answerable(e) =>
+        interrupted = e.isInstanceOf[InterruptedException]
+        // a 400 before the first event; mid-stream the truncated stream
+        // (no done sentinel) is the error signal, as in SSE generally
+        if (!streaming) badRequest(ex, e)
     } finally {
       // every exit cancels the request's remaining Spark work, not only
       // an error: a handler that stopped early (a tags limit reached, a
@@ -360,6 +373,7 @@ final class QueryHttpApi(
         c.clearJobGroup()
         c.setLocalProperty("spark.scheduler.pool", null)
       }
+      if (interrupted) Thread.currentThread().interrupt()
     }
   }
 
